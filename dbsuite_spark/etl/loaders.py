@@ -23,19 +23,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbsuite_spark.etl import tablelog
 from dbsuite_spark.etl.io import artifact_path
 from dbsuite_spark.exact import BIGCOUNT, DSUM, dsum
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
-
-def _read_manifest(path: str) -> dict:
-    """Read a manifest JSON under a context manager (no leaked file
-    handle — ADVICE r10 #1 applied to every manifest read)."""
-    import json as _json
-
-    with open(path) as fh:
-        return _json.load(fh)
-
 
 CUSTOMER_SCHEMA = T.StructType(
     [
@@ -704,8 +696,6 @@ def etl_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: snapshots are written once per version (immutable); the
     as-of read is an ordinary pruned Parquet scan of that version's
     directory — no merge-on-read cost for this copy-on-write layout."""
-    import json as _json
-
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -717,12 +707,11 @@ def etl_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     base.filter(F.col("o_orderstatus") != "F").write.mode(
         "overwrite"
     ).parquet(v1)
-    tmp = root + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"current": 1, "versions": {"0": v0, "1": v1}}, fh)
-    os.replace(tmp, root)  # atomic pointer swap
+    tablelog.publish_json(
+        root, {"current": 1, "versions": {"0": v0, "1": v1}}
+    )
 
-    manifest = _read_manifest(root)
+    manifest = tablelog.read_json(root)
 
     def read_version(v: int) -> DataFrame:
         return spark.read.parquet(manifest["versions"][str(v)])
@@ -782,7 +771,6 @@ def etl_time_travel_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``etl_time_travel_read``); expiry is a driver-side metadata
     operation plus directory deletes — no data is read to expire; the
     retained re-reads are pruned single-column parquet scans."""
-    import json as _json
     import shutil as _shutil
 
     base = t(spark, sf_dir, "orders").select(
@@ -805,13 +793,12 @@ def etl_time_travel_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
         # write-time stats: the one number a manifest must keep so
         # expired snapshots stay auditable after their data is gone
         versions[str(v)] = {"path": path, "n_rows": df.count()}
-    tmp = root + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"current": 2, "versions": versions, "expired": []}, fh)
-    os.replace(tmp, root)
+    tablelog.publish_json(
+        root, {"current": 2, "versions": versions, "expired": []}
+    )
 
     # retention: keep the newest TT_RETAIN_LAST versions, expire the rest
-    manifest = _read_manifest(root)
+    manifest = tablelog.read_json(root)
     ordered = sorted(manifest["versions"], key=int)
     keep = set(ordered[-TT_RETAIN_LAST:])
     expired = [v for v in ordered if v not in keep]
@@ -825,11 +812,9 @@ def etl_time_travel_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
             for v in expired
         ],
     }
-    with open(tmp, "w") as fh:
-        _json.dump(new_manifest, fh)
-    os.replace(tmp, root)  # atomic pointer swap: old-or-new, never torn
+    tablelog.publish_json(root, new_manifest)  # old-or-new, never torn
 
-    post = _read_manifest(root)
+    post = tablelog.read_json(root)
     assert all(
         not os.path.exists(manifest["versions"][v]["path"]) for v in expired
     ), "expired snapshot data must be deleted from disk"
@@ -876,8 +861,9 @@ def etl_occ_write_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Optimistic-concurrency WRITE-CONFLICT detection on the manifest
     substrate (VERDICT r08 ask #6's second option) — the two-writer
     probe that proves the commit protocol a table format rests on:
-    version numbers are claimed by an ``O_CREAT|O_EXCL`` marker file
-    (POSIX-atomic create-exclusive — exactly one claimant can win), so
+    version numbers are claimed by a marker record published with ONE
+    ``os.link`` (``tablelog.claim_json`` — link(2) fails if the name
+    exists, so exactly one claimant can win), so
     a writer whose base version moved underneath it FAILS its commit
     instead of silently clobbering the other writer's snapshot, then
     retries against the new base (rebase-and-reapply, Delta/Iceberg's
@@ -893,10 +879,9 @@ def etl_occ_write_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash gate.
 
     Scale: commits are O(1) driver-side metadata ops (one exclusive
-    create + one atomic rename each); the loser's retry re-applies a
+    link + one atomic rename each); the loser's retry re-applies a
     pushed filter to the winner's snapshot — one pruned scan, no
     re-read of history."""
-    import json as _json
     import shutil as _shutil
 
     base = t(spark, sf_dir, "orders").select(
@@ -907,38 +892,19 @@ def etl_occ_write_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     _shutil.rmtree(occ_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(occ_dir, exist_ok=True)
 
-    def write_manifest(doc: dict) -> None:
-        tmp = root + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(doc, fh)
-        os.replace(tmp, root)  # atomic pointer swap
-
-    def try_claim(version: int) -> bool:
-        """Claim a version number with O_CREAT|O_EXCL — succeeds for
-        exactly one writer per version, the whole OCC primitive."""
-        try:
-            fd = os.open(
-                os.path.join(occ_dir, f"commit-v{version}.marker"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-            os.close(fd)
-            return True
-        except FileExistsError:
-            return False
-
     # version 1: the shared base snapshot
     v1 = os.path.join(occ_dir, "v1")
     base.write.mode("overwrite").parquet(v1)
-    write_manifest({"current": 1, "versions": {"1": v1}})
+    tablelog.publish_json(root, {"current": 1, "versions": {"1": v1}})
 
     # both writers snapshot the manifest at version 1 (the race window)
-    seen_a = _read_manifest(root)
-    seen_b = _read_manifest(root)
+    seen_a = tablelog.read_json(root)
+    seen_b = tablelog.read_json(root)
     attempts = []
 
     def attempt_commit(writer, attempt_no, seen, predicate, suffix=""):
         """One writer's commit attempt against its snapshotted base.
-        The outcome row is DERIVED from try_claim's result — commit the
+        The outcome row is DERIVED from the claim's result — commit the
         manifest only on a won claim, record 'conflict' on a lost one —
         so the protocol runs (and is measured) even under ``python -O``
         (ADVICE r09 #1)."""
@@ -947,12 +913,16 @@ def etl_occ_write_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(
             seen["versions"][str(seen["current"])]
         ).filter(predicate).write.mode("overwrite").parquet(out)
-        claimed = try_claim(target)
+        # the whole OCC primitive: exactly one writer wins each version
+        claimed = tablelog.claim_json(
+            os.path.join(occ_dir, f"commit-v{target}.marker"),
+            {"version": target},
+        )
         if claimed:
-            m = _read_manifest(root)
+            m = tablelog.read_json(root)
             m["versions"][str(target)] = out
             m["current"] = target
-            write_manifest(m)
+            tablelog.publish_json(root, m)
         attempts.append((
             writer, attempt_no, seen["current"],
             "committed" if claimed else "conflict", target,
@@ -972,13 +942,13 @@ def etl_occ_write_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert not b_won, "stale-base commit must be rejected"
 
     # writer B rebase: re-read the manifest, re-apply to the new base
-    seen_b2 = _read_manifest(root)
+    seen_b2 = tablelog.read_json(root)
     b2_won = attempt_commit(
         "B", 2, seen_b2, F.col("o_totalprice") < 200000
     )
     assert b2_won, "rebased retry against the fresh base must win"
 
-    final = _read_manifest(root)
+    final = tablelog.read_json(root)
     assert final["current"] == 3 and set(final["versions"]) == {
         "1",
         "2",
@@ -1054,8 +1024,6 @@ def etl_manifest_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-pass); the read opens only overlapping groups, and the date
     filter is still pushed into those scans for row-group pruning
     inside each file."""
-    import json as _json
-
     base = t(spark, sf_dir, "orders").select(
         "o_orderdate", "o_totalprice"
     )
@@ -1086,12 +1054,9 @@ def etl_manifest_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         key=lambda g: g["lo"],
     )
-    tmp = root + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"groups": groups}, fh)
-    os.replace(tmp, root)
+    tablelog.publish_json(root, {"groups": groups})
 
-    manifest = _read_manifest(root)
+    manifest = tablelog.read_json(root)
     # driver-side metadata pruning: stats-interval overlap, no I/O
     read_groups = [
         g
@@ -1171,8 +1136,6 @@ def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned scans under whichever scheme their version
     declares. Readers of old snapshots keep old pruning; new
     predicates get the finer grain going forward."""
-    import json as _json
-
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
@@ -1196,12 +1159,9 @@ def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "partition_cols": cols,
             "n_partitions": n_parts,
         }
-    tmp = root + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"current": 1, "versions": versions}, fh)
-    os.replace(tmp, root)
+    tablelog.publish_json(root, {"current": 1, "versions": versions})
 
-    manifest = _read_manifest(root)
+    manifest = tablelog.read_json(root)
     out = None
     for v in sorted(manifest["versions"], key=int):
         meta = manifest["versions"][v]
@@ -1272,8 +1232,8 @@ def etl_merge_cow_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats contain matched keys, with every untouched group carried into
     the new manifest version BY REFERENCE (identical path — zero I/O,
     zero bytes rewritten) and the insert batch appended as one new
-    group. The new version commits through the same O_CREAT|O_EXCL
-    claim as ``etl_occ_write_conflict``, so concurrent writers conflict
+    group. The new version commits through the same link claim as
+    ``etl_occ_write_conflict``, so concurrent writers conflict
     instead of clobbering.
 
     Layout: orders split into {COW_GROUPS} key-range groups (width =
@@ -1288,9 +1248,8 @@ def etl_merge_cow_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the merge join shuffles only the 2 matched groups + the
     batch (not the table); carried groups cost one manifest-entry copy
     (driver-side metadata, like Delta's unchanged AddFiles); the commit
-    is one exclusive create + one atomic rename. At 100 TB a 0.1%%
+    is one exclusive link + one atomic rename. At 100 TB a 0.1%%
     update batch rewrites ~0.1%% of files — this is that mechanism."""
-    import json as _json
     import shutil as _shutil
 
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -1298,12 +1257,6 @@ def etl_merge_cow_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cow_dir = os.path.dirname(root)
     _shutil.rmtree(cow_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(cow_dir, exist_ok=True)
-
-    def write_manifest(doc: dict) -> None:
-        tmp = root + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(doc, fh)
-        os.replace(tmp, root)  # atomic pointer swap
 
     # layout width from one 1-row metadata aggregate (the driver-side
     # planning read every table format performs before a write)
@@ -1333,7 +1286,9 @@ def etl_merge_cow_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         for r in stats
     }
-    write_manifest({"current": 1, "versions": {"1": {"groups": groups1}}})
+    tablelog.publish_json(
+        root, {"current": 1, "versions": {"1": {"groups": groups1}}}
+    )
 
     # the MERGE source: matched updates (+1000 inside groups 1-2) and
     # an insert batch remapped beyond every existing key range
@@ -1366,7 +1321,7 @@ def etl_merge_cow_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # copy-on-write: rewrite ONLY the touched groups through the merge
-    manifest = _read_manifest(root)
+    manifest = tablelog.read_json(root)
     g1 = manifest["versions"]["1"]["groups"]
     rw_path = os.path.join(cow_dir, "v2_rewritten")
     if touched:  # an empty batch rewrites nothing (ADVICE r09 #4 class)
@@ -1401,23 +1356,17 @@ def etl_merge_cow_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     # commit version 2 through the OCC claim (conflict -> no commit)
-    try:
-        fd = os.open(
-            os.path.join(cow_dir, "commit-v2.marker"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-        )
-        os.close(fd)
-        claimed = True
-    except FileExistsError:
-        claimed = False
+    claimed = tablelog.claim_json(
+        os.path.join(cow_dir, "commit-v2.marker"), {"version": 2}
+    )
     if claimed:
-        m = _read_manifest(root)
+        m = tablelog.read_json(root)
         m["versions"]["2"] = {"groups": groups2}
         m["current"] = 2
-        write_manifest(m)
+        tablelog.publish_json(root, m)
     assert claimed, "single writer must win its own version claim"
 
-    final = _read_manifest(root)
+    final = tablelog.read_json(root)
     n1 = len(final["versions"]["1"]["groups"])
     counts = {
         1: (n1, 0, 0, 0),
@@ -1509,7 +1458,6 @@ def etl_manifest_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enter any plan (the pin asserts a scale-independent scan
     count). This is Iceberg's changelog-scan / Delta CDF shape: file
     metadata first, row diff second."""
-    import json as _json
     import shutil as _shutil
 
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -1575,15 +1523,12 @@ def etl_manifest_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     for g in rewritten:
         g2[str(g)] = os.path.join(rw_path, f"grp={g}")
     g2[str(COW_NEW_GROUP)] = add_path
-    tmp = root + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(
-            {"current": 2, "versions": {"1": g1, "2": g2}}, fh
-        )
-    os.replace(tmp, root)  # atomic pointer swap
+    tablelog.publish_json(
+        root, {"current": 2, "versions": {"1": g1, "2": g2}}
+    )
 
     # ---- the CDC read: manifest diff first, row diff second ----
-    m = _read_manifest(root)
+    m = tablelog.read_json(root)
     mv1, mv2 = m["versions"]["1"], m["versions"]["2"]
     pairs = [g for g in mv1 if g in mv2 and mv1[g] != mv2[g]]
     carried = [g for g in mv1 if g in mv2 and mv1[g] == mv2[g]]
@@ -1709,7 +1654,6 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit is one rename regardless of table count or size (Iceberg
     v1's single catalog pointer / Nessie's commit model). The orphan
     audit is one shuffle anti-join per version, keyed on the FK."""
-    import json as _json
     import shutil as _shutil
 
     cust = t(spark, sf_dir, "customer").select("c_custkey")
@@ -1718,12 +1662,6 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn_dir = os.path.dirname(root)
     _shutil.rmtree(txn_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(txn_dir, exist_ok=True)
-
-    def commit(doc: dict) -> None:
-        tmp = root + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(doc, fh)
-        os.replace(tmp, root)  # ONE atomic swap for the whole catalog
 
     # version 1: base snapshots of both tables
     paths = {
@@ -1734,7 +1672,8 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     cust.write.mode("overwrite").parquet(paths[(1, "customer")])
     orders.write.mode("overwrite").parquet(paths[(1, "orders")])
-    commit(
+    tablelog.publish_json(
+        root,
         {
             "current": 1,
             "versions": {
@@ -1754,17 +1693,17 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders.filter(F.col("o_custkey") % 50 != 0).write.mode(
         "overwrite"
     ).parquet(paths[(2, "orders")])
-    cat = _read_manifest(root)
+    cat = tablelog.read_json(root)
     cat["versions"]["2"] = {
         "customer": paths[(2, "customer")],
         "orders": paths[(2, "orders")],
     }
     cat["current"] = 2
-    commit(cat)
+    tablelog.publish_json(root, cat)
 
     # the reader: resolve each catalog version and audit FK closure
     # WITHIN that version — atomicity means orphans are impossible
-    final = _read_manifest(root)
+    final = tablelog.read_json(root)
     out = None
     for v in ("1", "2"):
         snap = final["versions"][v]
@@ -1833,7 +1772,6 @@ def etl_vacuum_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit before deletion, and live verification reads only manifest
     paths. At a million files the walk parallelizes as a listing job;
     the decision stays a hash-set lookup per file."""
-    import json as _json
     import shutil as _shutil
 
     base = t(spark, sf_dir, "orders").select(
@@ -1859,10 +1797,7 @@ def etl_vacuum_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     for name, df in orphans.items():
         df.write.mode("overwrite").parquet(os.path.join(vac_dir, name))
-    tmp = root + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"current": 1, "versions": versions}, fh)
-    os.replace(tmp, root)
+    tablelog.publish_json(root, {"current": 1, "versions": versions})
 
     # --- the vacuum: classify every directory under the table root ---
     # Classification completes (and is validated) BEFORE any rmtree
@@ -1870,7 +1805,7 @@ def etl_vacuum_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero deletions instead of being detected post-destruction
     # (ADVICE r11 #3). Real exceptions, not asserts: they guard a
     # destructive path and must fire even under `python -O`.
-    manifest = _read_manifest(root)
+    manifest = tablelog.read_json(root)
     live_paths = {v["path"] for v in manifest["versions"].values()}
     orphan_entries = [
         entry
@@ -2028,14 +1963,9 @@ def etl_manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
             },
         },
     }
-    tmp = root + ".tmp"
-    with open(tmp, "w") as fh:
-        import json as _json
+    tablelog.publish_json(root, manifest)
 
-        _json.dump(manifest, fh)
-    os.replace(tmp, root)  # atomic pointer swap
-
-    doc = _read_manifest(root)
+    doc = tablelog.read_json(root)
 
     def read_version(v: int) -> DataFrame:
         """Name-align every file group to version v's logical schema by
@@ -2150,7 +2080,6 @@ def etl_manifest_deletion_vectors(
     DV union against the pruned group scans — on a real cluster the DV
     is applied per-file at scan time (Delta/Iceberg's documented
     merge-on-read path); compaction cost ∝ groups-with-DVs only."""
-    import json as _json
     import shutil as _shutil
 
     base = t(spark, sf_dir, "orders").select(
@@ -2160,12 +2089,6 @@ def etl_manifest_deletion_vectors(
     dv_dir = os.path.dirname(root)
     _shutil.rmtree(dv_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(dv_dir, exist_ok=True)
-
-    def write_manifest(doc: dict) -> None:
-        tmp = root + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(doc, fh)
-        os.replace(tmp, root)  # atomic pointer swap
 
     max_key = base.agg(F.max("o_orderkey")).first()[0]
     width = max_key // DV_GROUPS + 1
@@ -2182,7 +2105,9 @@ def etl_manifest_deletion_vectors(
         str(g): {"path": os.path.join(v1_data, f"grp={g}"), "dv": None}
         for g in grp_ids
     }
-    write_manifest({"current": 1, "versions": {"1": {"groups": groups1}}})
+    tablelog.publish_json(
+        root, {"current": 1, "versions": {"1": {"groups": groups1}}}
+    )
 
     # version 2: the DELETE as deletion vectors — zero data-file writes
     deleted = staged.filter(
@@ -2194,7 +2119,7 @@ def etl_manifest_deletion_vectors(
         r["grp"]
         for r in deleted.select("grp").distinct().collect()  # ≤ DV_GROUPS
     )
-    m = _read_manifest(root)
+    m = tablelog.read_json(root)
     groups2 = {
         g: {
             "path": spec["path"],  # carried BY REFERENCE, always
@@ -2206,11 +2131,11 @@ def etl_manifest_deletion_vectors(
     }
     m["versions"]["2"] = {"groups": groups2}
     m["current"] = 2
-    write_manifest(m)
+    tablelog.publish_json(root, m)
 
     # version 3: compaction — rewrite ONLY the DV-carrying groups
     v3_data = os.path.join(dv_dir, "v3")
-    doc = _read_manifest(root)
+    doc = tablelog.read_json(root)
     groups3 = {}
     for g, spec in doc["versions"]["2"]["groups"].items():
         if spec["dv"] is None:
@@ -2224,9 +2149,9 @@ def etl_manifest_deletion_vectors(
             groups3[g] = {"path": out, "dv": None}
     doc["versions"]["3"] = {"groups": groups3}
     doc["current"] = 3
-    write_manifest(doc)
+    tablelog.publish_json(root, doc)
 
-    final = _read_manifest(root)
+    final = tablelog.read_json(root)
 
     def read_version(v: int) -> DataFrame:
         """Merge-on-read scan: union the group scans, anti-join the
@@ -2343,7 +2268,6 @@ def etl_manifest_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     STAGED GROUP only for violations plus the branch-read aggregate;
     publish is one atomic os.replace — exactly why WAP is the standard
     pattern for validating 100 TB ingests without blocking readers."""
-    import json as _json
     import shutil as _shutil
 
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -2352,16 +2276,11 @@ def etl_manifest_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     _shutil.rmtree(wap_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(wap_dir, exist_ok=True)
 
-    def write_manifest(doc: dict) -> None:
-        tmp = root + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(doc, fh)
-        os.replace(tmp, root)  # atomic pointer swap (commit + publish)
-
     # version 1: base snapshot, main ref
     v1_path = os.path.join(wap_dir, "v1")
     base.write.mode("overwrite").parquet(v1_path)
-    write_manifest(
+    tablelog.publish_json(
+        root,
         {
             "refs": {"main": 1},
             "versions": {"1": {"groups": [v1_path]}},
@@ -2378,10 +2297,10 @@ def etl_manifest_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     staged_path = os.path.join(wap_dir, "v2-staged")
     batch.write.mode("overwrite").parquet(staged_path)
-    m = _read_manifest(root)
+    m = tablelog.read_json(root)
     m["versions"]["2"] = {"groups": [v1_path, staged_path]}  # carry + add
     m["refs"]["audit"] = 2
-    write_manifest(m)
+    tablelog.publish_json(root, m)
 
     def read_ref(doc: dict, ref: str) -> DataFrame:
         ver = doc["versions"][str(doc["refs"][ref])]
@@ -2409,7 +2328,7 @@ def etl_manifest_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_totalprice") < 0)
         .count()  # gate-grade metadata scalar
     )
-    pre = _read_manifest(root)
+    pre = tablelog.read_json(root)
     row_main_v1 = summarize(pre, "main", 0)  # captured BEFORE publish
     row_audit_v2 = summarize(pre, "audit", n_bad)
 
@@ -2418,17 +2337,17 @@ def etl_manifest_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.read.parquet(staged_path).filter(
         F.col("o_totalprice") >= 0
     ).write.mode("overwrite").parquet(clean_path)
-    m = _read_manifest(root)
+    m = tablelog.read_json(root)
     m["versions"]["3"] = {"groups": [v1_path, clean_path]}
     m["refs"]["audit"] = 3
-    write_manifest(m)
+    tablelog.publish_json(root, m)
 
     # publish: fast-forward main onto the audited version — one swap
-    m = _read_manifest(root)
+    m = tablelog.read_json(root)
     m["refs"]["main"] = m["refs"]["audit"]
-    write_manifest(m)
+    tablelog.publish_json(root, m)
 
-    post = _read_manifest(root)
+    post = tablelog.read_json(root)
     row_audit_v3 = summarize(post, "audit", 0)
     row_main_v3 = summarize(post, "main", 0)
     return (
@@ -2439,90 +2358,6 @@ def etl_manifest_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- incremental commit-log consumption (round 11) --------------------------
-
-
-def mlog_poll(
-    spark: SparkSession, table_dir: str, offset: int
-) -> tuple[DataFrame | None, int, int]:
-    """One incremental-consumer poll: fold commits with VERSION >=
-    ``offset`` and return ``(df_or_None, n_data_commits, new_offset)``
-    (None when the log tail is empty OR holds only data_change=false
-    rewrites — ``new_offset`` still advances past those, so compaction
-    never strands a consumer behind retention). The offset is a VERSION
-    cursor, never a list position — list slicing stops meaning versions
-    the moment expiry removes a prefix (the round-12 review's dense-log
-    finding, applied to the consumer path).
-
-    Expiry contract: if any commit in ``[offset, head]`` is gone, the
-    consumer's unread range was expired out from under it — raise the
-    offset-out-of-range error (Kafka's semantics for a consumer older
-    than retention, public) rather than silently skipping data. A
-    checkpoint does NOT substitute: it folds away the per-commit
-    granularity an incremental consumer exists to preserve.
-
-    Scale: each poll lists the log tail and scans only new groups —
-    change-data movement ∝ new commits, never a table rescan; the
-    cursor is O(1) consumer state."""
-    from dbsuite_spark.streaming.streams import (
-        _checkpoint_state,
-        _commit_version,
-        _doc_paths,
-        _load_commit,
-        _log_commits,
-        fold_groups,
-    )
-
-    for attempt in (0, 1):
-        new = [
-            c
-            for c in _log_commits(table_dir)
-            if _commit_version(c) >= offset
-        ]
-        if not new:
-            # an empty tail is only "caught up" if nothing the consumer
-            # hasn't read was ever committed: a checkpoint at version
-            # k >= offset proves commits in [offset, k] existed and
-            # were expired — a lagging consumer must get the
-            # offset-out-of-range error, not a silent caught-up
-            # (ADVICE r12 #3)
-            k, _ = _checkpoint_state(table_dir)
-            if k >= offset:
-                raise RuntimeError(
-                    f"consumer offset {offset} out of range at "
-                    f"{table_dir}: commits through {k} were "
-                    "checkpointed and expired"
-                )
-            return None, 0, offset
-        versions = [_commit_version(c) for c in new]
-        if versions != list(range(offset, versions[-1] + 1)):
-            raise RuntimeError(
-                f"consumer offset {offset} out of range at {table_dir}: "
-                f"commits {versions} survive — the unread range was "
-                "expired past a checkpoint"
-            )
-        try:
-            docs = [_load_commit(c) for c in new]
-            break
-        except FileNotFoundError:
-            if attempt:  # unread records expired mid-poll: honest error
-                raise RuntimeError(
-                    f"consumer offset {offset} out of range at "
-                    f"{table_dir}: the unread range was expired while "
-                    "being read"
-                ) from None
-            continue  # re-list; the dense check will diagnose
-    # a data_change=false commit (compaction) rewrites data this feed
-    # already delivered — the cursor advances past it but its group is
-    # never re-delivered (Delta streaming sources skip dataChange=false
-    # files, public)
-    data_docs = [d for d in docs if d.get("data_change", True)]
-    new_offset = versions[-1] + 1
-    if not data_docs:
-        return None, 0, new_offset
-    df = fold_groups(
-        spark, [p for d in data_docs for p in _doc_paths(d)]
-    )
-    return df, len(data_docs), new_offset
 
 
 _INCR_ORACLE = f"""
@@ -2565,8 +2400,6 @@ def etl_manifest_incremental_read(
     100 TB."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import msink_commit_batch
-
     e = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
     table_dir = artifact_path(sf_dir, "incr_table")
     _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
@@ -2574,7 +2407,7 @@ def etl_manifest_incremental_read(
     def poll(n: int, offset: int) -> tuple[DataFrame, int]:
         """Consume commits with version >= offset — returns (report
         row, new offset)."""
-        out, n_new, offset = mlog_poll(spark, table_dir, offset)
+        out, n_new, offset = tablelog.mlog_poll(spark, table_dir, offset)
         if out is None:
             row = spark.range(1).select(
                 F.lit(n).cast("int").alias("poll"),
@@ -2596,13 +2429,13 @@ def etl_manifest_incremental_read(
 
     # producer: first three commits
     for i in range(3):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, e.filter(F.col("event_id") % 6 == i), i
         )
     row1, offset = poll(1, 0)
     # producer: three more
     for i in range(3, 6):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, e.filter(F.col("event_id") % 6 == i), i
         )
     row2, offset = poll(2, offset)
@@ -2615,552 +2448,6 @@ def etl_manifest_incremental_read(
 # --- commit-log checkpointing (round 12) -------------------------------------
 
 CHECKPOINT_INTERVAL = 4  # commits between checkpoints in the demo key
-
-
-def mlog_checkpoint(table_dir: str) -> str:
-    """Fold the commit log into ``checkpoint-{k:05d}.json`` (k = newest
-    folded version) — the Delta-log checkpointing idea (public: parquet
-    checkpoint every N commits + a `_last_checkpoint` file), the
-    behavior VERDICT r11 named as the last lakehouse piece this
-    environment can express: without it every reader folds the FULL
-    log, O(length) per read at a real commit cadence; with it a reader
-    folds checkpoint + tail.
-
-    The fold is INCREMENTAL (round-12 review findings #2/#6): it reuses
-    the newest existing checkpoint's groups and folds only the commit
-    tail past it — O(tail) JSON reads per checkpoint, not a rescan of
-    the whole log, and therefore correct after expiry has deleted the
-    folded prefix (versions come from commit FILENAMES, never list
-    positions). A gap in the tail aborts: checkpointing over missing
-    commits would bake a hole into history. If no new commits exist the
-    call is a no-op returning the existing checkpoint path.
-
-    Atomicity (law-tested in tests/test_round12_semantics.py):
-
-    - The checkpoint doc publishes via write-tmp + one ``os.link`` —
-      the same claim-and-commit-in-one-op protocol as
-      :func:`~dbsuite_spark.streaming.streams._try_claim_version`. Two
-      concurrent checkpointers at the same k fold the same immutable
-      commit set, so losing the link is a no-op, not an error.
-    - ``_last_checkpoint`` swings via write-tmp + ``os.replace``
-      (POSIX-atomic), only AFTER the checkpoint file exists, so the
-      pointer never names a missing checkpoint. The swing is a
-      best-effort monotonic HINT (Delta's `_last_checkpoint` semantics):
-      readers resolve checkpoints from the authoritative directory
-      listing (:func:`~dbsuite_spark.streaming.streams._checkpoint_state`),
-      so even an adversarial interleaving that regressed the pointer
-      could not affect what any reader returns.
-    - A crash anywhere leaves either no visible change or a complete
-      one; stray ``*.tmp`` scratch files are invisible to readers.
-
-    Scale: amortized O(1) metadata per commit at a fixed interval; no
-    data file is read or written — groups carry by reference."""
-    import contextlib
-    import json as _json
-    import uuid
-
-    from dbsuite_spark.streaming.streams import (
-        _checkpoint_state,
-        _commit_version,
-        _load_commit,
-        _log_commits,
-    )
-
-    for attempt in (0, 1):
-        prev_k, prev_groups = _checkpoint_state(table_dir)
-        tail = [
-            c
-            for c in _log_commits(table_dir)
-            if _commit_version(c) > prev_k
-        ]
-        if not tail:
-            if prev_k < 0:
-                raise RuntimeError(f"nothing to checkpoint at {table_dir}")
-            return os.path.join(table_dir, f"checkpoint-{prev_k:05d}.json")
-        tail_versions = [_commit_version(c) for c in tail]
-        k = tail_versions[-1]
-        if tail_versions != list(range(prev_k + 1, k + 1)):
-            if attempt:  # re-resolution didn't heal it: corruption
-                raise RuntimeError(
-                    f"refusing to checkpoint {table_dir}: commit tail "
-                    f"past version {prev_k} has gaps ({tail_versions})"
-                )
-            continue  # a newer checkpoint+expire raced our listing
-        try:
-            tail_docs = [
-                {"version": v, **_load_commit(c)}
-                for v, c in zip(tail_versions, tail)
-            ]
-            break
-        except FileNotFoundError:
-            if attempt:
-                raise RuntimeError(
-                    f"commit log at {table_dir} kept changing under "
-                    "the checkpoint fold (2 attempts)"
-                ) from None
-            continue  # a record expired mid-fold: re-resolve
-    doc = {"version": k, "groups": prev_groups + tail_docs}
-    cp_path = os.path.join(table_dir, f"checkpoint-{k:05d}.json")
-    tmp = f"{cp_path}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(doc, fh)
-    with contextlib.suppress(FileExistsError):
-        os.link(tmp, cp_path)  # atomic publish; EEXIST = identical fold
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(tmp)
-
-    ptr = os.path.join(table_dir, "_last_checkpoint")
-    current = _read_manifest(ptr)["version"] if os.path.exists(ptr) else -1
-    if k > current:  # best-effort monotonic hint (readers use the listing)
-        ptmp = f"{ptr}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(ptmp, "w") as fh:
-            _json.dump({"version": k}, fh)
-        os.replace(ptmp, ptr)  # atomic pointer swing
-    return cp_path
-
-
-def mlog_read_checkpointed(
-    spark: SparkSession, table_dir: str
-) -> tuple[DataFrame, int, int]:
-    """Read the manifest-log table through its latest checkpoint: fold
-    the newest checkpoint's group list + ONLY the log tail past it.
-    Returns ``(df, n_from_checkpoint, n_tail_commits)`` so callers (and
-    the law tests) can assert the reader touched checkpoint + tail, not
-    the whole log. Equivalent to
-    :func:`~dbsuite_spark.streaming.streams.msink_read` by law.
-
-    The checkpoint resolves from the authoritative directory listing
-    (the ``_last_checkpoint`` pointer is a hint only), and the tail is
-    GAP-CHECKED with one re-resolve retry: a concurrent
-    checkpoint+expire between resolution and listing must surface as a
-    newer checkpoint or an error, never as a silently partial table
-    (round-12 review finding #3).
-
-    Scale: read planning is one checkpoint JSON + O(tail) commit JSONs
-    instead of O(total commits) — the entire point of checkpointing a
-    commit log that grows by thousands of versions between compactions."""
-    from dbsuite_spark.streaming.streams import (
-        _checkpoint_state,
-        _commit_version,
-        _doc_paths,
-        _load_commit,
-        _log_commits,
-        fold_groups,
-    )
-
-    for attempt in (0, 1, 2):
-        k, cp_groups = _checkpoint_state(table_dir)
-        tail = [
-            c for c in _log_commits(table_dir) if _commit_version(c) > k
-        ]
-        tail_versions = [_commit_version(c) for c in tail]
-        head = tail_versions[-1] if tail_versions else k
-        if tail_versions != list(range(k + 1, head + 1)):
-            if attempt == 2:  # re-resolution didn't heal it: corruption
-                raise RuntimeError(
-                    f"commit tail past checkpoint {k} at {table_dir} "
-                    f"has gaps ({tail_versions}) — log expired without "
-                    "a covering checkpoint?"
-                )
-            continue  # a checkpoint+expire raced us; re-resolve
-        try:
-            tail_docs = [
-                {"version": v, **_load_commit(c)}
-                for v, c in zip(tail_versions, tail)
-            ]
-        except FileNotFoundError:
-            if attempt == 2:
-                raise RuntimeError(
-                    f"commit log at {table_dir} kept changing under "
-                    "the read (3 attempts)"
-                ) from None
-            continue  # a record expired mid-load: it is now folded
-        break
-    from dbsuite_spark.streaming.streams import _live_docs
-
-    # counts report RESOLVED docs (planning cost); the fold drops
-    # compaction-replaced groups (read amplification), see _live_docs
-    live = _live_docs(list(cp_groups) + tail_docs)
-    return (
-        fold_groups(spark, [p for d in live for p in _doc_paths(d)]),
-        len(cp_groups),
-        len(tail_docs),
-    )
-
-
-def mlog_expire_checkpointed(table_dir: str) -> int:
-    """EXPIRE the commit-log prefix a checkpoint has folded: delete
-    every ``commit-*.json`` at or below the NEWEST checkpoint's version
-    (their file GROUPS stay — the checkpoint references them) and
-    return the count removed. This is what bounds log length in real
-    formats (Delta log retention works exactly this way: json entries
-    before a checkpoint become deletable). Composes with the
-    checkpointed reader by law — reads are byte-identical before and
-    after; appends, replays, and new checkpoints all stay correct after
-    expiry because every consumer derives versions from filenames and
-    batch dedup consults the checkpoint (round-12 review finding #1).
-
-    Refuses to run without a checkpoint file (the authoritative
-    listing, not the pointer hint): expiring an unfolded prefix would
-    lose commits."""
-    from dbsuite_spark.streaming.streams import (
-        _checkpoint_state,
-        _commit_version,
-        _log_commits,
-    )
-
-    k, _ = _checkpoint_state(table_dir)
-    if k < 0:
-        raise RuntimeError(
-            f"refusing to expire {table_dir}: no checkpoint exists"
-        )
-    expired = 0
-    for c in _log_commits(table_dir):
-        if _commit_version(c) <= k:
-            try:
-                # a concurrent expirer — or msink_commit_batch's
-                # relocation path vacating its own invisible record —
-                # may have removed it between the listing and here
-                # (ADVICE r12 #2); count only records WE removed
-                os.remove(c)
-            except FileNotFoundError:
-                continue
-            expired += 1
-    return expired
-
-
-def mlog_expire_old_checkpoints(table_dir: str) -> int:
-    """CHECKPOINT RETENTION: remove every checkpoint file below the
-    newest one, returning the count removed (Delta's log-retention
-    cleanup of superseded checkpoints, public). Each old checkpoint
-    keeps its own version pinnable as an as-of target forever —
-    retiring it is what lets :func:`mlog_vacuum` reclaim groups that
-    are live ONLY at those historical pins. Readers are unaffected:
-    checkpoint resolution takes the newest from the authoritative
-    listing, and the newest is never touched. As with commit expiry,
-    pins below the newest checkpoint become honestly unreconstructable
-    afterwards rather than silently partial."""
-    import contextlib
-    import glob as _glob
-    import re as _re
-
-    cps = _glob.glob(os.path.join(table_dir, "checkpoint-*.json"))
-    if len(cps) < 2:
-        return 0
-    newest = max(
-        cps,
-        key=lambda p: int(
-            _re.search(r"checkpoint-(\d+)\.json$", p).group(1)
-        ),
-    )
-    removed = 0
-    for p in cps:
-        if p == newest:
-            continue
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(p)  # a racing retention pass may have won it
-            removed += 1
-    return removed
-
-
-def _merged_stats(stats_list: list[dict | None]) -> dict | None:
-    """Fold per-group stats into the compacted group's stats: the
-    interval union per column, kept only for columns EVERY target
-    carries (a column any target lacks stats for has unknown extent —
-    claiming one would let pruning skip real data). Understands both
-    the per-column-map shape and the legacy scalar min_key/max_key."""
-    if any(not s for s in stats_list):
-        return None
-    out: dict = {}
-    for col in set.intersection(*(set(s) for s in stats_list)):
-        vals = [s[col] for s in stats_list]
-        if all(
-            isinstance(v, dict) and v.get("min") is not None for v in vals
-        ):
-            out[col] = {
-                "min": min(v["min"] for v in vals),
-                "max": max(v["max"] for v in vals),
-            }
-        elif col in ("min_key", "max_key") and all(
-            not isinstance(v, dict) and v is not None for v in vals
-        ):
-            out[col] = (min if col == "min_key" else max)(vals)
-    return out or None
-
-
-def mlog_compact(
-    spark: SparkSession,
-    table_dir: str,
-    cluster_by: list[str] | None = None,
-    n_groups: int = 4,
-) -> int:
-    """OPTIMIZE the manifest-log table (round 13): rewrite every
-    currently-live group into ONE compacted group and publish it
-    through the SAME atomic commit protocol as any batch — the new
-    commit carries ``replaces: [versions...]`` + ``data_change: false``
-    and supersedes its targets the instant the link lands, so every
-    reader sees either the old groups or the compacted one, never both
-    (snapshot isolation; the readers' ``_live_docs`` resolution).
-    Returns the number of groups compacted (0 = no-op, fewer than two
-    live groups).
-
-    Concurrency, all resolved WITHOUT write-side coordination:
-
-    - a concurrent APPEND's version is above our target set — never
-      replaced, still folded: appends and compaction don't conflict;
-    - two RACING compactions both commit; read-time resolution voids
-      the higher version deterministically (its group duplicates data
-      the earlier one superseded) — the loser's group is vacuum fodder,
-      correctness never depends on who wins;
-    - EXPIRY only removes commit records a checkpoint folded; target
-      groups' parquet dirs persist, so the rewrite scan is stable.
-
-    Time travel: as-of pins BEFORE the compaction version still fold
-    the original groups (resolution runs over the pinned prefix).
-    Change feeds: ``data_change: false`` means pollers/tails advance
-    past the commit without re-delivering rewritten rows (Delta marks
-    OPTIMIZE files dataChange=false for exactly this, public).
-
-    Stats: the compacted doc carries the interval-union of its targets'
-    per-column stats (when all targets carry them), so data skipping
-    keeps working across compaction.
-
-    CLUSTERED compaction (round 13, ``cluster_by=[cols]``): plain
-    OPTIMIZE and data skipping are in tension — folding every group
-    into one unit collapses the carried stats to the FULL key range,
-    so a post-compaction pruned read must scan everything. With
-    ``cluster_by``, the rewrite range-partitions the live data on the
-    leading cluster column into up to ``n_groups`` range-disjoint
-    SUBGROUPS inside the one atomic commit (child directories of the
-    commit's group dir), each carrying exact per-column (min, max)
-    recomputed from the data it actually holds — so a point/range
-    predicate after compaction prunes back down to ~1 subgroup. This
-    is the OPTIMIZE ZORDER / clustered-table idea (Delta/Iceberg,
-    public) in its linear-order form. Atomicity is unchanged: ONE
-    commit record publishes all subgroups or none.
-
-    Scale: this is the read-amplification lever — a commit cadence of
-    thousands of small groups folds back to O(1) scan units; the
-    rewrite is one distributed scan+write of live data (clustered adds
-    one range-boundary sketch pass and one stats aggregate over the
-    compacted output — maintenance-window cost, like real OPTIMIZE),
-    metadata cost is one commit record."""
-    import uuid
-
-    from dbsuite_spark.streaming.streams import (
-        _doc_paths,
-        _live_docs,
-        fold_groups,
-        msink_commit_batch,
-    )
-
-    targets = _live_docs(_resolve_log_docs(table_dir))
-    if len(targets) < 2:
-        return 0
-    folded = fold_groups(
-        spark, [p for d in targets for p in _doc_paths(d)]
-    )
-    out = msink_commit_batch(
-        table_dir,
-        folded,
-        f"compact-{uuid.uuid4().hex[:12]}",
-        stats=_merged_stats([d.get("stats") for d in targets]),
-        extra_doc={
-            "replaces": sorted(d["version"] for d in targets),
-            "data_change": False,
-        },
-        write_fn=(
-            None
-            if cluster_by is None
-            else _clustered_write(spark, list(cluster_by), n_groups)
-        ),
-    )
-    if out != "committed":
-        raise RuntimeError(f"compaction commit failed: {out}")
-    return len(targets)
-
-
-def _stat_jsonable(v):
-    """A stats value in the commit doc's JSON-comparable form: numbers
-    and strings pass through, dates/timestamps become ISO strings (the
-    shape :func:`_stats_interval` already compares predicates against),
-    and any other type returns None — which the caller treats as "omit
-    the stat", i.e. unprunable-but-correct, never a lossy coercion
-    that could let pruning skip real data."""
-    import datetime
-
-    if isinstance(v, bool) or v is None:
-        return None
-    if isinstance(v, (int, float, str)):
-        return v
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v.isoformat()
-    return None
-
-
-def _clustered_write(spark: SparkSession, cols: list[str], n_groups: int):
-    """The ``write_fn`` for clustered compaction: range-bucket on the
-    leading cluster column (boundaries from ``approxQuantile`` — one
-    bounded sketch pass, the public Greenwald-Khanna summary Spark's
-    ``repartitionByRange`` also samples for), write all buckets in ONE
-    ``partitionBy`` job as child dirs of the attempt path, then compute
-    each bucket's exact per-column (min, max) with one aggregate over
-    the just-written output (≤ ``n_groups`` rows to the driver —
-    manifest-grade metadata, not data). Returns the ``subgroups`` doc
-    fields the readers' :func:`~dbsuite_spark.streaming.streams._doc_paths`
-    and the pruned readers consume."""
-
-    def write(bdf: DataFrame, group: str) -> dict:
-        lead = cols[0]
-        if "_cb" in bdf.columns:
-            # the bucket scratch column must not shadow user data —
-            # silently overwriting it would corrupt the rewrite
-            raise RuntimeError(
-                "clustered compaction reserves column name '_cb'; "
-                "the table already has one"
-            )
-        qs = bdf.approxQuantile(
-            lead, [i / n_groups for i in range(1, n_groups)], 0.001
-        )
-        if not qs or all(q is None for q in qs):
-            # nothing to range on (empty table or all-NULL cluster
-            # column): a clustered doc with ZERO subgroups would make
-            # every fold an empty path list and brick the table — fall
-            # back to the plain single-group write, no subgroups
-            bdf.write.mode("overwrite").parquet(group)
-            return {}
-        bounds = sorted(set(qs))
-        bucket = F.lit(0)
-        for b in bounds:
-            # NULL lead values compare NULL > b → otherwise(0): they
-            # land in bucket 0 and (correctly) never satisfy a range
-            # predicate, so pruning on min/max of non-nulls stays sound
-            bucket = bucket + F.when(F.col(lead) > F.lit(b), 1).otherwise(0)
-        (
-            bdf.withColumn("_cb", bucket.cast("int"))
-            .repartition(len(bounds) + 1, "_cb")
-            .sortWithinPartitions(*cols)
-            .write.mode("overwrite")
-            .partitionBy("_cb")
-            .parquet(group)
-        )
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(c).alias(f"min_{c}"))
-            aggs.append(F.max(c).alias(f"max_{c}"))
-        rows = (
-            spark.read.parquet(group)  # partition discovery: _cb is back
-            .groupBy("_cb")
-            .agg(*aggs)
-            .collect()
-        )
-        subgroups = []
-        for r in sorted(rows, key=lambda r: r["_cb"]):
-            stats = {}
-            for c in cols:
-                mn = _stat_jsonable(r[f"min_{c}"])
-                mx = _stat_jsonable(r[f"max_{c}"])
-                if mn is not None and mx is not None:
-                    stats[c] = {"min": mn, "max": mx}
-            sub = {"path": os.path.join(group, f"_cb={r['_cb']}")}
-            if stats:
-                sub["stats"] = stats
-            subgroups.append(sub)
-        return {"subgroups": subgroups, "clustered_by": list(cols)}
-
-    return write
-
-
-def mlog_vacuum(table_dir: str, min_age_s: float = 0.0) -> tuple[int, int]:
-    """VACUUM the manifest-log table: delete every group directory NO
-    reconstructable pin can reach (Delta VACUUM, public), returning
-    ``(n_deleted, n_kept)``. Three garbage classes fall out:
-
-    - losing-attempt orphans (written, never committed — the aborted
-      writers :func:`_attempt_path` isolates);
-    - VOID racing-compaction groups (committed but resolved away at
-      EVERY pin — see ``_live_docs``: a replacer whose targets an
-      earlier replacer claimed is void from birth);
-    - REPLACED groups whose own commit records have been expired — a
-      replaced group is pinnable only at versions below its replacer,
-      and those pins need the record; once ``mlog_expire_checkpointed``
-      removes it, no surviving pin folds the group (checkpoints carry
-      the doc for resolution metadata, but resolution drops it at every
-      checkpoint-era pin).
-
-    The needed set is conservative: every SURVIVING record's group that
-    is live at its own version-pin (a replaced-but-unexpired doc IS the
-    table at that pin), plus every surviving checkpoint's live fold.
-    Prefix resolution here sees only surviving records, so a claim made
-    by an expired replacer is invisible — which can only KEEP a group
-    longer, never delete a needed one.
-
-    ``min_age_s`` is the retention guard (Delta VACUUM's retention
-    threshold, public): a writer's in-flight group — written but not
-    yet linked — is indistinguishable from an aborted one, so only
-    dirs older than the threshold are deleted. Pass 0 only when no
-    writer is active (maintenance window), as the demo key does.
-
-    Scale: pure driver-side metadata (O(records²) worst-case on the
-    per-pin resolution — records, not files; bounded by expiry) plus
-    one rmtree per dead group; no data is read."""
-    import glob as _glob
-    import re as _re
-    import shutil as _shutil
-    import time as _time
-
-    from dbsuite_spark.streaming.streams import (
-        _commit_version,
-        _live_docs,
-        _load_commit,
-        _log_commits,
-    )
-
-    import contextlib
-
-    record_docs = []
-    for c in _log_commits(table_dir):
-        with contextlib.suppress(FileNotFoundError):
-            # a concurrent expirer can remove a record between the
-            # listing and the load; expiry only runs under a covering
-            # checkpoint (already durable, globbed BELOW), so the
-            # vanished record's live groups still enter the needed set
-            # via the checkpoint term, and its replaced groups are by
-            # then correctly unreachable
-            record_docs.append(
-                {"version": _commit_version(c), **_load_commit(c)}
-            )
-    from dbsuite_spark.streaming.streams import _doc_paths
-
-    def _group_root(path: str) -> str:
-        # vacuum deletes TOP-LEVEL group-* dirs; a clustered commit's
-        # subgroups and a metadata-only RESTORE's re-pinned paths are
-        # children of (or equal to) such a root — protecting the root
-        # protects every path under it
-        rel = os.path.relpath(path, table_dir)
-        return os.path.join(table_dir, rel.split(os.sep)[0])
-
-    needed: set[str] = set()
-    for d in record_docs:
-        prefix = [x for x in record_docs if x["version"] <= d["version"]]
-        if any(x["version"] == d["version"] for x in _live_docs(prefix)):
-            needed.update(_group_root(p) for p in _doc_paths(d))
-    for cp in _glob.glob(os.path.join(table_dir, "checkpoint-*.json")):
-        doc = _read_manifest(cp)
-        for g in _live_docs(doc["groups"]):
-            needed.update(_group_root(p) for p in _doc_paths(g))
-
-    deleted = kept = 0
-    now = _time.time()
-    for g in sorted(_glob.glob(os.path.join(table_dir, "group-*"))):
-        if not os.path.isdir(g):
-            continue
-        if g in needed or now - os.path.getmtime(g) < min_age_s:
-            kept += 1
-            continue
-        _shutil.rmtree(g, ignore_errors=True)
-        deleted += 1
-    return deleted, kept
 
 
 _VACUUM_ORACLE = f"""
@@ -3207,29 +2494,24 @@ def etl_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     amplification."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import (
-        _attempt_path,
-        msink_commit_batch,
-    )
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "mlog_vacuum_table")
     _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     for i in range(6):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, base.filter(F.col("o_orderkey") % 8 == i), i
         )
     # aborted writer: a group lands, its commit never does
-    orphan = _attempt_path(table_dir, "group", 99)
+    orphan = tablelog._attempt_path(table_dir, "group", 99)
     base.limit(5).write.mode("overwrite").parquet(orphan)
 
-    if mlog_compact(spark, table_dir) != 6:
+    if tablelog.mlog_compact(spark, table_dir) != 6:
         raise RuntimeError("compaction must rewrite all 6 live groups")
     # racing duplicate compaction: same targets, lands second → void
     snapshot_groups = base.filter(F.col("o_orderkey") % 8 < 6)
     if (
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir,
             snapshot_groups,
             "compact-racing-loser",
@@ -3239,17 +2521,17 @@ def etl_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         raise RuntimeError("the racing compaction must still commit")
 
-    mlog_checkpoint(table_dir)
-    if mlog_expire_checkpointed(table_dir) != 8:
+    tablelog.mlog_checkpoint(table_dir)
+    if tablelog.mlog_expire_checkpointed(table_dir) != 8:
         raise RuntimeError("expected records 0-7 to expire")
     for i in (6, 7):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, base.filter(F.col("o_orderkey") % 8 == i), i
         )
 
     def report(phase: str) -> DataFrame:
-        n_deleted, n_kept = mlog_vacuum(table_dir)
-        df, _, _ = mlog_read_checkpointed(spark, table_dir)
+        n_deleted, n_kept = tablelog.mlog_vacuum(table_dir)
+        df, _, _ = tablelog.mlog_read_checkpointed(spark, table_dir)
         return df.agg(
             F.count("*").cast("bigint").alias("n_rows"),
             dsum(F.col("o_totalprice")).alias("sum_total"),
@@ -3332,8 +2614,6 @@ def etl_manifest_compact_cluster(
     conservative stats omission) in tests/test_round13_semantics.py."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import msink_commit_batch
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "compact_cluster_table")
     _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
@@ -3341,7 +2621,7 @@ def etl_manifest_compact_cluster(
     for i in range(6):
         sl = base.filter(F.col("o_orderkey") % 6 == i)
         mn, mx = sl.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir,
             sl,
             i,
@@ -3353,7 +2633,7 @@ def etl_manifest_compact_cluster(
     lo, hi = width + width // 4, width + width // 2
 
     def report(phase: str, pred_lo: int, pred_hi: int) -> DataFrame:
-        df, n = mlog_read_pruned_cols(
+        df, n = tablelog.mlog_read_pruned_cols(
             spark, table_dir, {"o_orderkey": (pred_lo, pred_hi)}
         )
         return df.agg(
@@ -3369,14 +2649,14 @@ def etl_manifest_compact_cluster(
     before = report("narrow_premerge", lo, hi)
     before.collect()  # pin the BEFORE probe before mutating the log
 
-    if mlog_compact(
+    if tablelog.mlog_compact(
         spark, table_dir, cluster_by=["o_orderkey"], n_groups=4
     ) != 6:
         raise RuntimeError("clustered compaction must rewrite 6 groups")
-    mlog_checkpoint(table_dir)
+    tablelog.mlog_checkpoint(table_dir)
     # expire the records: subgroup stats now provably come from the
     # checkpoint's verbatim copy of the compaction doc
-    mlog_expire_checkpointed(table_dir)
+    tablelog.mlog_expire_checkpointed(table_dir)
 
     return (
         before
@@ -3437,19 +2717,17 @@ def etl_manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round13_semantics.py."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import msink_commit_batch
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "restore_table")
     _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     for i in range(4):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, base.filter(F.col("o_orderkey") % 4 == i), i
         )
 
     def live_read(phase: str) -> DataFrame:
-        df, n = mlog_read_pruned_cols(
+        df, n = tablelog.mlog_read_pruned_cols(
             spark, table_dir, {"o_orderkey": (0, 1 << 62)}
         )
         return df.agg(
@@ -3476,15 +2754,15 @@ def etl_manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     head_before = live_read("head_before")
     head_before.collect()  # pin the BEFORE probe before the restore
 
-    if mlog_restore(table_dir, 2) != 3:
+    if tablelog.mlog_restore(table_dir, 2) != 3:
         raise RuntimeError("restore must re-pin the 3-slice snapshot")
     after = live_read("after_restore")
     after.collect()  # pin before the log mutates again
 
-    asof_df, _, n_tail = mlog_read_asof(spark, table_dir, 3)
+    asof_df, _, n_tail = tablelog.mlog_read_asof(spark, table_dir, 3)
     history = report("history_kept", n_tail, asof_df)
 
-    msink_commit_batch(
+    tablelog.msink_commit_batch(
         table_dir, base.filter(F.col("o_orderkey") % 4 == 3), 100
     )
     final = live_read("head_final")
@@ -3492,200 +2770,6 @@ def etl_manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         head_before.unionAll(after).unionAll(history).unionAll(final)
     )
-
-
-def mlog_read_asof(
-    spark: SparkSession, table_dir: str, version: int
-) -> tuple[DataFrame, int, int]:
-    """AS-OF (time-travel) read over the commit log, checkpoint-aware —
-    Delta's documented time-travel resolution (public): pick the
-    NEWEST checkpoint at or below the pinned version, fold it, then
-    fold only the commit tail in ``(checkpoint, version]``. Returns
-    ``(df, n_from_checkpoint, n_tail_commits)``.
-
-    History-expiry contract: if the pinned version predates the oldest
-    surviving log state (its commits were expired past a newer
-    checkpoint and no checkpoint ≤ version exists), raise — the same
-    "version no longer reconstructable after retention" error real
-    formats give, rather than silently returning a partial table.
-
-    Scale: planning cost is one checkpoint JSON + O(tail to the pin);
-    immutable commits/checkpoints make the pinned read stable under
-    concurrent appends (snapshot isolation, law-tested)."""
-    from dbsuite_spark.streaming.streams import (
-        _doc_paths,
-        _live_docs,
-        fold_groups,
-    )
-
-    docs, n_cp, n_tail = _asof_docs(table_dir, version)
-    # replaces-resolution runs over the PREFIX only: a pin BEFORE a
-    # compaction still folds the original groups — time travel sees
-    # history as it was, which is the whole point of snapshot reads
-    return (
-        fold_groups(
-            spark,
-            [p for d in _live_docs(docs) for p in _doc_paths(d)],
-        ),
-        n_cp,
-        n_tail,
-    )
-
-
-def _asof_docs(table_dir: str, version: int) -> tuple[list[dict], int, int]:
-    """Resolve the commit docs that reconstruct the table AS OF
-    ``version`` (newest checkpoint at or below the pin + the gap-free
-    commit tail up to it) — extracted from :func:`mlog_read_asof` so
-    the metadata-only RESTORE (:func:`mlog_restore`) pins its snapshot
-    through the SAME resolution, honest-error contracts included.
-    Returns ``(docs, n_from_checkpoint, n_tail_commits)``; docs are NOT
-    yet ``_live_docs``-resolved."""
-    import glob as _glob
-    import re as _re
-
-    from dbsuite_spark.streaming.streams import (
-        _checkpoint_state,
-        _commit_version,
-        _load_commit,
-        _log_commits,
-    )
-
-    # a pin past the log head never existed — distinguish that from
-    # expired history (round-12 review finding #5)
-    head_ck, _ = _checkpoint_state(table_dir)
-    commit_heads = [_commit_version(c) for c in _log_commits(table_dir)]
-    head = max(commit_heads + [head_ck])
-    if version > head:
-        raise RuntimeError(
-            f"version {version} does not exist at {table_dir} "
-            f"(log head is {head})"
-        )
-
-    # newest checkpoint at or below the pin
-    cp_version = -1
-    for p in _glob.glob(os.path.join(table_dir, "checkpoint-*.json")):
-        v = int(_re.search(r"checkpoint-(\d+)\.json$", p).group(1))
-        if v <= version:
-            cp_version = max(cp_version, v)
-    docs: list[dict] = []
-    if cp_version >= 0:
-        try:
-            cp = _read_manifest(
-                os.path.join(
-                    table_dir, f"checkpoint-{cp_version:05d}.json"
-                )
-            )
-        except FileNotFoundError:
-            # checkpoint retention retired it between the glob and the
-            # read — the pin just became unreconstructable; say so
-            raise RuntimeError(
-                f"version {version} is no longer reconstructable at "
-                f"{table_dir}: its covering checkpoint was retired "
-                "mid-read"
-            ) from None
-        docs = list(cp["groups"])
-
-    # commit tail in (cp_version, version] — MUST be gap-free: an
-    # expired commit inside the range means the version is gone
-    tail_versions = list(range(cp_version + 1, version + 1))
-    tail_paths = [
-        os.path.join(table_dir, f"commit-{v:05d}.json")
-        for v in tail_versions
-    ]
-    missing = [p for p in tail_paths if not os.path.exists(p)]
-    if missing:
-        raise RuntimeError(
-            f"version {version} is no longer reconstructable at "
-            f"{table_dir}: {len(missing)} commit(s) expired past the "
-            "newest covering checkpoint"
-        )
-    n_cp = len(docs)
-    try:
-        docs.extend(
-            {"version": v, **_load_commit(p)}
-            for v, p in zip(tail_versions, tail_paths)
-        )
-    except FileNotFoundError:  # expired between the check and the load
-        raise RuntimeError(
-            f"version {version} is no longer reconstructable at "
-            f"{table_dir}: its commit tail was expired mid-read"
-        ) from None
-    return docs, n_cp, len(tail_versions)
-
-
-def mlog_restore(table_dir: str, version: int) -> int:
-    """RESTORE the manifest-log table to historical ``version`` as a
-    NEW head commit — Delta's RESTORE TABLE ... TO VERSION AS OF
-    (public), metadata-only: the restore commit's ``subgroups`` point
-    at the snapshot's still-pinned group directories (zero data copied
-    or rewritten) and its ``replaces`` supersedes every currently-live
-    version, so the head flips atomically with the one commit link.
-    History stays immutable: as-of reads between the restored-to
-    version and the restore commit still see what they saw. Returns
-    the number of snapshot units re-pinned.
-
-    Semantics under the protocol:
-
-    - the snapshot resolves through :func:`_asof_docs` — the SAME
-      honest-error contracts as time travel (nonexistent version vs
-      history expired past retention);
-    - ``data_change: true``: rows at the head genuinely change, so
-      change-feed consumers re-receive the restored snapshot (Delta
-      CDF emits restore deltas for the same reason, public) — the
-      per-version downstream dedup makes that exactly-once;
-    - a restore RACING a compaction or another restore resolves like
-      racing compactions: both replace the same live set, the higher
-      version is void at read time (``_live_docs``), deterministically;
-    - vacuum keeps every re-pinned directory: the needed set walks
-      ``_doc_paths`` of every surviving live-at-own-pin record and
-      checkpoint entry, and the restore commit is live at its own pin
-      (run restore within checkpoint retention, like as-of reads —
-      outside it the snapshot resolution raises honestly).
-
-    Scale: O(snapshot docs) driver-side JSON metadata + one atomic
-    link; no executor, no I/O proportional to data — restoring a
-    100 TB table costs the same as restoring 100 MB."""
-    import uuid
-
-    from dbsuite_spark.streaming.streams import (
-        _doc_paths,
-        _live_docs,
-        msink_commit_batch,
-    )
-
-    docs, _, _ = _asof_docs(table_dir, version)
-    snapshot = _live_docs(docs)
-    if not snapshot:
-        raise RuntimeError(
-            f"nothing to restore: version {version} at {table_dir} "
-            "resolves to an empty snapshot"
-        )
-    subgroups = []
-    for d in snapshot:
-        sub = d.get("subgroups")
-        if sub:
-            subgroups.extend(sub)
-        else:
-            entry = {"path": d["group"]}
-            if d.get("stats"):
-                entry["stats"] = d["stats"]
-            subgroups.append(entry)
-    current = _live_docs(_resolve_log_docs(table_dir))
-    out = msink_commit_batch(
-        table_dir,
-        None,  # metadata-only: write_fn never touches data
-        f"restore-v{version}-{uuid.uuid4().hex[:12]}",
-        stats=_merged_stats([d.get("stats") for d in snapshot]),
-        extra_doc={
-            "replaces": sorted(d["version"] for d in current),
-            "data_change": True,
-            "restore_of": version,
-        },
-        write_fn=lambda bdf, group: {"subgroups": subgroups},
-    )
-    if out != "committed":
-        raise RuntimeError(f"restore commit failed: {out}")
-    return len(subgroups)
 
 
 _CKPT_COMMITS = 10  # demo log length: two checkpoints + a 2-commit tail
@@ -3699,17 +2783,15 @@ def _build_mod10_log(spark: SparkSession, sf_dir: str, name: str) -> str:
     table dir (recreated — idempotent re-run)."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import msink_commit_batch
-
     e = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
     table_dir = artifact_path(sf_dir, name)
     _shutil.rmtree(table_dir, ignore_errors=True)
     for i in range(_CKPT_COMMITS):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, e.filter(F.col("event_id") % _CKPT_COMMITS == i), i
         )
         if (i + 1) % CHECKPOINT_INTERVAL == 0:
-            mlog_checkpoint(table_dir)
+            tablelog.mlog_checkpoint(table_dir)
     return table_dir
 
 
@@ -3761,8 +2843,6 @@ def etl_manifest_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     records instead of O(log length); expiry keeps the log bounded.
     Data files are never copied — the checkpoint carries groups by
     reference."""
-    from dbsuite_spark.streaming.streams import msink_read
-
     table_dir = _build_mod10_log(spark, sf_dir, "ckpt_table")
 
     def report(reader: str, df: DataFrame, n_cp: int, n_tail: int) -> DataFrame:
@@ -3777,13 +2857,15 @@ def etl_manifest_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
 
-    full = report("full_log", msink_read(spark, table_dir), 0, _CKPT_COMMITS)
-    df1, n_cp1, n_tail1 = mlog_read_checkpointed(spark, table_dir)
+    full = report(
+        "full_log", tablelog.msink_read(spark, table_dir), 0, _CKPT_COMMITS
+    )
+    df1, n_cp1, n_tail1 = tablelog.mlog_read_checkpointed(spark, table_dir)
     ckpt = report("checkpointed", df1, n_cp1, n_tail1)
-    n_expired = mlog_expire_checkpointed(table_dir)
+    n_expired = tablelog.mlog_expire_checkpointed(table_dir)
     if n_expired != 8:
         raise RuntimeError(f"expected to expire 8 folded commits, got {n_expired}")
-    df2, n_cp2, n_tail2 = mlog_read_checkpointed(spark, table_dir)
+    df2, n_cp2, n_tail2 = tablelog.mlog_read_checkpointed(spark, table_dir)
     post = report("post_expire", df2, n_cp2, n_tail2)
     return full.unionAll(ckpt).unionAll(post)
 
@@ -3841,7 +2923,7 @@ def etl_manifest_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = _build_mod10_log(spark, sf_dir, "asof_table")
 
     def report(v: int) -> DataFrame:
-        df, n_cp, n_tail = mlog_read_asof(spark, table_dir, v)
+        df, n_cp, n_tail = tablelog.mlog_read_asof(spark, table_dir, v)
         return df.agg(
             F.count("*").cast("bigint").alias("n_rows"),
             dsum(F.col("value")).alias("sum_value"),
@@ -3883,159 +2965,6 @@ WHERE o_orderkey BETWEEN (SELECT 5 * width FROM w)
 """
 
 
-def _resolve_log_docs(table_dir: str) -> list[dict]:
-    """Checkpoint + gap-checked tail resolution shared by the pruned
-    readers — the SAME retry discipline as :func:`mlog_read_checkpointed`
-    (ADVICE r12 #4): a concurrent checkpoint+expire between checkpoint
-    resolution and the tail load must surface as a newer checkpoint on
-    retry or an honest error, never a silently partial table. Returns
-    the full doc list (checkpoint groups + live tail docs) in version
-    order."""
-    from dbsuite_spark.streaming.streams import (
-        _checkpoint_state,
-        _commit_version,
-        _load_commit,
-        _log_commits,
-    )
-
-    for attempt in (0, 1, 2):
-        k, cp_groups = _checkpoint_state(table_dir)
-        tail = [
-            c for c in _log_commits(table_dir) if _commit_version(c) > k
-        ]
-        tail_versions = [_commit_version(c) for c in tail]
-        head = tail_versions[-1] if tail_versions else k
-        if tail_versions != list(range(k + 1, head + 1)):
-            if attempt == 2:
-                raise RuntimeError(
-                    f"commit tail past checkpoint {k} at {table_dir} "
-                    f"has gaps ({tail_versions}) — log expired without "
-                    "a covering checkpoint?"
-                )
-            continue  # a checkpoint+expire raced us; re-resolve
-        try:
-            tail_docs = [
-                {"version": v, **_load_commit(c)}
-                for v, c in zip(tail_versions, tail)
-            ]
-        except FileNotFoundError:
-            if attempt == 2:
-                raise RuntimeError(
-                    f"commit log at {table_dir} kept changing under "
-                    "the pruned read (3 attempts)"
-                ) from None
-            continue  # a record expired mid-load: it is now folded
-        break
-    return list(cp_groups) + tail_docs
-
-
-def _stats_interval(stats: dict, col: str) -> tuple | None:
-    """The (min, max) interval a commit doc's stats carry for ``col``,
-    or None when the doc has no usable stats for it — None means
-    UNPRUNABLE on this column, never prunable (absent metadata can't
-    justify skipping data). Canonical shape is the per-column map
-    ``{col: {"min": x, "max": y}}``; the original single-column
-    ``{"min_key", "max_key"}`` shape is honored as ``o_orderkey``
-    stats so pre-generalization logs stay readable."""
-    iv = stats.get(col)
-    if isinstance(iv, dict) and iv.get("min") is not None:
-        return iv["min"], iv["max"]
-    if (
-        col == "o_orderkey"
-        and stats.get("min_key") is not None
-        and stats.get("max_key") is not None
-    ):
-        return stats["min_key"], stats["max_key"]
-    return None
-
-
-def mlog_read_pruned_cols(
-    spark: SparkSession, table_dir: str, pred: dict[str, tuple]
-) -> tuple[DataFrame, int]:
-    """Stats-pruned read over the (checkpointed) commit log with a
-    CONJUNCTIVE multi-column predicate spec ``{col: (lo, hi)}``
-    (VERDICT r12 ask #4): resolve checkpoint + tail via
-    :func:`_resolve_log_docs`, then DROP every group whose carried
-    per-column (min, max) interval is disjoint from ANY predicate
-    column's range BEFORE a scan is planned — one disjoint column
-    prunes the group (conjunction), while a column the group carries no
-    stats for simply can't prune it. Returns
-    ``(filtered_df, n_groups_scanned)``; the surviving groups fold in
-    one multi-path scan with the full predicate applied (pruning is an
-    optimization, never a semantics change — law-tested).
-
-    Scale: the decision is O(groups × predicate columns) driver-side
-    metadata with zero I/O for pruned groups — the Delta/Iceberg
-    data-skipping model generalized to the same per-column stats maps
-    those formats' checkpoints carry."""
-    from dbsuite_spark.streaming.streams import _doc_paths, _live_docs
-
-    docs = _live_docs(_resolve_log_docs(table_dir))
-
-    def survives(stats: dict | None) -> bool:
-        if not stats:
-            return True  # no stats: unprunable
-        for col, (lo, hi) in pred.items():
-            iv = _stats_interval(stats, col)
-            if iv is not None and (iv[0] > hi or iv[1] < lo):
-                return False
-        return True
-
-    # the prunable UNIT is the subgroup where one exists (clustered
-    # compaction's range-disjoint children): its exact stats overlay
-    # the parent doc's per column, so a clustered commit prunes back
-    # down to the children the predicate actually touches — the whole
-    # point of clustering the rewrite
-    units: list[tuple[str, dict | None]] = []
-    for d in docs:
-        sub = d.get("subgroups")
-        if sub:
-            for s in sub:
-                units.append(
-                    (
-                        s["path"],
-                        {
-                            **(d.get("stats") or {}),
-                            **(s.get("stats") or {}),
-                        },
-                    )
-                )
-        else:
-            units.append((d["group"], d.get("stats")))
-
-    live_paths = [p for p, st in units if survives(st)]
-    if not live_paths:  # everything pruned: a valid empty scan
-        if not docs:
-            raise RuntimeError(f"empty manifest log at {table_dir}")
-        empty = spark.read.parquet(_doc_paths(docs[0])[0]).filter(
-            F.lit(False)
-        )
-        return empty, 0
-    from dbsuite_spark.streaming.streams import fold_groups
-
-    df = fold_groups(spark, live_paths)
-    for col, (lo, hi) in pred.items():
-        # literals take the column's own type (date predicates arrive
-        # as ISO strings — the JSON-serializable form stats use)
-        dt = df.schema[col].dataType
-        df = df.filter(
-            F.col(col).between(F.lit(lo).cast(dt), F.lit(hi).cast(dt))
-        )
-    return df, len(live_paths)
-
-
-def mlog_read_pruned(
-    spark: SparkSession, table_dir: str, lo: int, hi: int
-) -> tuple[DataFrame, int]:
-    """Single-column stats-pruned read over the commit log — the
-    ``o_orderkey``-keyed special case of :func:`mlog_read_pruned_cols`
-    (kept as the original API; see there for resolution + pruning
-    semantics)."""
-    return mlog_read_pruned_cols(
-        spark, table_dir, {"o_orderkey": (lo, hi)}
-    )
-
-
 @query("etl_manifest_ckpt_stats_skip", oracle=_CKPT_SKIP_ORACLE, category="K")
 def etl_manifest_ckpt_stats_skip(
     spark: SparkSession, sf_dir: str
@@ -4070,8 +2999,6 @@ def etl_manifest_ckpt_stats_skip(
     manifest-grade metadata, amortized into the batch write."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import msink_commit_batch
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "ckpt_stats_table")
     _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
@@ -4085,16 +3012,16 @@ def etl_manifest_ckpt_stats_skip(
         mn, mx = sl.agg(
             F.min("o_orderkey"), F.max("o_orderkey")
         ).first()
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, sl, i, stats={"min_key": mn, "max_key": mx}
         )
-    mlog_checkpoint(table_dir)
+    tablelog.mlog_checkpoint(table_dir)
     # expire the log: the reader's stats now come from the checkpoint
-    if mlog_expire_checkpointed(table_dir) != CKPT_STATS_GROUPS:
+    if tablelog.mlog_expire_checkpointed(table_dir) != CKPT_STATS_GROUPS:
         raise RuntimeError("expected the full log prefix to expire")
 
     def report(label: str, lo: int, hi: int) -> DataFrame:
-        df, n_groups = mlog_read_pruned(spark, table_dir, lo, hi)
+        df, n_groups = tablelog.mlog_read_pruned(spark, table_dir, lo, hi)
         return df.agg(
             F.count("*").cast("bigint").alias("n_rows"),
             dsum(F.col("o_totalprice")).alias("sum_total"),
@@ -4176,8 +3103,6 @@ def etl_manifest_ckpt_stats_multi(
     maps cost one small aggregate per commit at write time."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import msink_commit_batch
-
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -4207,7 +3132,7 @@ def etl_manifest_ckpt_stats_multi(
                     f"empty slice×class group {bid}: the fixture no "
                     "longer populates both date classes of every slice"
                 )
-            msink_commit_batch(
+            tablelog.msink_commit_batch(
                 table_dir,
                 cls,
                 bid,
@@ -4220,13 +3145,13 @@ def etl_manifest_ckpt_stats_multi(
                 },
             )
             bid += 1
-    mlog_checkpoint(table_dir)
+    tablelog.mlog_checkpoint(table_dir)
     # expire the log: pruning now provably reads the checkpoint's stats
-    if mlog_expire_checkpointed(table_dir) != 8:
+    if tablelog.mlog_expire_checkpointed(table_dir) != 8:
         raise RuntimeError("expected the full log prefix to expire")
 
     def report(label: str, pred: dict) -> DataFrame:
-        df, n_groups = mlog_read_pruned_cols(spark, table_dir, pred)
+        df, n_groups = tablelog.mlog_read_pruned_cols(spark, table_dir, pred)
         return df.agg(
             F.count("*").cast("bigint").alias("n_rows"),
             dsum(F.col("o_totalprice")).alias("sum_total"),
@@ -4322,14 +3247,12 @@ def etl_manifest_compact_optimize(
     behavior) in tests/test_round13_semantics.py."""
     import shutil as _shutil
 
-    from dbsuite_spark.streaming.streams import msink_commit_batch
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "compact_optimize_table")
     _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     for i in range(6):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, base.filter(F.col("o_orderkey") % 8 == i), i
         )
 
@@ -4347,7 +3270,7 @@ def etl_manifest_compact_optimize(
     def live_read(phase: str) -> DataFrame:
         # an unbounded predicate disables pruning, so the stats
         # reader's group count IS the live-group count
-        df, n = mlog_read_pruned_cols(
+        df, n = tablelog.mlog_read_pruned_cols(
             spark, table_dir, {"o_orderkey": (0, 1 << 62)}
         )
         return report(phase, n, df)
@@ -4355,15 +3278,15 @@ def etl_manifest_compact_optimize(
     before = live_read("before")
     before.collect()  # pin the BEFORE snapshot before mutating the log
 
-    if mlog_compact(spark, table_dir) != 6:
+    if tablelog.mlog_compact(spark, table_dir) != 6:
         raise RuntimeError("compaction must rewrite all 6 live groups")
     after = live_read("after_compact")
 
-    asof_df, _, n_tail = mlog_read_asof(spark, table_dir, 5)
+    asof_df, _, n_tail = tablelog.mlog_read_asof(spark, table_dir, 5)
     asof = report("asof_pre", n_tail, asof_df)
 
     for i in (6, 7):
-        msink_commit_batch(
+        tablelog.msink_commit_batch(
             table_dir, base.filter(F.col("o_orderkey") % 8 == i), i
         )
     final = live_read("final")

@@ -13,6 +13,36 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The runtime SQL confs every session gets, from get_spark's builder or
+# tune_session on a driver-owned session; shuffle width is set beside them.
+#
+# preferSortMergeJoin=false (round 13, guide §3.1/§9) lets the planner
+# pick shuffled-hash join when its size conditions hold — SHJ skips both
+# sides' sorts, and the flip measured faster-or-equal on every
+# shuffled-join headline key (interleaved same-session at sf0.1: tpch_q5
+# 7/9 rounds, tpch_q9 7/9, join_multiway_star 6/9; bucketed/broadcast/
+# hinted plans unchanged — the bucket-aligned SMJ keeps its no-exchange,
+# no-sort shape because no exchange is planned at all). NOT a local-only
+# tune: Spark still guards SHJ behind canBuildLocalHashMap (per-partition
+# build must fit), AQE skew splitting applies to SHJ, and sort-merge
+# remains available via hint; on a cluster where a build side might
+# exceed task memory, set SPARK_GRAFT_PREFER_SMJ=true to restore the
+# default.
+SQL_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.cbo.enabled", "true"),
+    ("spark.sql.autoBroadcastJoinThreshold", "64m"),
+    (
+        "spark.sql.join.preferSortMergeJoin",
+        os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
+    ),
+)
+
+
 def get_spark(
     app_name: str = "dbsuite-spark",
     shuffle_partitions: int | None = None,
@@ -25,35 +55,13 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.cbo.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.join.preferSortMergeJoin", _prefer_smj())
     )
+    for key, val in SQL_CONFS:
+        builder = builder.config(key, val)
     return builder.getOrCreate()
-
-
-def _prefer_smj() -> str:
-    """Round-13 (guide §3.1/§9): let the planner pick shuffled-hash join
-    when its size conditions hold — SHJ skips both sides' sorts, and the
-    flip measured faster-or-equal on every shuffled-join headline key
-    (interleaved same-session at sf0.1: tpch_q5 7/9 rounds,
-    tpch_q9 7/9, join_multiway_star 6/9; bucketed/broadcast/hinted
-    plans unchanged — the bucket-aligned SMJ keeps its no-exchange,
-    no-sort shape because no exchange is planned at all). NOT a
-    local-only tune: Spark still guards SHJ behind
-    canBuildLocalHashMap (per-partition build must fit), AQE skew
-    splitting applies to SHJ, and sort-merge remains available via
-    hint; on a cluster where a build side might exceed task memory,
-    set SPARK_GRAFT_PREFER_SMJ=true to restore the default."""
-    return os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false")
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -63,18 +71,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     vanilla session defaults to 200 shuffle partitions, which at test
     scale means 6x-too-wide shuffles and, for stateful streaming, 200
     state-store commits per micro-batch."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
-    for key, val in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.shuffle.partitions", shuffle),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.autoBroadcastJoinThreshold", "64m"),
-        ("spark.sql.cbo.enabled", "true"),
-        ("spark.sql.join.preferSortMergeJoin", _prefer_smj()),
-    ):
+    for key, val in SQL_CONFS + (("spark.sql.shuffle.partitions", shuffle),):
         try:
             spark.conf.set(key, val)
         except Exception:

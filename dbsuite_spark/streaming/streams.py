@@ -34,7 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.etl import tablelog
 from dbsuite_spark.etl.io import artifact_path
+from dbsuite_spark.etl.loaders import DV_GROUPS
 from dbsuite_spark.exact import BIGCOUNT, DSUM
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
@@ -1058,363 +1060,6 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exactly-once manifest sink (round 11) ---------------------------------
 
 
-def _log_commits(table_dir: str) -> list[str]:
-    import glob
-    import os
-
-    return sorted(glob.glob(os.path.join(table_dir, "commit-*.json")))
-
-
-def _load_commit(path: str) -> dict:
-    import json as _json
-
-    with open(path) as fh:
-        return _json.load(fh)
-
-
-def _commit_version(path: str) -> int:
-    """Version number of a commit record, from its FILENAME — never from
-    its position in a listing: after log expiry the surviving commits
-    are not a dense 0-based prefix, so list indexes and ``len()`` stop
-    meaning versions (round-12 review finding #1)."""
-    import re as _re
-
-    return int(_re.search(r"commit-(\d+)\.json$", path).group(1))
-
-
-def _checkpoint_state(table_dir: str) -> tuple[int, list[dict]]:
-    """Newest checkpoint's (version, groups) from an AUTHORITATIVE
-    directory listing — ``(-1, [])`` when none exists. The
-    ``_last_checkpoint`` pointer is deliberately NOT consulted: it is a
-    best-effort hint (Delta's `_last_checkpoint` semantics, public),
-    and a racing stale checkpointer can swing it backwards harmlessly
-    precisely because nothing correctness-bearing reads it (round-12
-    review finding #4). Group entries carry (version, batch_id, group)
-    for every commit the checkpoint folded."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    cps = _glob.glob(os.path.join(table_dir, "checkpoint-*.json"))
-    if not cps:
-        return -1, []
-    newest = max(
-        cps,
-        key=lambda p: int(
-            _re.search(r"checkpoint-(\d+)\.json$", p).group(1)
-        ),
-    )
-    doc = _load_commit(newest)
-    return doc["version"], doc["groups"]
-
-
-def _live_docs(docs: list[dict]) -> list[dict]:
-    """Resolve ``replaces`` semantics over version-carrying commit docs
-    (round-13 OPTIMIZE support): a compaction commit supersedes the
-    versions it names, so those versions' groups leave the fold. Racing
-    compactions resolve DETERMINISTICALLY at read time, no write-side
-    coordination: replacers apply in version order, and a replacer any
-    of whose targets were already claimed by an earlier replacer is
-    VOID in its entirety (its group duplicates data an earlier
-    compaction already superseded — folding it would double-count).
-    The void commit's group becomes an unreferenced-orphan candidate
-    for vacuum; its record stays in the log (history is immutable).
-    Docs without ``replaces`` pass through untouched, so every
-    pre-compaction log folds exactly as before."""
-    ordered = sorted(docs, key=lambda d: d["version"])
-    claimed: set[int] = set()
-    void: set[int] = set()
-    for d in ordered:
-        reps = d.get("replaces") or []
-        if reps:
-            if any(r in claimed for r in reps):
-                void.add(d["version"])
-            else:
-                claimed.update(reps)
-    return [
-        d
-        for d in ordered
-        if d["version"] not in claimed and d["version"] not in void
-    ]
-
-
-def fold_groups(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Union the parquet file groups at ``paths`` — the ONE fold every
-    commit-log reader (live, checkpointed, as-of) shares, so a
-    reader-semantics fix lands once (round-12 review finding #7).
-
-    The fold is ONE multi-path parquet scan, not an N-way ``unionByName``
-    chain (VERDICT r12 ask #5): a chain costs O(N) plan nodes PER READ
-    at a real commit cadence (thousands of groups between compactions),
-    while a single FileScan over N directories is O(1) plan nodes with
-    the same bag-union semantics — all groups of one table are written
-    by the same sink with one schema, which the plan pin and every
-    reader law verify."""
-    if not paths:
-        raise RuntimeError("nothing to fold: empty group list")
-    return spark.read.parquet(*paths)
-
-
-def _doc_paths(doc: dict) -> list[str]:
-    """The data paths one commit doc contributes to a fold. A plain
-    commit carries ONE ``group`` directory; a CLUSTERED commit (round-13
-    ``mlog_compact(cluster_by=...)``) additionally carries
-    ``subgroups`` — range-disjoint child directories under the same
-    ``group`` parent, each with its own exact per-column stats so data
-    skipping survives compaction — and a metadata-only RESTORE commit's
-    subgroups point at OTHER commits' still-pinned group dirs (zero data
-    copy, the Delta RESTORE idea, public). Every reader resolves paths
-    through this ONE helper so the doc-shape extension lands once,
-    like :func:`fold_groups` did for the fold itself."""
-    sub = doc.get("subgroups")
-    return [s["path"] for s in sub] if sub else [doc["group"]]
-
-
-def _attempt_path(table_dir: str, kind: str, batch_id: int) -> str:
-    """Per-ATTEMPT unique data path (uuid suffix, like real table
-    formats' uuid file names): two concurrent replays of the same batch
-    must never write the same directory, or the loser's overwrite could
-    tear a group the winner's commit record already references. The
-    path never affects results (only the commit record makes a group
-    live); a losing attempt's directory is exactly the unreferenced
-    orphan ``etl_vacuum_orphan_files`` collects."""
-    import os
-    import uuid
-
-    return os.path.join(
-        table_dir, f"{kind}-b{batch_id}-{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _try_claim_version(
-    table_dir: str, version: int, doc: dict, batch_id: int
-) -> str:
-    """Attempt to publish ``doc`` as commit ``version`` with ONE atomic
-    ``os.link`` (the Delta-log idea, public: link(2) fails with EEXIST
-    if the version is taken and otherwise appears atomically WITH its
-    content — claim and commit are the same operation, so a crash
-    leaves either no commit or a complete one, never a torn state).
-
-    Returns 'committed' (won), 'skipped' (lost to a commit of the SAME
-    batch — a concurrent replay), or 'lost' (lost to a FOREIGN batch —
-    the caller decides how to rebase: the append-only sink just bumps
-    the version, the merge sink must re-merge against the new state).
-
-    The tmp scratch name is unique PER ATTEMPT (uuid suffix, like
-    :func:`_attempt_path`), never merely per (version, batch): two
-    concurrent replays of the same batch racing for the same version
-    must not share a tmp file, or one could link the other's doc and
-    the loser's cleanup would raise FileNotFoundError mid-replay
-    (ADVICE r11 #1). Cleanup is additionally suppress-wrapped — on a
-    scratch file, a missing-file race is never worth crashing a
-    streaming query over.
-
-    The loser's look-at-the-winner load is ALSO race-guarded (ADVICE
-    r12 #1): between the failed link and ``_load_commit``, a concurrent
-    ``mlog_expire_checkpointed`` (or the winner's own relocation path
-    in ``msink_commit_batch``) can delete the winning record. Expiry
-    only ever removes a record a checkpoint has FOLDED, and relocation
-    re-publishes the same batch at a higher version — so on
-    FileNotFoundError the dedup re-resolves against the newest
-    checkpoint's folded groups plus the surviving log: 'skipped' if
-    OUR batch is already in there, else 'lost' (the caller re-claims a
-    higher slot, where its own pre-write dedup already ruled out a
-    double commit)."""
-    import contextlib
-    import json as _json
-    import os
-    import uuid
-
-    commit_path = os.path.join(table_dir, f"commit-{version:05d}.json")
-    tmp = f"{commit_path}.b{batch_id}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(doc, fh)
-    try:
-        os.link(tmp, commit_path)  # atomic claim+commit in one op
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(tmp)
-        return "committed"
-    except FileExistsError:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(tmp)
-        try:
-            winner = _load_commit(commit_path)["batch_id"]
-        except FileNotFoundError:
-            # the winning record vanished between the failed link and
-            # the load — expired past a checkpoint or relocated by its
-            # own committer. Re-resolve the dedup from durable state.
-            _, ck_groups = _checkpoint_state(table_dir)
-            if batch_id in {g["batch_id"] for g in ck_groups}:
-                return "skipped"
-            for c in _log_commits(table_dir):
-                with contextlib.suppress(FileNotFoundError):
-                    if _load_commit(c)["batch_id"] == batch_id:
-                        return "skipped"
-            return "lost"
-        if winner == batch_id:
-            return "skipped"
-        return "lost"
-
-
-def msink_commit_batch(
-    table_dir: str,
-    bdf: DataFrame,
-    batch_id: int,
-    stats: dict | None = None,
-    extra_doc: dict | None = None,
-    write_fn=None,
-) -> str:
-    """Commit one micro-batch into the manifest-log table at
-    ``table_dir`` with EXACTLY-ONCE semantics (module-level so the law
-    tests can drive crash/replay scenarios directly).
-
-    Protocol: the batch's rows land in a per-attempt unique file group
-    (see :func:`_attempt_path`), then the commit record —
-    ``commit-{n:05d}.json`` carrying (batch_id, group path) — publishes
-    via :func:`_try_claim_version`'s atomic link.
-
-    Optional ``stats`` (e.g. per-group column min/max) ride in the
-    commit doc and are folded VERBATIM into checkpoints by
-    ``mlog_checkpoint``, which is how real formats get scan planning
-    from the checkpoint alone (Delta checkpoints carry per-file stats,
-    public) — see ``etl_manifest_ckpt_stats_skip``.
-
-    Idempotence: a replayed batch (Spark re-runs any micro-batch whose
-    foreachBatch ran but whose checkpoint commit didn't land) is
-    detected by scanning for its batch_id BEFORE writing — in the
-    surviving log AND in the newest checkpoint's folded groups, so a
-    replay of a batch whose commit record was EXPIRED past a checkpoint
-    still skips (round-12 review finding #1) — and on the claim-race
-    path by losing the link to the same batch. Losing to a FOREIGN
-    batch just bumps the version: the append-only reader folds ALL
-    commits, so no rebase of the data is needed.
-
-    Version allocation is ``max(surviving versions, checkpoint
-    version) + 1`` from FILENAMES, never ``len(log)``: after expiry the
-    log is not a dense prefix, and a ``len``-derived version would
-    reclaim a slot BELOW the checkpoint — invisible to the checkpointed
-    reader's tail filter.
-
-    Returns 'committed' or 'skipped'."""
-    import os
-
-    os.makedirs(table_dir, exist_ok=True)
-    for _ in range(3):
-        commits = _log_commits(table_dir)
-        ck_version, ck_groups = _checkpoint_state(table_dir)
-        try:
-            committed_ids = {
-                _load_commit(c)["batch_id"] for c in commits
-            } | {g["batch_id"] for g in ck_groups}
-            break
-        except FileNotFoundError:
-            continue  # a concurrent expiry claimed a record mid-scan:
-            # the id now lives in a newer checkpoint — re-list
-    else:
-        raise RuntimeError(
-            f"commit log at {table_dir} kept changing under the dedup "
-            "scan (3 attempts)"
-        )
-    if batch_id in committed_ids:
-        return "skipped"  # exactly-once: this batch already committed
-
-    # write-then-publish: only the commit record makes the group live.
-    # ``write_fn(bdf, group) -> extra doc fields`` lets a caller shape
-    # the data layout inside its attempt dir (clustered compaction's
-    # range-bucketed subgroups) while the claim/dedup/relocation
-    # protocol below stays the ONE shared implementation; the default
-    # is the plain single-group parquet write.
-    group = _attempt_path(table_dir, "group", batch_id)
-    if write_fn is None:
-        layout_doc: dict = {}
-        bdf.write.mode("overwrite").parquet(group)
-    else:
-        layout_doc = write_fn(bdf, group) or {}
-    version = (
-        max([_commit_version(c) for c in commits] + [ck_version]) + 1
-    )
-    doc = {"batch_id": batch_id, "group": group, **layout_doc}
-    if stats is not None:
-        doc["stats"] = stats
-    if extra_doc:
-        # compaction metadata (``replaces``, ``data_change``) rides the
-        # same atomic claim — see mlog_compact; the protocol below is
-        # oblivious to it
-        doc.update(extra_doc)
-    while True:
-        out = _try_claim_version(table_dir, version, doc, batch_id)
-        if out == "lost":
-            version += 1  # append-only: rebase = take the next slot
-            continue
-        if out == "committed":
-            # POST-LINK VALIDATION (round-12 concurrency stress): if a
-            # concurrent checkpoint+expire raced our stale state
-            # snapshot, our link can have landed in a slot expiry
-            # VACATED below the new checkpoint boundary — at or below
-            # the newest checkpoint version yet absent from its fold.
-            # Such a record is invisible to every checkpointed reader
-            # (tail filters > k) and can never be folded later (every
-            # future checkpoint's tail also starts past k), so the
-            # batch would be silently lost. Relocate: unlink the
-            # invisible record and re-claim above the fresh boundary.
-            # No double-count is possible — "absent from the newest
-            # checkpoint's groups" proves no checkpoint ever folded it
-            # (incremental folds carry all prior groups forward).
-            import contextlib
-
-            ck2, ck_groups2 = _checkpoint_state(table_dir)
-            folded = {g["batch_id"] for g in ck_groups2}
-            if version <= ck2 and batch_id not in folded:
-                with contextlib.suppress(FileNotFoundError):
-                    # a racing expirer may already have removed it —
-                    # equally invisible, equally fine to vacate
-                    os.remove(
-                        os.path.join(
-                            table_dir, f"commit-{version:05d}.json"
-                        )
-                    )
-                version = (
-                    max(
-                        [
-                            _commit_version(c)
-                            for c in _log_commits(table_dir)
-                        ]
-                        + [ck2]
-                    )
-                    + 1
-                )
-                continue
-        return out
-
-
-def msink_read(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read the manifest-log table: fold the commit records in version
-    order and union their file groups — the snapshot a lakehouse reader
-    materializes from the log.
-
-    This is the FULL-LOG reader: it requires a dense 0-based log and
-    REFUSES an expired one (silently folding the surviving suffix would
-    return a partial table — round-12 review finding #1); after
-    ``mlog_expire_checkpointed`` use the checkpointed reader instead."""
-    commits = _log_commits(table_dir)
-    if not commits:
-        raise RuntimeError(f"empty manifest log at {table_dir}")
-    versions = [_commit_version(c) for c in commits]
-    if versions != list(range(len(versions))):
-        raise RuntimeError(
-            f"commit log at {table_dir} is not a dense 0-based prefix "
-            "(expired past a checkpoint?) — use mlog_read_checkpointed"
-        )
-    docs = [
-        {"version": v, **_load_commit(c)}
-        for v, c in zip(versions, commits)
-    ]
-    return fold_groups(
-        spark,
-        [p for d in _live_docs(docs) for p in _doc_paths(d)],
-    )
-
-
 @query(
     "stream_manifest_sink",
     oracle="SELECT event_id, user_id, event_type, value FROM events",
@@ -1465,7 +1110,9 @@ def stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _read_stream(spark, live, src.schema)
                 .select(*proj)
                 .writeStream.foreachBatch(
-                    lambda bdf, bid: msink_commit_batch(table_dir, bdf, bid)
+                    lambda bdf, bid: tablelog.msink_commit_batch(
+                        table_dir, bdf, bid
+                    )
                     and None
                 )
                 .option("checkpointLocation", ckpt)
@@ -1482,14 +1129,14 @@ def stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = spark.read.parquet(
         os.path.join(live, "part-00000.parquet")
     ).select(*proj)
-    outcome = msink_commit_batch(table_dir, replay, 0)
+    outcome = tablelog.msink_commit_batch(table_dir, replay, 0)
     if outcome != "skipped":
         raise RuntimeError(f"replayed batch must be skipped, got {outcome}")
 
     for i, f in enumerate(parts[3:], start=3):
         shutil.copy(f, os.path.join(live, f"part-{i:05d}.parquet"))
     run_phase()
-    return msink_read(spark, table_dir)
+    return tablelog.msink_read(spark, table_dir)
 
 
 # --- exactly-once streaming MERGE (round 11) --------------------------------
@@ -1513,10 +1160,11 @@ def fbm_merge_batch(
     """MERGE one micro-batch into the versioned per-user state table at
     ``table_dir`` — the ``foreachBatch`` + MERGE pattern Delta documents
     for streaming upserts (public), on the same atomic commit-log
-    protocol as :func:`msink_commit_batch`: each commit record is
-    published by :func:`_try_claim_version` and carries the batch_id,
-    so a replayed batch is skipped and the merge is exactly-once even
-    though MERGE itself is not idempotent.
+    protocol as :func:`~dbsuite_spark.etl.tablelog.msink_commit_batch`:
+    each commit record is published by
+    :func:`~dbsuite_spark.etl.tablelog._try_claim_version` and carries
+    the batch_id, so a replayed batch is skipped and the merge is
+    exactly-once even though MERGE itself is not idempotent.
 
     RACE SEMANTICS differ from the append-only sink: each commit's file
     group is the FULL new state snapshot and the reader materializes
@@ -1543,8 +1191,8 @@ def fbm_merge_batch(
         F.max(F.struct("ts", "event_type")).alias("last"),
     )
     while True:
-        commits = _log_commits(table_dir)
-        docs = [_load_commit(c) for c in commits]
+        commits = tablelog._log_commits(table_dir)
+        docs = [tablelog.read_json(c) for c in commits]
         if any(d["batch_id"] == batch_id for d in docs):
             return "skipped"  # replay of a committed batch
 
@@ -1574,7 +1222,7 @@ def fbm_merge_batch(
             F.col("last.ts").alias("last_ts"),
             F.col("last.event_type").alias("last_type"),
         )
-        group = _attempt_path(table_dir, "state", batch_id)
+        group = tablelog._attempt_path(table_dir, "state", batch_id)
         out_rows.write.mode("overwrite").parquet(group)
         if _pre_claim_hook is not None:
             hook, _pre_claim_hook = _pre_claim_hook, None
@@ -1582,9 +1230,9 @@ def fbm_merge_batch(
         # filename-derived next version (not len()): robust if a state
         # log ever composes with expiry the way the append log does
         next_version = (
-            _commit_version(commits[-1]) + 1 if commits else 0
+            tablelog._commit_version(commits[-1]) + 1 if commits else 0
         )
-        out = _try_claim_version(
+        out = tablelog._try_claim_version(
             table_dir,
             next_version,
             {"batch_id": batch_id, "group": group},
@@ -1597,10 +1245,10 @@ def fbm_merge_batch(
 
 def fbm_read_state(spark: SparkSession, table_dir: str) -> DataFrame:
     """Materialize the LATEST committed state snapshot."""
-    commits = _log_commits(table_dir)
+    commits = tablelog._log_commits(table_dir)
     if not commits:
         raise RuntimeError(f"empty state-table log at {table_dir}")
-    return spark.read.parquet(_load_commit(commits[-1])["group"])
+    return spark.read.parquet(tablelog.read_json(commits[-1])["group"])
 
 
 @query("stream_foreachbatch_merge", oracle=_FBM_ORACLE, category="I")
@@ -1692,19 +1340,12 @@ def sdv_read_state(
     (resurrecting every deleted row) once expiry emptied the commit
     listing while the deletes live on in the checkpoint. Law: the MOR
     read is byte-identical before and after DV-log checkpoint+expire."""
-    import glob
-    import os
-
     base = spark.read.parquet(base_dir).select(
         "o_orderkey", "o_totalprice"
     )
-    has_log = glob.glob(
-        os.path.join(dv_log_dir, "commit-*.json")
-    ) or glob.glob(os.path.join(dv_log_dir, "checkpoint-*.json"))
-    if has_log:
-        from dbsuite_spark.etl.loaders import mlog_read_checkpointed
-
-        dvs, _, _ = mlog_read_checkpointed(spark, dv_log_dir)
+    commits = tablelog._log_commits(dv_log_dir)
+    if commits or tablelog._checkpoints(dv_log_dir):
+        dvs, _, _ = tablelog.mlog_read_checkpointed(spark, dv_log_dir)
         base = base.join(
             F.broadcast(dvs.select("o_orderkey")), "o_orderkey", "left_anti"
         )
@@ -1723,7 +1364,7 @@ def stream_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines run: delete-request batches (key lists) arrive as a file
     stream and each micro-batch commits a DELETION VECTOR exactly-once
     through the same atomic commit-log protocol as
-    ``stream_manifest_sink`` (:func:`msink_commit_batch`); the base
+    ``stream_manifest_sink`` (``tablelog.msink_commit_batch``); the base
     table's data files are NEVER rewritten (law-tested: base part-file
     bytes are identical before and after the whole stream), and readers
     see merge-on-read state via :func:`sdv_read_state`.
@@ -1747,8 +1388,6 @@ def stream_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates."""
     import glob
     import os
-
-    from dbsuite_spark.etl.loaders import DV_GROUPS
 
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -1786,7 +1425,9 @@ def stream_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             q = (
                 _read_stream(spark, live, req_schema)
                 .writeStream.foreachBatch(
-                    lambda bdf, bid: msink_commit_batch(dv_log, bdf, bid)
+                    lambda bdf, bid: tablelog.msink_commit_batch(
+                        dv_log, bdf, bid
+                    )
                     and None
                 )
                 .option("checkpointLocation", ckpt)
@@ -1803,7 +1444,7 @@ def stream_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # log double-counts the batch and every log consumer downstream
     # (incremental reads, checkpoints) sees a phantom commit
     replay = spark.read.parquet(os.path.join(live, "part-00000.parquet"))
-    outcome = msink_commit_batch(dv_log, replay, 0)
+    outcome = tablelog.msink_commit_batch(dv_log, replay, 0)
     if outcome != "skipped":
         raise RuntimeError(
             f"replayed delete batch must be skipped, got {outcome}"
@@ -1821,32 +1462,27 @@ def stream_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _tail_cursor(consumer_dir: str) -> int:
     """The consumer's persisted version cursor (0 when none exists) —
     O(1) consumer state, exactly a Kafka consumer-group offset."""
-    import json as _json
     import os
 
     path = os.path.join(consumer_dir, "cursor.json")
     if not os.path.exists(path):
         return 0
-    with open(path) as fh:
-        return _json.load(fh)["offset"]
+    return tablelog.read_json(path)["offset"]
 
 
 def _persist_cursor(consumer_dir: str, offset: int) -> None:
-    """Atomically persist the consumer cursor (write-tmp +
-    ``os.replace``, POSIX-atomic): a crash mid-persist leaves the OLD
-    cursor, and the tail's downstream commits are keyed by upstream
-    version, so re-consuming the range is dedup-skipped — at-least-once
-    cursor persistence + idempotent commits = exactly-once delivery."""
-    import json as _json
+    """Atomically persist the consumer cursor
+    (:func:`~dbsuite_spark.etl.tablelog.publish_json`): a crash
+    mid-persist leaves the OLD cursor, and the tail's downstream commits
+    are keyed by upstream version, so re-consuming the range is
+    dedup-skipped — at-least-once cursor persistence + idempotent
+    commits = exactly-once delivery."""
     import os
-    import uuid
 
     os.makedirs(consumer_dir, exist_ok=True)
-    path = os.path.join(consumer_dir, "cursor.json")
-    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"offset": offset}, fh)
-    os.replace(tmp, path)
+    tablelog.publish_json(
+        os.path.join(consumer_dir, "cursor.json"), {"offset": offset}
+    )
 
 
 def mlog_tail_once(
@@ -1854,7 +1490,7 @@ def mlog_tail_once(
 ) -> int:
     """ONE iteration of the change-feed tail (VERDICT r12 ask #2):
     poll the upstream commit log from the persisted cursor
-    (:func:`~dbsuite_spark.etl.loaders.mlog_poll` — version-cursor
+    (:func:`~dbsuite_spark.etl.tablelog.mlog_poll` — version-cursor
     semantics incl. the offset-out-of-range error when the unread range
     was expired), then re-publish each unread upstream version as ONE
     exactly-once downstream commit keyed by that version. Returns the
@@ -1866,7 +1502,7 @@ def mlog_tail_once(
     make replay safe: a crash between a downstream commit and the
     cursor persist re-consumes from the old cursor, and because each
     batch's content is a pure function of its upstream version, the
-    downstream dedup (:func:`msink_commit_batch` by batch_id) skips
+    downstream dedup (``tablelog.msink_commit_batch`` by batch_id) skips
     every already-delivered version — whereas a whole-poll batch
     re-polled after MORE upstream commits landed would carry different
     content under the same id and silently drop the difference.
@@ -1883,12 +1519,8 @@ def mlog_tail_once(
     JSON. This is the Delta/Iceberg streaming-source model (public:
     their streaming reads tail the transaction log by version) built
     from this repo's own log primitives."""
-    import os
-
-    from dbsuite_spark.etl.loaders import mlog_poll
-
     offset = _tail_cursor(consumer_dir)
-    df, n_new, new_offset = mlog_poll(spark, src_dir, offset)
+    df, n_new, new_offset = tablelog.mlog_poll(spark, src_dir, offset)
     if new_offset == offset:
         return 0  # genuinely caught up
     # new_offset may advance past a df-less range (all compaction
@@ -1896,9 +1528,8 @@ def mlog_tail_once(
     # or a later expiry of the compacted prefix would strand this
     # consumer behind retention for data it never needed
     for v in range(offset, new_offset):
-        path = os.path.join(src_dir, f"commit-{v:05d}.json")
         try:
-            doc = _load_commit(path)
+            doc = tablelog.read_json(tablelog._commit_path(src_dir, v))
         except FileNotFoundError:
             raise RuntimeError(
                 f"tail consumer at offset {v} outrun by retention at "
@@ -1906,8 +1537,9 @@ def mlog_tail_once(
                 "and its read"
             ) from None
         if doc.get("data_change", True):
-            delta = fold_groups(spark, _doc_paths(doc))
-            msink_commit_batch(dst_dir, delta, v)  # keyed by src version
+            delta = tablelog._fold_docs(spark, [doc])
+            # keyed by src version
+            tablelog.msink_commit_batch(dst_dir, delta, v)
         # a data_change=false commit (compaction) rewrites data the
         # feed already delivered — skip it, advance past it (Delta's
         # streaming sources skip dataChange=false files, public)
@@ -1959,15 +1591,7 @@ def stream_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop body is exactly what a Delta/Iceberg streaming source does per
     trigger (tail the log by version), expressed with this repo's
     primitives because PySpark exposes no user Source API."""
-    import glob
-    import os
     import shutil as _shutil
-
-    from dbsuite_spark.etl.loaders import (
-        mlog_checkpoint,
-        mlog_expire_checkpointed,
-        mlog_read_checkpointed,
-    )
 
     src = artifact_path(sf_dir, "logtail_src")
     dst = artifact_path(sf_dir, "logtail_dst")
@@ -1981,7 +1605,7 @@ def stream_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def produce(i: int) -> None:
         if (
-            msink_commit_batch(
+            tablelog.msink_commit_batch(
                 src, events.filter(F.col("event_id") % 6 == i), i
             )
             != "committed"
@@ -1996,19 +1620,19 @@ def stream_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # crash-replay: rewind the cursor to 0 (crash between downstream
     # commit and cursor persist); the re-run must re-deliver nothing
-    n_log = len(glob.glob(os.path.join(dst, "commit-*.json")))
+    n_log = len(tablelog._log_commits(dst))
     _persist_cursor(consumer, 0)
     if mlog_tail_once(spark, src, dst, consumer) != 3:
         raise RuntimeError("rewound tail must re-scan all 3 versions")
-    if len(glob.glob(os.path.join(dst, "commit-*.json"))) != n_log:
+    if len(tablelog._log_commits(dst)) != n_log:
         raise RuntimeError("replayed versions re-committed downstream")
     if _tail_cursor(consumer) != 3:
         raise RuntimeError("replayed tail failed to re-advance cursor")
 
     # bound the upstream log mid-stream: the caught-up consumer's
     # cursor (3) sits past the checkpoint (k=2), so tailing continues
-    mlog_checkpoint(src)
-    if mlog_expire_checkpointed(src) != 3:
+    tablelog.mlog_checkpoint(src)
+    if tablelog.mlog_expire_checkpointed(src) != 3:
         raise RuntimeError("expected upstream prefix to expire")
     if mlog_tail_once(spark, src, dst, consumer) != 0:
         raise RuntimeError("caught-up tail must idle across expiry")
@@ -2020,4 +1644,4 @@ def stream_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     if mlog_tail_once(spark, src, dst, consumer) != 3:
         raise RuntimeError("resumed tail must consume versions 3-5")
 
-    return mlog_read_checkpointed(spark, dst)[0]
+    return tablelog.mlog_read_checkpointed(spark, dst)[0]

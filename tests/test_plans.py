@@ -2067,8 +2067,11 @@ def test_checkpointed_reader_folds_in_one_scan(spark, tmp_path):
     """The commit-log fold is O(1) plan nodes regardless of group count
     (VERDICT r12 ask #5): a 6-group checkpointed read plans exactly ONE
     multi-path FileScan — no per-group scan nodes, no Union chain."""
-    from dbsuite_spark.etl.loaders import mlog_checkpoint, mlog_read_checkpointed
-    from dbsuite_spark.streaming.streams import msink_commit_batch
+    from dbsuite_spark.etl.tablelog import (
+        mlog_checkpoint,
+        mlog_read_checkpointed,
+        msink_commit_batch,
+    )
 
     table = str(tmp_path / "tbl")
     for i in range(6):
@@ -2123,8 +2126,11 @@ def test_clustered_narrow_prune_plans_one_subgroup_scan(spark, tmp_path):
     — the pruned subgroups' paths never reach the optimizer, and the
     fold stays Union-free (the _doc_paths extension preserves the
     round-13 one-multi-path-scan shape)."""
-    from dbsuite_spark.etl.loaders import mlog_compact, mlog_read_pruned_cols
-    from dbsuite_spark.streaming.streams import msink_commit_batch
+    from dbsuite_spark.etl.tablelog import (
+        mlog_compact,
+        mlog_read_pruned_cols,
+        msink_commit_batch,
+    )
 
     table = str(tmp_path / "tbl")
     for i in range(6):

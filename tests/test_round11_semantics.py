@@ -107,7 +107,7 @@ def test_msink_replay_is_skipped_and_log_unchanged(spark, tmp_path):
     """The exactly-once core: re-delivering an already-committed batch
     (Spark's crash-replay) returns 'skipped' and leaves the commit log
     byte-identical — no duplicate version, no duplicate rows."""
-    from dbsuite_spark.streaming.streams import (
+    from dbsuite_spark.etl.tablelog import (
         msink_commit_batch,
         msink_read,
     )
@@ -128,7 +128,7 @@ def test_msink_crash_before_publish_loses_nothing_visible(spark, tmp_path):
     atomic link publishes NO commit record — the reader never sees the
     orphan group, and the batch's eventual replay commits it exactly
     once (overwriting the half-written group harmlessly)."""
-    from dbsuite_spark.streaming.streams import (
+    from dbsuite_spark.etl.tablelog import (
         msink_commit_batch,
         msink_read,
     )
@@ -151,7 +151,7 @@ def test_msink_version_race_rebases_to_next_version(spark, tmp_path):
     concurrent writer won the link), the commit rebases onto the next
     version instead of clobbering or aborting — and a race lost to the
     SAME batch id resolves to 'skipped'."""
-    from dbsuite_spark.streaming.streams import msink_commit_batch
+    from dbsuite_spark.etl.tablelog import msink_commit_batch
 
     table = str(tmp_path / "tbl")
     assert msink_commit_batch(table, _mk_batch(spark, 0, 5), 0) == "committed"
@@ -469,7 +469,7 @@ def test_msink_concurrent_writers_all_commit_exactly_once(spark, tmp_path):
     simulation)."""
     import threading
 
-    from dbsuite_spark.streaming.streams import (
+    from dbsuite_spark.etl.tablelog import (
         msink_commit_batch,
         msink_read,
     )

@@ -58,7 +58,7 @@ def test_claim_same_batch_concurrent_replays_never_crash(spark, tmp_path):
     Exactly one wins, every loser resolves to 'skipped' — no
     FileNotFoundError from a shared tmp file, and the published doc is
     one of the attempts' docs, intact."""
-    from dbsuite_spark.streaming.streams import _try_claim_version
+    from dbsuite_spark.etl.tablelog import _try_claim_version
 
     table = str(tmp_path / "tbl")
     os.makedirs(table)
@@ -94,7 +94,7 @@ def test_msink_same_batch_concurrent_replays_commit_once(spark, tmp_path):
     deliver THE SAME batch (same batch_id, same rows). Whatever the
     interleaving, the log ends with exactly one commit of that batch
     and the fold equals the batch exactly once."""
-    from dbsuite_spark.streaming.streams import msink_commit_batch, msink_read
+    from dbsuite_spark.etl.tablelog import msink_commit_batch, msink_read
 
     table = str(tmp_path / "tbl")
     outcomes: list[str] = []
@@ -126,11 +126,12 @@ def test_mlog_checkpoint_reader_equivalence_and_tail_only(spark, tmp_path):
     fold; (b) after a checkpoint at version k it folds k+1 groups from
     the checkpoint and ONLY the tail from the log; (c) a fresh
     checkpoint empties the tail."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_read_checkpointed,
+        msink_commit_batch,
+        msink_read,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch, msink_read
 
     table = str(tmp_path / "tbl")
     for i in range(4):
@@ -157,11 +158,11 @@ def test_mlog_checkpoint_is_atomic_and_pointer_monotonic(spark, tmp_path):
     checkpoint, concurrent checkpointers all succeed, and a STALE
     checkpointer (one that listed an old log prefix) never rolls the
     pointer backwards."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_read_checkpointed,
+        msink_commit_batch,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch
 
     table = str(tmp_path / "tbl")
     for i in range(3):
@@ -225,12 +226,12 @@ def test_mlog_expire_composes_and_refuses_unfolded(spark, tmp_path):
     expire is a no-op."""
     import pytest
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_read_checkpointed,
+        msink_commit_batch,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch
 
     table = str(tmp_path / "tbl")
     for i in range(5):
@@ -330,10 +331,8 @@ def test_sdv_delete_commits_never_rewrite_base_files(spark, sf_dir):
     a replay of the extra batch is skipped."""
     from pyspark.sql import functions as F
 
-    from dbsuite_spark.streaming.streams import (
-        msink_commit_batch,
-        sdv_read_state,
-    )
+    from dbsuite_spark.etl.tablelog import msink_commit_batch
+    from dbsuite_spark.streaming.streams import sdv_read_state
 
     final = SPECS["stream_dv_delete"].fn(spark, sf_dir)
     n_final = final.count()
@@ -367,8 +366,11 @@ def test_mlog_asof_equals_naive_prefix_fold(spark, tmp_path):
     naive fold of commits 0..V — the checkpoint shortcut never changes
     the reconstructed table, only the planning cost; and the
     (checkpoint, tail) split picks the newest covering checkpoint."""
-    from dbsuite_spark.etl.loaders import mlog_checkpoint, mlog_read_asof
-    from dbsuite_spark.streaming.streams import msink_commit_batch
+    from dbsuite_spark.etl.tablelog import (
+        mlog_checkpoint,
+        mlog_read_asof,
+        msink_commit_batch,
+    )
 
     table = str(tmp_path / "tbl")
     for i in range(7):
@@ -394,12 +396,12 @@ def test_mlog_asof_history_expiry_semantics(spark, tmp_path):
     partial table."""
     import pytest
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_read_asof,
+        msink_commit_batch,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch
 
     table = str(tmp_path / "tbl")
     for i in range(10):
@@ -425,8 +427,11 @@ def test_mlog_asof_pin_is_stable_under_appends(spark, tmp_path):
     identical rows before and after a writer appends more commits and
     checkpoints — immutable commits/checkpoints make the pin stable
     with no locking."""
-    from dbsuite_spark.etl.loaders import mlog_checkpoint, mlog_read_asof
-    from dbsuite_spark.streaming.streams import msink_commit_batch
+    from dbsuite_spark.etl.tablelog import (
+        mlog_checkpoint,
+        mlog_read_asof,
+        msink_commit_batch,
+    )
 
     table = str(tmp_path / "tbl")
     for i in range(4):
@@ -461,13 +466,14 @@ def test_msink_protocol_stays_correct_after_expiry(spark, tmp_path):
     numbering and content."""
     import pytest
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_read_asof,
         mlog_read_checkpointed,
+        msink_commit_batch,
+        msink_read,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch, msink_read
 
     table = str(tmp_path / "tbl")
     for i in range(6):
@@ -526,8 +532,10 @@ def test_mlog_asof_distinguishes_future_from_expired(spark, tmp_path):
     fresh, never-expired log."""
     import pytest
 
-    from dbsuite_spark.etl.loaders import mlog_read_asof
-    from dbsuite_spark.streaming.streams import msink_commit_batch
+    from dbsuite_spark.etl.tablelog import (
+        mlog_read_asof,
+        msink_commit_batch,
+    )
 
     table = str(tmp_path / "tbl")
     for i in range(3):
@@ -543,11 +551,11 @@ def test_mlog_read_checkpointed_refuses_uncovered_gap(spark, tmp_path):
     silently returning a partial table."""
     import pytest
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_read_checkpointed,
+        msink_commit_batch,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch
 
     table = str(tmp_path / "tbl")
     for i in range(5):
@@ -568,8 +576,10 @@ def test_mlog_checkpoint_refuses_gapped_tail_and_is_noop_when_fresh(
     with no new commits is a no-op returning the existing path."""
     import pytest
 
-    from dbsuite_spark.etl.loaders import mlog_checkpoint
-    from dbsuite_spark.streaming.streams import msink_commit_batch
+    from dbsuite_spark.etl.tablelog import (
+        mlog_checkpoint,
+        msink_commit_batch,
+    )
 
     table = str(tmp_path / "tbl")
     for i in range(4):
@@ -595,12 +605,12 @@ def test_mlog_poll_offset_is_version_cursor_with_expiry_contract(
     gets the offset-out-of-range error — never silently skipped data."""
     import pytest
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_poll,
+        msink_commit_batch,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch
 
     table = str(tmp_path / "tbl")
     for i in range(4):
@@ -634,11 +644,11 @@ def test_mlog_read_pruned_equals_unpruned_filter(spark, sf_dir):
     exceeds the total."""
     from pyspark.sql import functions as F
 
-    from dbsuite_spark.etl.loaders import (
-        etl_manifest_ckpt_stats_skip,
+    from dbsuite_spark.etl.tablelog import (
         mlog_read_checkpointed,
         mlog_read_pruned,
     )
+    from dbsuite_spark.etl.loaders import etl_manifest_ckpt_stats_skip
 
     SPECS["etl_manifest_ckpt_stats_skip"].fn(spark, sf_dir).collect()
     table = artifact_path(sf_dir, "ckpt_stats_table")
@@ -677,14 +687,14 @@ def test_commit_log_state_machine_random_walk(spark, tmp_path):
     model added since the last poll."""
     import random
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_poll,
         mlog_read_asof,
         mlog_read_checkpointed,
+        msink_commit_batch,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch
 
     for seed in (7, 23):
         rng = random.Random(seed)
@@ -762,12 +772,12 @@ def test_commit_checkpoint_expire_read_true_concurrency(spark, tmp_path):
     import threading
     import time
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_read_checkpointed,
+        msink_commit_batch,
     )
-    from dbsuite_spark.streaming.streams import msink_commit_batch
 
     table = str(tmp_path / "tbl")
     # seed one batch so readers always have something to fold

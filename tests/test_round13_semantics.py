@@ -22,7 +22,7 @@ import os
 
 import pytest
 
-from dbsuite_spark.streaming import streams
+from dbsuite_spark.etl import tablelog
 
 
 def _mk_batch(spark, n0: int, n1: int):
@@ -43,12 +43,12 @@ def _mk_orders(spark, lo: int, hi: int):
 
 
 def _vanishing_load(monkeypatch, victim_suffix: str):
-    """Patch streams._load_commit so the FIRST load of the record whose
+    """Patch tablelog.read_json so the FIRST load of the record whose
     path ends with ``victim_suffix`` deletes it out-of-band first — the
     deterministic re-creation of a concurrent expirer (or the winner's
     own relocation) claiming the record between the loser's failed
-    os.link and its _load_commit."""
-    real = streams._load_commit
+    os.link and its read_json."""
+    real = tablelog.read_json
     state = {"fired": False}
 
     def load(path):
@@ -57,7 +57,7 @@ def _vanishing_load(monkeypatch, victim_suffix: str):
             os.remove(path)
         return real(path)
 
-    monkeypatch.setattr(streams, "_load_commit", load)
+    monkeypatch.setattr(tablelog, "read_json", load)
     return state
 
 
@@ -68,17 +68,17 @@ def test_claim_loser_skips_when_vanished_winner_was_its_own_batch(
     expired before the loser can read it: the batch IS folded in the
     newest checkpoint, so the loser must resolve to 'skipped' — a
     'lost' here would double-commit the batch at the next version."""
-    from dbsuite_spark.etl.loaders import mlog_checkpoint
+    from dbsuite_spark.etl.tablelog import mlog_checkpoint
 
     table = str(tmp_path / "tbl")
     assert (
-        streams.msink_commit_batch(table, _mk_batch(spark, 0, 10), 7)
+        tablelog.msink_commit_batch(table, _mk_batch(spark, 0, 10), 7)
         == "committed"
     )
     mlog_checkpoint(table)  # batch 7 now folded — expiry-eligible
 
     state = _vanishing_load(monkeypatch, "commit-00000.json")
-    out = streams._try_claim_version(
+    out = tablelog._try_claim_version(
         table, 0, {"batch_id": 7, "group": "unused"}, 7
     )
     assert state["fired"], "the race window was never exercised"
@@ -93,14 +93,14 @@ def test_claim_loser_loses_when_vanished_winner_was_foreign(
     """Foreign-batch variant: the vanished winner belonged to batch 7,
     the claimant is batch 99 (nowhere in checkpoint or log) — the claim
     resolves to 'lost' so the caller re-claims a higher slot."""
-    from dbsuite_spark.etl.loaders import mlog_checkpoint
+    from dbsuite_spark.etl.tablelog import mlog_checkpoint
 
     table = str(tmp_path / "tbl")
-    streams.msink_commit_batch(table, _mk_batch(spark, 0, 10), 7)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 0, 10), 7)
     mlog_checkpoint(table)
 
     state = _vanishing_load(monkeypatch, "commit-00000.json")
-    out = streams._try_claim_version(
+    out = tablelog._try_claim_version(
         table, 0, {"batch_id": 99, "group": "unused"}, 99
     )
     assert state["fired"]
@@ -115,8 +115,8 @@ def test_claim_loser_skips_when_vanished_winner_relocated(
     msink_commit_batch's post-link relocation produces) — the loser
     must find it in the surviving-log scan and skip."""
     table = str(tmp_path / "tbl")
-    streams.msink_commit_batch(table, _mk_batch(spark, 0, 10), 7)
-    streams.msink_commit_batch(table, _mk_batch(spark, 10, 20), 8)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 0, 10), 7)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 10, 20), 8)
     # hand-relocate batch 7's record from version 0 to version 2
     os.rename(
         os.path.join(table, "commit-00000.json"),
@@ -129,7 +129,7 @@ def test_claim_loser_skips_when_vanished_winner_relocated(
     with open(os.path.join(table, "commit-00000.json"), "w") as fh:
         json.dump({"batch_id": 7, "group": "stale"}, fh)
     state = _vanishing_load(monkeypatch, "commit-00000.json")
-    out = streams._try_claim_version(
+    out = tablelog._try_claim_version(
         table, 0, {"batch_id": 7, "group": "unused"}, 7
     )
     assert state["fired"]
@@ -147,7 +147,7 @@ def test_expire_suppresses_concurrently_vanished_records(
     own removals — previously an unguarded os.remove crashed with
     FileNotFoundError, a window the true-concurrency stress's expirer
     (which catches only RuntimeError) would have failed on."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_read_checkpointed,
@@ -155,12 +155,12 @@ def test_expire_suppresses_concurrently_vanished_records(
 
     table = str(tmp_path / "tbl")
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     mlog_checkpoint(table)  # k=2: all three records expiry-eligible
 
-    real_list = streams._log_commits
+    real_list = tablelog._log_commits
     state = {"raced": False}
 
     def list_then_racer_steals_one(table_dir):
@@ -170,11 +170,11 @@ def test_expire_suppresses_concurrently_vanished_records(
             os.remove(out[0])  # the concurrent expirer wins record 0
         return out
 
-    monkeypatch.setattr(streams, "_log_commits", list_then_racer_steals_one)
+    monkeypatch.setattr(tablelog, "_log_commits", list_then_racer_steals_one)
     assert mlog_expire_checkpointed(table) == 2  # ours, not the stolen one
     assert state["raced"]
     monkeypatch.undo()
-    assert streams._log_commits(table) == []
+    assert tablelog._log_commits(table) == []
     df, n_cp, n_tail = mlog_read_checkpointed(spark, table)
     assert (n_cp, n_tail) == (3, 0)
     assert df.count() == 30
@@ -188,7 +188,7 @@ def test_poll_lagging_consumer_errors_even_on_empty_tail(spark, tmp_path):
     offset BELOW the checkpoint must raise offset-out-of-range (its
     unread commits were folded away) — not return the caught-up None.
     A consumer exactly at checkpoint+1 is genuinely caught up."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_poll,
@@ -196,7 +196,7 @@ def test_poll_lagging_consumer_errors_even_on_empty_tail(spark, tmp_path):
 
     table = str(tmp_path / "tbl")
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     mlog_checkpoint(table)  # k=2
@@ -208,7 +208,7 @@ def test_poll_lagging_consumer_errors_even_on_empty_tail(spark, tmp_path):
     assert mlog_poll(spark, table, 3) == (None, 0, 3)
 
     # the log coming back to life changes nothing for the laggard
-    streams.msink_commit_batch(table, _mk_batch(spark, 30, 40), 3)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 30, 40), 3)
     with pytest.raises(RuntimeError, match="out of range"):
         mlog_poll(spark, table, 1)
     df, n_new, offset = mlog_poll(spark, table, 3)
@@ -224,7 +224,7 @@ def test_pruned_read_treats_missing_stats_as_unprunable(spark, tmp_path):
     EVERY probe range (absent metadata can't justify skipping data),
     and it must not KeyError the planner. Verified live, after a
     checkpoint (stats-less docs fold verbatim), and after expiry."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
         mlog_read_pruned,
@@ -232,7 +232,7 @@ def test_pruned_read_treats_missing_stats_as_unprunable(spark, tmp_path):
 
     table = str(tmp_path / "tbl")
     for i, stats in ((0, True), (1, True), (2, False)):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table,
             _mk_orders(spark, i * 10, i * 10 + 10),
             i,
@@ -274,7 +274,7 @@ def test_pruned_cols_equals_unpruned_filter_two_columns(spark, sf_dir):
     from pyspark.sql import functions as F
 
     import dbsuite_spark
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_read_checkpointed,
         mlog_read_pruned_cols,
     )
@@ -323,7 +323,7 @@ def test_tail_fresh_consumer_behind_retention_errors(spark, tmp_path):
     prefix was checkpointed and expired must get the honest
     offset-out-of-range error — never silently start from a partial
     view; a consumer whose cursor is past the checkpoint keeps tailing."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
     )
@@ -336,7 +336,7 @@ def test_tail_fresh_consumer_behind_retention_errors(spark, tmp_path):
     dst = str(tmp_path / "dst")
     cur = str(tmp_path / "consumer")
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             src, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     assert mlog_tail_once(spark, src, dst, cur) == 3
@@ -349,7 +349,7 @@ def test_tail_fresh_consumer_behind_retention_errors(spark, tmp_path):
 
     # the caught-up consumer tails on across the expiry
     assert mlog_tail_once(spark, src, dst, cur) == 0
-    streams.msink_commit_batch(src, _mk_batch(spark, 30, 40), 3)
+    tablelog.msink_commit_batch(src, _mk_batch(spark, 30, 40), 3)
     assert mlog_tail_once(spark, src, dst, cur) == 1
     assert _tail_cursor(cur) == 4
 
@@ -370,11 +370,11 @@ def test_tail_outrun_by_retention_mid_walk_is_honest_error(
     dst = str(tmp_path / "dst")
     cur = str(tmp_path / "consumer")
     for i in range(2):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             src, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
 
-    real = streams._load_commit
+    real = tablelog.read_json
     state = {"n": 0}
 
     def second_access_vanishes(path):
@@ -384,7 +384,7 @@ def test_tail_outrun_by_retention_mid_walk_is_honest_error(
                 os.remove(path)
         return real(path)
 
-    monkeypatch.setattr(streams, "_load_commit", second_access_vanishes)
+    monkeypatch.setattr(tablelog, "read_json", second_access_vanishes)
     with pytest.raises(RuntimeError, match="outrun by retention"):
         mlog_tail_once(spark, src, dst, cur)
     assert state["n"] == 2
@@ -401,7 +401,7 @@ def test_tail_redundant_consumers_stay_exactly_once(spark, tmp_path):
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     for i in range(4):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             src, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     assert (
@@ -413,7 +413,7 @@ def test_tail_redundant_consumers_stay_exactly_once(spark, tmp_path):
     assert len(glob.glob(os.path.join(dst, "commit-*.json"))) == 4
     got = sorted(
         r["event_id"]
-        for r in streams.msink_read(spark, dst).collect()
+        for r in tablelog.msink_read(spark, dst).collect()
     )
     assert got == list(range(40))
 
@@ -431,7 +431,7 @@ def test_sdv_read_identical_across_dv_log_checkpoint_and_expiry(
     expired log; the old commit-glob liveness test was worse — with the
     commit listing empty it read the base VERBATIM, resurrecting every
     deleted row."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
     )
@@ -443,7 +443,7 @@ def test_sdv_read_identical_across_dv_log_checkpoint_and_expiry(
     for i in range(3):  # delete keys % 10 == i, one DV commit each
         dv = spark.range(i, 100, 10).selectExpr("id AS o_orderkey")
         assert (
-            streams.msink_commit_batch(dv_log, dv, i) == "committed"
+            tablelog.msink_commit_batch(dv_log, dv, i) == "committed"
         )
 
     def keys():
@@ -462,8 +462,8 @@ def test_sdv_read_identical_across_dv_log_checkpoint_and_expiry(
 
     # post-expiry deletes keep composing through the checkpointed read
     dv = spark.range(3, 100, 10).selectExpr("id AS o_orderkey")
-    assert streams.msink_commit_batch(dv_log, dv, 3) == "committed"
-    assert streams.msink_commit_batch(dv_log, dv, 3) == "skipped"
+    assert tablelog.msink_commit_batch(dv_log, dv, 3) == "committed"
+    assert tablelog.msink_commit_batch(dv_log, dv, 3) == "skipped"
     assert keys() == [k for k in range(100) if k % 10 > 3]
 
 
@@ -471,11 +471,11 @@ def test_pruned_read_refuses_uncovered_gap(spark, tmp_path):
     """The pruned read shares its siblings' gap-checked resolution: an
     expired commit with no covering checkpoint is an honest error,
     never a silently partial (and silently mis-pruned) table."""
-    from dbsuite_spark.etl.loaders import mlog_read_pruned
+    from dbsuite_spark.etl.tablelog import mlog_read_pruned
 
     table = str(tmp_path / "tbl")
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table,
             _mk_orders(spark, i * 10, i * 10 + 10),
             i,
@@ -499,7 +499,7 @@ def test_compact_preserves_every_reader_and_history(spark, tmp_path):
     rows from ONE live group; an as-of pin BEFORE the compaction still
     folds the originals; appends compose afterward without rewrites;
     and a second compaction folds (compacted + appends) again."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_compact,
         mlog_read_asof,
         mlog_read_checkpointed,
@@ -508,13 +508,13 @@ def test_compact_preserves_every_reader_and_history(spark, tmp_path):
 
     table = str(tmp_path / "tbl")
     for i in range(4):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     want = list(range(40))
     assert mlog_compact(spark, table) == 4
 
-    assert _fold_keys(spark, streams.msink_read(spark, table)) == want
+    assert _fold_keys(spark, tablelog.msink_read(spark, table)) == want
     df, _, _ = mlog_read_checkpointed(spark, table)
     assert _fold_keys(spark, df) == want
     pruned, n_live = mlog_read_pruned_cols(
@@ -532,7 +532,7 @@ def test_compact_preserves_every_reader_and_history(spark, tmp_path):
     assert _fold_keys(spark, asof_df2) == want
 
     # appends compose; a second OPTIMIZE folds compacted + appends
-    streams.msink_commit_batch(table, _mk_batch(spark, 40, 50), 4)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 40, 50), 4)
     _, n_live = mlog_read_pruned_cols(
         spark, table, {"event_id": (0, 1 << 62)}
     )
@@ -550,20 +550,22 @@ def test_racing_compactions_resolve_deterministically(spark, tmp_path):
     read-time resolution voids the HIGHER version (its group duplicates
     data the earlier one superseded) — the fold never double-counts,
     with no write-side coordination."""
-    from dbsuite_spark.etl.loaders import mlog_compact
-    from dbsuite_spark.streaming.streams import _live_docs
+    from dbsuite_spark.etl.tablelog import (
+        _live_docs,
+        mlog_compact,
+    )
 
     table = str(tmp_path / "tbl")
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
-    snapshot = streams.msink_read(spark, table)  # both racers fold this
+    snapshot = tablelog.msink_read(spark, table)  # both racers fold this
     assert mlog_compact(spark, table) == 3  # winner at version 3
     # the losing racer, which resolved the SAME targets before the
     # winner landed, now publishes its own duplicate rewrite
     assert (
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table,
             snapshot,
             "compact-loser",
@@ -571,12 +573,12 @@ def test_racing_compactions_resolve_deterministically(spark, tmp_path):
         )
         == "committed"
     )
-    assert _fold_keys(spark, streams.msink_read(spark, table)) == list(
+    assert _fold_keys(spark, tablelog.msink_read(spark, table)) == list(
         range(30)
     ), "racing compactions double-counted the fold"
     docs = [
-        {"version": streams._commit_version(c), **streams._load_commit(c)}
-        for c in streams._log_commits(table)
+        {"version": tablelog._commit_version(c), **tablelog.read_json(c)}
+        for c in tablelog._log_commits(table)
     ]
     live = _live_docs(docs)
     assert [d["version"] for d in live] == [3], "loser must be void"
@@ -587,7 +589,7 @@ def test_change_feed_skips_compaction_rewrites(spark, tmp_path):
     tail advances its cursor past the compaction without a downstream
     commit, a poll reports it as zero new data, and a post-compaction
     append flows through normally — downstream stays exactly-once."""
-    from dbsuite_spark.etl.loaders import mlog_compact, mlog_poll
+    from dbsuite_spark.etl.tablelog import mlog_compact, mlog_poll
     from dbsuite_spark.streaming.streams import (
         _tail_cursor,
         mlog_tail_once,
@@ -597,7 +599,7 @@ def test_change_feed_skips_compaction_rewrites(spark, tmp_path):
     dst = str(tmp_path / "dst")
     cur = str(tmp_path / "consumer")
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             src, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     assert mlog_tail_once(spark, src, dst, cur) == 3
@@ -609,9 +611,9 @@ def test_change_feed_skips_compaction_rewrites(spark, tmp_path):
     assert _tail_cursor(cur) == 4, "cursor must advance past OPTIMIZE"
     assert len(glob.glob(os.path.join(dst, "commit-*.json"))) == 3
 
-    streams.msink_commit_batch(src, _mk_batch(spark, 30, 40), 3)
+    tablelog.msink_commit_batch(src, _mk_batch(spark, 30, 40), 3)
     assert mlog_tail_once(spark, src, dst, cur) == 1
-    got = _fold_keys(spark, streams.msink_read(spark, dst))
+    got = _fold_keys(spark, tablelog.msink_read(spark, dst))
     assert got == list(range(40)), "feed lost or doubled rows"
 
 
@@ -621,7 +623,7 @@ def test_compact_then_checkpoint_expire_reads_identical(spark, tmp_path):
     checkpoint carries the replaces-resolution inputs verbatim), while
     pins into the expired pre-compaction history raise the honest
     reconstruction error."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
@@ -631,7 +633,7 @@ def test_compact_then_checkpoint_expire_reads_identical(spark, tmp_path):
 
     table = str(tmp_path / "tbl")
     for i in range(4):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     assert mlog_compact(spark, table) == 4
@@ -652,7 +654,7 @@ def test_compaction_merges_stats_and_keeps_pruning(spark, tmp_path):
     OPTIMIZE: a probe beyond the compacted interval scans only the
     post-compaction append; a target WITHOUT stats poisons the merge
     (the compacted doc carries none — unprunable, never mis-pruned)."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_compact,
         mlog_read_pruned_cols,
     )
@@ -664,14 +666,14 @@ def test_compaction_merges_stats_and_keeps_pruning(spark, tmp_path):
 
     table = str(tmp_path / "tbl")
     for i in range(2):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table,
             orders_slice(i * 10, i * 10 + 10),
             i,
             stats={"o_orderkey": {"min": i * 10, "max": i * 10 + 9}},
         )
     assert mlog_compact(spark, table) == 2
-    streams.msink_commit_batch(
+    tablelog.msink_commit_batch(
         table,
         orders_slice(100, 110),
         2,
@@ -693,13 +695,13 @@ def test_compaction_merges_stats_and_keeps_pruning(spark, tmp_path):
 
     # stats-less target → merge yields no stats → unprunable compacted
     table2 = str(tmp_path / "tbl2")
-    streams.msink_commit_batch(
+    tablelog.msink_commit_batch(
         table2,
         orders_slice(0, 10),
         0,
         stats={"o_orderkey": {"min": 0, "max": 9}},
     )
-    streams.msink_commit_batch(table2, orders_slice(10, 20), 1)  # no stats
+    tablelog.msink_commit_batch(table2, orders_slice(10, 20), 1)  # no stats
     assert mlog_compact(spark, table2) == 2
     df, n = mlog_read_pruned_cols(
         spark, table2, {"o_orderkey": (1000, 2000)}
@@ -717,7 +719,7 @@ def test_vacuum_never_deletes_pinnable_history(spark, tmp_path):
     keep every one; after checkpoint+expire removes the records, the
     same groups are unreachable and vacuum reclaims them, with the head
     read byte-stable throughout."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
@@ -728,7 +730,7 @@ def test_vacuum_never_deletes_pinnable_history(spark, tmp_path):
 
     table = str(tmp_path / "tbl")
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     assert mlog_compact(spark, table) == 3
@@ -753,11 +755,13 @@ def test_vacuum_retention_guard_keeps_young_dirs(spark, tmp_path):
     uncommitted group younger than min_age_s survives the vacuum (it is
     indistinguishable from a write racing toward its commit link); with
     the guard at 0 — an explicit maintenance window — it is reclaimed."""
-    from dbsuite_spark.etl.loaders import mlog_vacuum
-    from dbsuite_spark.streaming.streams import _attempt_path
+    from dbsuite_spark.etl.tablelog import (
+        _attempt_path,
+        mlog_vacuum,
+    )
 
     table = str(tmp_path / "tbl")
-    streams.msink_commit_batch(table, _mk_batch(spark, 0, 10), 0)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 0, 10), 0)
     orphan = _attempt_path(table, "group", 42)
     _mk_batch(spark, 90, 95).write.parquet(orphan)
 
@@ -765,7 +769,7 @@ def test_vacuum_retention_guard_keeps_young_dirs(spark, tmp_path):
     assert os.path.isdir(orphan)
     assert mlog_vacuum(table, min_age_s=0) == (1, 1)
     assert not os.path.isdir(orphan)
-    assert _fold_keys(spark, streams.msink_read(spark, table)) == list(
+    assert _fold_keys(spark, tablelog.msink_read(spark, table)) == list(
         range(10)
     )
 
@@ -789,7 +793,7 @@ def test_commit_compact_vacuum_read_true_concurrency(spark, tmp_path):
     import threading
     import time
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
@@ -798,14 +802,14 @@ def test_commit_compact_vacuum_read_true_concurrency(spark, tmp_path):
     )
 
     table = str(tmp_path / "tbl")
-    streams.msink_commit_batch(table, _mk_batch(spark, 0, 10), 0)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 0, 10), 0)
     errors: list[Exception] = []
     done = threading.Event()
 
     def committer(ids):
         try:
             for b in ids:
-                streams.msink_commit_batch(
+                tablelog.msink_commit_batch(
                     table, _mk_batch(spark, b * 10, b * 10 + 10), b
                 )
         except Exception as exc:
@@ -890,9 +894,9 @@ def test_commit_compact_vacuum_read_true_concurrency(spark, tmp_path):
     # OPTIMIZE + checkpoint + expire makes the previous live set dead
     # deterministically (its records all expire); vacuum must reclaim
     # it while the fold stays byte-stable
-    from dbsuite_spark.etl.loaders import mlog_expire_old_checkpoints
+    from dbsuite_spark.etl.tablelog import mlog_expire_old_checkpoints
 
-    streams.msink_commit_batch(table, _mk_batch(spark, 130, 140), 13)
+    tablelog.msink_commit_batch(table, _mk_batch(spark, 130, 140), 13)
     assert mlog_compact(spark, table) >= 2
     mlog_checkpoint(table)
     assert mlog_expire_checkpointed(table) >= 1
@@ -912,7 +916,7 @@ def test_checkpoint_retention_retires_historical_pins(spark, tmp_path):
     retention even with all records expired — afterwards raises the
     honest reconstruction error, and vacuum can then reclaim groups
     that were live only at the retired pins."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
@@ -924,7 +928,7 @@ def test_checkpoint_retention_retires_historical_pins(spark, tmp_path):
 
     table = str(tmp_path / "tbl")
     for i in range(2):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, _mk_batch(spark, i * 10, i * 10 + 10), i
         )
     mlog_checkpoint(table)  # cp@1
@@ -966,7 +970,7 @@ def test_round13_protocol_state_machine_random_walk(spark, tmp_path):
     log head reconstructs the model."""
     import random
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
@@ -1005,7 +1009,7 @@ def test_round13_protocol_state_machine_random_walk(spark, tmp_path):
             if op == "commit" or (op == "replay" and not model):
                 lo = next_id * 10
                 assert (
-                    streams.msink_commit_batch(
+                    tablelog.msink_commit_batch(
                         table, _mk_batch(spark, lo, lo + 10), next_id
                     )
                     == "committed"
@@ -1014,7 +1018,7 @@ def test_round13_protocol_state_machine_random_walk(spark, tmp_path):
                 next_id += 1
             elif op == "replay":
                 bid = rng.choice(list(model))
-                out = streams.msink_commit_batch(
+                out = tablelog.msink_commit_batch(
                     table, _mk_batch(spark, bid * 10, bid * 10 + 10), bid
                 )
                 assert out == "skipped", (
@@ -1051,7 +1055,7 @@ def test_round13_protocol_state_machine_random_walk(spark, tmp_path):
                 f"seed {seed} step {step}: consumer missed rows"
             )
 
-        from dbsuite_spark.streaming.streams import (
+        from dbsuite_spark.etl.tablelog import (
             _checkpoint_state,
             _commit_version,
             _log_commits,
@@ -1074,7 +1078,7 @@ def _commit_slices(spark, table: str, n: int, mod: int = None):
     mod = mod or n
     full = _mk_orders(spark, 0, n * 10)
     for i in range(n):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table,
             full.filter(f"o_orderkey % {mod} = {i}"),
             i,
@@ -1088,7 +1092,7 @@ def test_clustered_compact_equals_plain_read_everywhere(spark, tmp_path):
     (full-log, checkpointed, pruned-unbounded) returns the identical
     row multiset after ``cluster_by``, and the commit carries the
     range-disjoint subgroups it promises."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_compact,
         mlog_read_checkpointed,
         mlog_read_pruned_cols,
@@ -1104,7 +1108,7 @@ def test_clustered_compact_equals_plain_read_everywhere(spark, tmp_path):
     assert (
         sorted(
             r["o_orderkey"]
-            for r in streams.msink_read(spark, table).collect()
+            for r in tablelog.msink_read(spark, table).collect()
         )
         == expected
     )
@@ -1116,7 +1120,7 @@ def test_clustered_compact_equals_plain_read_everywhere(spark, tmp_path):
     assert sorted(r["o_orderkey"] for r in pdf.collect()) == expected
     assert n == 4  # all four range-disjoint subgroups scanned
 
-    doc = streams._load_commit(
+    doc = tablelog.read_json(
         os.path.join(table, "commit-00006.json")
     )
     subs = doc["subgroups"]
@@ -1135,7 +1139,7 @@ def test_clustered_pruning_equals_filtering(spark, tmp_path):
     semantics change: for in-bucket, boundary-straddling, empty, and
     unbounded predicates the pruned read is row-identical to filtering
     the full table, with the unit count bounded by the clustering."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_compact,
         mlog_read_pruned_cols,
     )
@@ -1167,7 +1171,7 @@ def test_cluster_stats_omission_is_conservative(spark, tmp_path):
     import datetime
     import decimal
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         _stat_jsonable,
         mlog_compact,
         mlog_read_pruned_cols,
@@ -1190,11 +1194,11 @@ def test_cluster_stats_omission_is_conservative(spark, tmp_path):
         "CAST(o_totalprice AS DECIMAL(10,2)) AS price_dec",
     )
     for i in range(3):
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table, full.filter(f"o_orderkey % 3 = {i}"), i
         )
     mlog_compact(spark, table, cluster_by=["price_dec"], n_groups=4)
-    doc = streams._load_commit(os.path.join(table, "commit-00003.json"))
+    doc = tablelog.read_json(os.path.join(table, "commit-00003.json"))
     assert all("stats" not in s for s in doc["subgroups"])
     pdf, n = mlog_read_pruned_cols(
         spark, table, {"o_orderkey": (10, 20)}
@@ -1209,7 +1213,7 @@ def test_restore_equals_asof_at_every_version(spark, tmp_path):
     """``mlog_restore(v)`` then a head read ≡ ``mlog_read_asof(v)`` —
     for every version, including repeated restores and restoring to a
     version that is itself AFTER an earlier restore."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_read_asof,
         mlog_restore,
     )
@@ -1220,7 +1224,7 @@ def test_restore_equals_asof_at_every_version(spark, tmp_path):
     def head_rows():
         return sorted(
             r["o_orderkey"]
-            for r in streams.msink_read(spark, table).collect()
+            for r in tablelog.msink_read(spark, table).collect()
         )
 
     snapshots = {}
@@ -1246,7 +1250,7 @@ def test_restore_survives_checkpoint_expire_vacuum(spark, tmp_path):
     must keep every directory the restore re-pinned (the needed set
     walks _doc_paths roots) and free exactly the unreachable ones;
     the checkpointed read stays byte-stable throughout."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
@@ -1278,7 +1282,7 @@ def test_restore_racing_replacer_is_void(spark, tmp_path):
     """A restore and a compaction racing over the same live set
     resolve like racing compactions: the higher version is void at
     read time, deterministically, with zero write-side coordination."""
-    from dbsuite_spark.etl.loaders import mlog_restore
+    from dbsuite_spark.etl.tablelog import mlog_restore
 
     table = str(tmp_path / "t")
     full = _commit_slices(spark, table, 4)
@@ -1286,7 +1290,7 @@ def test_restore_racing_replacer_is_void(spark, tmp_path):
     # the racing compaction loses: lands at version 5 replacing the
     # same live set {0,1,2,3} — every target already claimed → void
     assert (
-        streams.msink_commit_batch(
+        tablelog.msink_commit_batch(
             table,
             full,
             "compact-racing-loser",
@@ -1298,7 +1302,7 @@ def test_restore_racing_replacer_is_void(spark, tmp_path):
         == "committed"
     )
     got = sorted(
-        r["o_orderkey"] for r in streams.msink_read(spark, table).collect()
+        r["o_orderkey"] for r in tablelog.msink_read(spark, table).collect()
     )
     assert got == sorted(k for k in range(40) if k % 4 in (0, 1, 2))
 
@@ -1308,7 +1312,7 @@ def test_feed_redelivers_restored_snapshot_exactly_once(spark, tmp_path):
     data_change=true, so the poll DELIVERS the restored snapshot
     (downstream sees the rewind as new rows — Delta CDF semantics);
     the cursor advances and a second poll is empty."""
-    from dbsuite_spark.etl.loaders import mlog_poll, mlog_restore
+    from dbsuite_spark.etl.tablelog import mlog_poll, mlog_restore
 
     table = str(tmp_path / "t")
     _commit_slices(spark, table, 4)
@@ -1328,7 +1332,7 @@ def test_restore_honest_errors(spark, tmp_path):
     past the head 'does not exist'; a version whose history expired
     past retention is 'no longer reconstructable' — never a silent
     partial snapshot."""
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
@@ -1356,18 +1360,16 @@ def test_restore_cluster_state_machine_walk(spark, tmp_path):
     folded batches still skip."""
     import random
 
-    from dbsuite_spark.etl.loaders import (
+    from dbsuite_spark.etl.tablelog import (
+        _checkpoint_state,
+        _commit_version,
+        _log_commits,
         mlog_checkpoint,
         mlog_compact,
         mlog_expire_checkpointed,
         mlog_read_checkpointed,
         mlog_restore,
         mlog_vacuum,
-    )
-    from dbsuite_spark.streaming.streams import (
-        _checkpoint_state,
-        _commit_version,
-        _log_commits,
     )
 
     def head(table):
@@ -1405,7 +1407,7 @@ def test_restore_cluster_state_machine_walk(spark, tmp_path):
             if op == "commit" or (op == "replay" and not model):
                 lo = next_id * 10
                 assert (
-                    streams.msink_commit_batch(
+                    tablelog.msink_commit_batch(
                         table, _mk_orders(spark, lo, lo + 10), next_id
                     )
                     == "committed"
@@ -1416,7 +1418,7 @@ def test_restore_cluster_state_machine_walk(spark, tmp_path):
                 history[head(table)] = dict(model)
             elif op == "replay":
                 bid = rng.choice(sorted(committed))
-                out = streams.msink_commit_batch(
+                out = tablelog.msink_commit_batch(
                     table, _mk_orders(spark, bid * 10, bid * 10 + 10), bid
                 )
                 assert out == "skipped", (
@@ -1472,24 +1474,24 @@ def test_clustered_compact_empty_and_collision_guards(spark, tmp_path):
     doc with ZERO subgroups would make every fold an empty path list;
     (b) a table that already carries the '_cb' scratch column is
     refused, never silently clobbered."""
-    from dbsuite_spark.etl.loaders import mlog_compact
+    from dbsuite_spark.etl.tablelog import mlog_compact
 
     table = str(tmp_path / "empty")
     empty = _mk_orders(spark, 0, 10).filter("o_orderkey < 0")
-    streams.msink_commit_batch(table, empty, 0)
-    streams.msink_commit_batch(table, empty, 1)
+    tablelog.msink_commit_batch(table, empty, 0)
+    tablelog.msink_commit_batch(table, empty, 1)
     assert mlog_compact(
         spark, table, cluster_by=["o_orderkey"], n_groups=4
     ) == 2
-    doc = streams._load_commit(os.path.join(table, "commit-00002.json"))
+    doc = tablelog.read_json(os.path.join(table, "commit-00002.json"))
     assert "subgroups" not in doc  # plain fallback, readable group
-    assert streams.msink_read(spark, table).count() == 0
+    assert tablelog.msink_read(spark, table).count() == 0
 
     table2 = str(tmp_path / "collide")
     clash = _mk_orders(spark, 0, 20).selectExpr("o_orderkey", "1 AS _cb")
-    streams.msink_commit_batch(table2, clash, 0)
-    streams.msink_commit_batch(table2, clash.filter("o_orderkey<5"), 1)
+    tablelog.msink_commit_batch(table2, clash, 0)
+    tablelog.msink_commit_batch(table2, clash.filter("o_orderkey<5"), 1)
     with pytest.raises(RuntimeError, match="_cb"):
         mlog_compact(spark, table2, cluster_by=["o_orderkey"], n_groups=2)
     # the failed rewrite published nothing: the table is unchanged
-    assert streams.msink_read(spark, table2).count() == 25
+    assert tablelog.msink_read(spark, table2).count() == 25
