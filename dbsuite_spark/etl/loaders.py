@@ -18,6 +18,7 @@ Scale design:
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -678,46 +679,36 @@ FROM orders WHERE o_orderstatus <> 'F'
 def etl_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot versioning with AS-OF reads on plain Parquet — the
     poor-man's Delta/Iceberg this environment permits (no table-format
-    package installable; documented in SURVEY §7.4#7), built from the
-    two primitives those formats actually rest on: immutable versioned
-    data directories and an ATOMICALLY swapped manifest pointer
-    (written to a temp file, then ``os.replace`` — POSIX-atomic, so a
-    concurrent reader sees the old or the new manifest, never a torn
-    one). Version 0 is the full orders snapshot; version 1 applies a
-    delete batch (open 'F'-status orders retired). The key reads BOTH
-    versions back through the manifest — the time-travel query a 100 TB
-    deployment runs for audits and reproducible training snapshots —
-    and reduces each to (n_rows, decimal-exact total).
-
-    What this does NOT give (and Delta would): conflict detection for
-    concurrent WRITERS and file-level pruning stats. The read path,
-    version pinning, and atomic pointer swap are the real semantics.
+    package installable; documented in SURVEY §7.4#7), as a scenario
+    over the table commit log (:mod:`dbsuite_spark.etl.tablelog`):
+    immutable file groups made live by atomically linked commit
+    records. Version 0 is the full orders snapshot; version 1 applies a
+    delete batch (open 'F'-status orders retired) as a snapshot that
+    ``replaces`` version 0. The key reads BOTH versions back with
+    :func:`~dbsuite_spark.etl.tablelog.mlog_read_asof` — the
+    time-travel query a 100 TB deployment runs for audits and
+    reproducible training snapshots — and reduces each to (n_rows,
+    decimal-exact total).
 
     Scale: snapshots are written once per version (immutable); the
-    as-of read is an ordinary pruned Parquet scan of that version's
-    directory — no merge-on-read cost for this copy-on-write layout."""
+    as-of read resolves one commit record per version and is an
+    ordinary pruned Parquet scan of that version's group — no
+    merge-on-read cost for this copy-on-write layout."""
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = artifact_path(sf_dir, "tt_orders/manifest.json")
-    tt_dir = os.path.dirname(root)
-    v0 = os.path.join(tt_dir, "v0")
-    v1 = os.path.join(tt_dir, "v1")
-    base.write.mode("overwrite").parquet(v0)
-    base.filter(F.col("o_orderstatus") != "F").write.mode(
-        "overwrite"
-    ).parquet(v1)
-    tablelog.publish_json(
-        root, {"current": 1, "versions": {"0": v0, "1": v1}}
+    tt_dir = artifact_path(sf_dir, "tt_orders")
+    shutil.rmtree(tt_dir, ignore_errors=True)  # idempotent re-run
+    tablelog.msink_commit_batch(tt_dir, base, 0)
+    tablelog.msink_commit_batch(
+        tt_dir,
+        base.filter(F.col("o_orderstatus") != "F"),
+        1,
+        extra_doc={"replaces": [0]},
     )
 
-    manifest = tablelog.read_json(root)
-
-    def read_version(v: int) -> DataFrame:
-        return spark.read.parquet(manifest["versions"][str(v)])
-
     frames = [
-        read_version(v).agg(
+        tablelog.mlog_read_asof(spark, tt_dir, v)[0].agg(
             F.count("*").cast("bigint").alias("n_rows"),
             F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
             .cast("double")
@@ -749,93 +740,80 @@ TT_RETAIN_LAST = 2  # snapshots kept by the retention policy
 
 @query("etl_time_travel_expire", oracle=_TT_EXPIRE_ORACLE, category="K")
 def etl_time_travel_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot RETENTION over the manifest substrate (VERDICT r08 ask
-    #6) — the expire/vacuum half of the time-travel machinery that
-    ``etl_time_travel_read`` only reads: three immutable versions are
-    written (v0 full orders; v1 retires open 'F' orders; v2 further
-    retires keys ≡ 0 mod 10), per-snapshot row-count stats are recorded
-    IN the manifest at write time (the audit metadata that must survive
-    data deletion), then the retention policy keeps the newest
-    {TT_RETAIN_LAST} versions: older snapshot directories are deleted
-    from disk and the manifest is atomically rewritten (temp file +
-    ``os.replace``) with the survivors plus an ``expired`` audit list.
+    """Snapshot RETENTION over the commit log (VERDICT r08 ask #6) — the
+    expire/vacuum half of the time-travel machinery that
+    ``etl_time_travel_read`` only reads: three snapshot versions commit
+    (v0 full orders; v1 retires open 'F' orders; v2 further retires
+    keys ≡ 0 mod 10), each replacing its predecessor and carrying its
+    write-time ``n_rows`` IN the commit doc (the audit metadata that
+    must survive data deletion). The retention policy keeps the newest
+    {TT_RETAIN_LAST} versions: a checkpoint folds the log at the oldest
+    retained version, the records it folded expire, and
+    :func:`~dbsuite_spark.etl.tablelog.mlog_vacuum` deletes the one
+    group no reconstructable pin reaches — v0's.
 
-    The report is the real proof obligation: expired versions answer
-    from MANIFEST STATS (their data is gone — that the count is still
-    servable is the point of write-time stats); retained versions are
-    RE-READ through the post-expire manifest and re-counted, proving
-    expiry didn't touch live data. Both paths hash against the same
-    SQL oracle, so a stats/data mismatch on either side fails the gate.
+    The report is the real proof obligation: the expired version
+    answers from the CHECKPOINT's folded copy of its commit doc (its
+    data is gone — that the count is still servable is the point of
+    write-time stats); retained versions are RE-READ as-of their pins
+    and re-counted, proving expiry didn't touch live data. Both paths
+    hash against the same SQL oracle, so a stats/data mismatch on
+    either side fails the gate.
 
     Scale: each snapshot is written once (copy-on-write, like
-    ``etl_time_travel_read``); expiry is a driver-side metadata
-    operation plus directory deletes — no data is read to expire; the
-    retained re-reads are pruned single-column parquet scans."""
-    import shutil as _shutil
-
+    ``etl_time_travel_read``); retention is driver-side metadata plus
+    one directory delete — no data is read to expire; the retained
+    re-reads are empty-schema count scans."""
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = artifact_path(sf_dir, "tt_expire/manifest.json")
-    tt_dir = os.path.dirname(root)
-    snapshots = {
-        0: base,
-        1: base.filter(F.col("o_orderstatus") != "F"),
-        2: base.filter(
+    tt_dir = artifact_path(sf_dir, "tt_expire")
+    shutil.rmtree(tt_dir, ignore_errors=True)  # idempotent re-run
+    snapshots = [
+        base,
+        base.filter(F.col("o_orderstatus") != "F"),
+        base.filter(
             (F.col("o_orderstatus") != "F")
             & (F.col("o_orderkey") % 10 != 0)
         ),
-    }
-    versions: dict[str, dict] = {}
-    for v, df in snapshots.items():
-        path = os.path.join(tt_dir, f"v{v}")
-        df.write.mode("overwrite").parquet(path)
-        # write-time stats: the one number a manifest must keep so
+    ]
+    oldest_kept = len(snapshots) - TT_RETAIN_LAST
+    for v, df in enumerate(snapshots):
+        # write-time stats: the one number a commit doc must keep so
         # expired snapshots stay auditable after their data is gone
-        versions[str(v)] = {"path": path, "n_rows": df.count()}
-    tablelog.publish_json(
-        root, {"current": 2, "versions": versions, "expired": []}
-    )
+        tablelog.msink_commit_batch(
+            tt_dir,
+            df,
+            v,
+            extra_doc={"n_rows": df.count(), "replaces": [v - 1] if v else []},
+        )
+        if v == oldest_kept:
+            cp_path = tablelog.mlog_checkpoint(tt_dir)
 
-    # retention: keep the newest TT_RETAIN_LAST versions, expire the rest
-    manifest = tablelog.read_json(root)
-    ordered = sorted(manifest["versions"], key=int)
-    keep = set(ordered[-TT_RETAIN_LAST:])
-    expired = [v for v in ordered if v not in keep]
-    for v in expired:
-        _shutil.rmtree(manifest["versions"][v]["path"], ignore_errors=True)
-    new_manifest = {
-        "current": manifest["current"],
-        "versions": {v: manifest["versions"][v] for v in keep},
-        "expired": [
-            {"version": int(v), "n_rows": manifest["versions"][v]["n_rows"]}
-            for v in expired
-        ],
-    }
-    tablelog.publish_json(root, new_manifest)  # old-or-new, never torn
+    # retention: expire the folded records, then vacuum what no pin reaches
+    tablelog.mlog_expire_checkpointed(tt_dir)
+    folded = tablelog.read_json(cp_path)["groups"]
+    expired = [d for d in folded if d["version"] < oldest_kept]
+    n_deleted, _ = tablelog.mlog_vacuum(tt_dir)
+    if n_deleted != len(expired) or any(
+        os.path.exists(d["group"]) for d in expired
+    ):
+        raise RuntimeError("vacuum must delete exactly the expired groups")
 
-    post = tablelog.read_json(root)
-    assert all(
-        not os.path.exists(manifest["versions"][v]["path"]) for v in expired
-    ), "expired snapshot data must be deleted from disk"
-
-    expired_report = spark.createDataFrame(
-        [(e["version"], "expired", e["n_rows"]) for e in post["expired"]],
+    out = spark.createDataFrame(
+        [(d["version"], "expired", d["n_rows"]) for d in expired],
         "version int, status string, n_rows bigint",
     )
-    retained = [
-        spark.read.parquet(post["versions"][v]["path"])
-        .agg(F.count("*").cast("bigint").alias("n_rows"))
-        .select(
-            F.lit(int(v)).cast("int").alias("version"),
-            F.lit("retained").alias("status"),
-            "n_rows",
+    for v in range(oldest_kept, len(snapshots)):
+        out = out.unionAll(
+            tablelog.mlog_read_asof(spark, tt_dir, v)[0]
+            .agg(F.count("*").cast("bigint").alias("n_rows"))
+            .select(
+                F.lit(v).cast("int").alias("version"),
+                F.lit("retained").alias("status"),
+                "n_rows",
+            )
         )
-        for v in sorted(post["versions"], key=int)
-    ]
-    out = expired_report
-    for fr in retained:
-        out = out.unionAll(fr)
     return out
 
 
@@ -882,14 +860,12 @@ def etl_occ_write_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     link + one atomic rename each); the loser's retry re-applies a
     pushed filter to the winner's snapshot — one pruned scan, no
     re-read of history."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     root = artifact_path(sf_dir, "tt_occ/manifest.json")
     occ_dir = os.path.dirname(root)
-    _shutil.rmtree(occ_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(occ_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(occ_dir, exist_ok=True)
 
     # version 1: the shared base snapshot
@@ -1002,21 +978,23 @@ FROM hits
 
 @query("etl_manifest_file_skipping", oracle=_SKIP_ORACLE, category="K")
 def etl_manifest_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest MIN/MAX file skipping — the pruning-stats half of a
-    table format that ``etl_time_travel_read`` documented as missing:
-    the orders snapshot is laid out as one file group per order YEAR,
-    the manifest records each group's (min, max) ``o_orderdate`` plus
-    row count (write-time stats, one grouped aggregation), and the
-    reader evaluates its date predicate AGAINST THE STATS — only file
-    groups whose [min, max] interval overlaps the query range are
-    opened at all. At 100 TB this is the difference between scanning 7
-    years and scanning 1: pruning happens in driver-side metadata
-    before any task launches, the same mechanism as Iceberg manifests
-    or Delta file stats (and one level above parquet row-group stats,
-    which still require opening every footer).
+    """MIN/MAX file skipping — the pruning-stats half of a table format,
+    as a scenario over the table commit log: ONE commit lays the orders
+    snapshot out as one ``yr=<year>`` subgroup per order YEAR, each
+    carrying its (min, max) ``o_orderdate`` as write-time stats (one
+    grouped aggregation), and
+    :func:`~dbsuite_spark.etl.tablelog.mlog_read_pruned_cols` evaluates
+    the date predicate AGAINST THE STATS — only subgroups whose [min,
+    max] interval overlaps the query range are opened at all (an
+    all-pruned probe is a valid empty scan). At 100 TB this is the
+    difference between scanning 7 years and scanning 1: pruning happens
+    in driver-side metadata before any task launches, the same
+    mechanism as Iceberg manifests or Delta file stats (and one level
+    above parquet row-group stats, which still require opening every
+    footer).
 
     The report proves both halves: the skip arithmetic
-    (files_total/read/skipped off the manifest) AND the pruned scan's
+    (files_total/read/skipped off the commit doc) AND the pruned scan's
     aggregate, which must equal the oracle's full-table filtered
     answer — skipping a group the predicate needed fails the hash.
 
@@ -1027,72 +1005,37 @@ def etl_manifest_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "orders").select(
         "o_orderdate", "o_totalprice"
     )
-    root = artifact_path(sf_dir, "tt_skip/manifest.json")
-    skip_dir = os.path.dirname(root)
-    yr = base.withColumn("yr", F.year("o_orderdate").cast("int"))
-    yr.write.mode("overwrite").partitionBy("yr").parquet(
-        os.path.join(skip_dir, "data")
-    )
-    stats = (
-        yr.groupBy("yr")
-        .agg(
+    skip_dir = artifact_path(sf_dir, "tt_skip")
+    shutil.rmtree(skip_dir, ignore_errors=True)  # idempotent re-run
+
+    def write_by_year(bdf: DataFrame, group: str) -> dict:
+        yr = bdf.withColumn("yr", F.year("o_orderdate").cast("int"))
+        yr.write.mode("overwrite").partitionBy("yr").parquet(group)
+        stats = yr.groupBy("yr").agg(
             F.min("o_orderdate").cast("string").alias("lo"),
             F.max("o_orderdate").cast("string").alias("hi"),
-            F.count("*").alias("n_rows"),
         )
-        .collect()
-    )
-    groups = sorted(
-        (
+        subgroups = [
             {
-                "path": os.path.join(skip_dir, "data", f"yr={r['yr']}"),
-                "lo": r["lo"],
-                "hi": r["hi"],
-                "n_rows": r["n_rows"],
+                "path": os.path.join(group, f"yr={r['yr']}"),
+                "stats": {"o_orderdate": {"min": r["lo"], "max": r["hi"]}},
             }
-            for r in stats
-        ),
-        key=lambda g: g["lo"],
-    )
-    tablelog.publish_json(root, {"groups": groups})
+            for r in sorted(stats.collect(), key=lambda r: r["yr"])
+        ]
+        return {"subgroups": subgroups}
 
-    manifest = tablelog.read_json(root)
-    # driver-side metadata pruning: stats-interval overlap, no I/O
-    read_groups = [
-        g
-        for g in manifest["groups"]
-        if g["lo"] <= _SKIP_HI and g["hi"] >= _SKIP_LO
-    ]
-    n_total = len(manifest["groups"])
-    n_read = len(read_groups)
-    if read_groups:
-        agg = (
-            spark.read.parquet(*[g["path"] for g in read_groups])
-            # the predicate still applies INSIDE surviving groups
-            # (row-group pruning + exactness when a group straddles
-            # the range)
-            .filter(
-                F.col("o_orderdate").between(
-                    F.lit(_SKIP_LO).cast("date"),
-                    F.lit(_SKIP_HI).cast("date"),
-                )
-            )
-            .agg(
-                F.count("*").cast("bigint").alias("n_rows"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("sum_total"),
-            )
-        )
-    else:
-        # every group pruned: a correct reader returns the empty
-        # aggregate without launching any scan (ADVICE r09 #4 — an
-        # empty *paths list would raise instead)
-        agg = spark.range(1).select(
-            F.lit(0).cast("bigint").alias("n_rows"),
-            F.lit(None).cast("double").alias("sum_total"),
-        )
-    return agg.select(
+    tablelog.msink_commit_batch(skip_dir, base, 0, write_fn=write_by_year)
+    doc = tablelog.read_json(tablelog._commit_path(skip_dir, 0))
+    n_total = len(doc["subgroups"])
+    df, n_read = tablelog.mlog_read_pruned_cols(
+        spark, skip_dir, {"o_orderdate": (_SKIP_LO, _SKIP_HI)}
+    )
+    return df.agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
+        .cast("double")
+        .alias("sum_total"),
+    ).select(
         F.lit(n_total).cast("bigint").alias("files_total"),
         F.lit(n_read).cast("bigint").alias("files_read"),
         F.lit(n_total - n_read).cast("bigint").alias("files_skipped"),
@@ -1119,17 +1062,17 @@ FROM orders
 
 @query("etl_partition_evolution", oracle=_PE_ORACLE, category="K")
 def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PARTITION EVOLUTION across snapshot versions — the remaining
-    table-format behavior the manifest substrate can express: version 0
-    lays orders out by YEAR, version 1 RE-PARTITIONS the same rows by
-    (year, month), and both remain readable through the manifest, each
-    under its own scheme (Iceberg's headline feature: the partition
-    spec is VERSION metadata, not a property of the table, so a layout
-    migration is just another snapshot — no reader breaks, no
-    big-bang rewrite of history). The manifest records each version's
-    scheme and partition count at write time; the report re-reads both
-    versions through the manifest and re-counts, so a scheme change
-    that loses or duplicates rows fails the hash gate.
+    """PARTITION EVOLUTION across snapshot versions of the commit log:
+    version 0 lays orders out by YEAR, version 1 RE-PARTITIONS the same
+    rows by (year, month) and replaces version 0, and both remain
+    readable as-of their pins, each under its own scheme (Iceberg's
+    headline feature: the partition spec is VERSION metadata, not a
+    property of the table, so a layout migration is just another
+    snapshot — no reader breaks, no big-bang rewrite of history). Each
+    commit doc records its scheme and partition count at write time;
+    the report reads them back from the log and re-counts both versions
+    as-of their pins, so a scheme change that loses or duplicates rows
+    fails the hash gate.
 
     Scale: each version is one partitioned write (the second is the
     layout migration a compaction job runs); reads are ordinary
@@ -1139,37 +1082,36 @@ def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    root = artifact_path(sf_dir, "tt_pe/manifest.json")
-    pe_dir = os.path.dirname(root)
-    schemes = {
-        0: ("year", ["yr"]),
-        1: ("year_month", ["yr", "mo"]),
-    }
+    pe_dir = artifact_path(sf_dir, "tt_pe")
+    shutil.rmtree(pe_dir, ignore_errors=True)  # idempotent re-run
     staged = base.withColumn(
         "yr", F.year("o_orderdate").cast("int")
     ).withColumn("mo", F.month("o_orderdate").cast("int"))
-    versions: dict[str, dict] = {}
-    for v, (name, cols) in schemes.items():
-        path = os.path.join(pe_dir, f"v{v}")
-        staged.write.mode("overwrite").partitionBy(*cols).parquet(path)
-        n_parts = staged.select(*cols).distinct().count()
-        versions[str(v)] = {
-            "path": path,
-            "scheme": name,
-            "partition_cols": cols,
-            "n_partitions": n_parts,
-        }
-    tablelog.publish_json(root, {"current": 1, "versions": versions})
+    for v, (name, cols) in enumerate(
+        [("year", ["yr"]), ("year_month", ["yr", "mo"])]
+    ):
+        tablelog.msink_commit_batch(
+            pe_dir,
+            staged,
+            v,
+            extra_doc={
+                "scheme": name,
+                "n_partitions": staged.select(*cols).distinct().count(),
+                "replaces": [v - 1] if v else [],
+            },
+            write_fn=lambda bdf, group: (
+                bdf.write.mode("overwrite").partitionBy(*cols).parquet(group)
+            ),
+        )
 
-    manifest = tablelog.read_json(root)
     out = None
-    for v in sorted(manifest["versions"], key=int):
-        meta = manifest["versions"][v]
+    for v in (0, 1):
+        meta = tablelog.read_json(tablelog._commit_path(pe_dir, v))
         frame = (
-            spark.read.parquet(meta["path"])
+            tablelog.mlog_read_asof(spark, pe_dir, v)[0]
             .agg(F.count("*").cast("bigint").alias("n_rows"))
             .select(
-                F.lit(int(v)).cast("int").alias("version"),
+                F.lit(v).cast("int").alias("version"),
                 F.lit(meta["scheme"]).alias("scheme"),
                 F.lit(meta["n_partitions"])
                 .cast("bigint")
@@ -1250,12 +1192,10 @@ def etl_merge_cow_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-side metadata, like Delta's unchanged AddFiles); the commit
     is one exclusive link + one atomic rename. At 100 TB a 0.1%%
     update batch rewrites ~0.1%% of files — this is that mechanism."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     root = artifact_path(sf_dir, "tt_cow/manifest.json")
     cow_dir = os.path.dirname(root)
-    _shutil.rmtree(cow_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(cow_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(cow_dir, exist_ok=True)
 
     # layout width from one 1-row metadata aggregate (the driver-side
@@ -1458,12 +1398,10 @@ def etl_manifest_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enter any plan (the pin asserts a scale-independent scan
     count). This is Iceberg's changelog-scan / Delta CDF shape: file
     metadata first, row diff second."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     root = artifact_path(sf_dir, "tt_cdc/manifest.json")
     cdc_dir = os.path.dirname(root)
-    _shutil.rmtree(cdc_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(cdc_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(cdc_dir, exist_ok=True)
 
     max_key = base.agg(F.max("o_orderkey")).first()[0]
@@ -1654,13 +1592,11 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit is one rename regardless of table count or size (Iceberg
     v1's single catalog pointer / Nessie's commit model). The orphan
     audit is one shuffle anti-join per version, keyed on the FK."""
-    import shutil as _shutil
-
     cust = t(spark, sf_dir, "customer").select("c_custkey")
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     root = artifact_path(sf_dir, "tt_txn/catalog.json")
     txn_dir = os.path.dirname(root)
-    _shutil.rmtree(txn_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(txn_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(txn_dir, exist_ok=True)
 
     # version 1: base snapshots of both tables
@@ -1750,102 +1686,77 @@ SELECT * FROM (
 @query("etl_vacuum_orphan_files", oracle=_VACUUM_ORACLE, category="H")
 def etl_vacuum_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VACUUM of unreferenced files — the garbage-collection half of the
-    manifest substrate (Delta VACUUM / Iceberg remove-orphan-files
-    shape) that ``etl_time_travel_expire`` doesn't cover: expire
-    removes OLD VERSIONS the manifest knows about; vacuum removes
-    directories the manifest NEVER adopted — debris of writers that
-    died between data write and OCC commit (``etl_occ_write_conflict``
-    losers that never rebased). The substrate stages two live versions
-    plus two aborted-writer directories; vacuum walks the table root,
-    classifies every data directory against the union of manifest
-    version paths, records the orphans' row counts for the audit trail,
-    deletes them, and re-reads the live versions through the manifest —
-    proving the GC touched nothing a reader can reach.
+    commit log (Delta VACUUM / Iceberg remove-orphan-files shape) that
+    ``etl_time_travel_expire`` doesn't cover: expire removes OLD
+    VERSIONS the log knows about; vacuum removes group directories no
+    commit record EVER adopted — debris of writers that died between
+    data write and commit link. The table commits two live versions
+    (v1 replaces v0; both stay pinnable) plus two aborted-writer
+    attempt directories; the orphans' row counts are recorded for the
+    audit trail, :func:`~dbsuite_spark.etl.tablelog.mlog_vacuum`
+    reclaims them, and the live versions are re-read as-of their pins —
+    proving the GC touched nothing a reader can reach. The guard is a
+    real exception, not an assert (it guards a destructive path and
+    must fire even under ``python -O``): vacuum must have deleted
+    exactly the two orphans and kept both live groups.
 
     Exactness: the report is four integer counts; orphan contents are
     deterministic key-mod slices, so the oracle reproduces them from
     the fixture without touching the filesystem.
 
-    Scale: classification is driver-side metadata (set difference of
-    directory names vs manifest paths — no data read to DECIDE); the
-    orphan row counts are pruned single-column scans read once for the
-    audit before deletion, and live verification reads only manifest
-    paths. At a million files the walk parallelizes as a listing job;
-    the decision stays a hash-set lookup per file."""
-    import shutil as _shutil
-
+    Scale: classification is driver-side metadata (group directories vs
+    the groups live at some pin — no data read to DECIDE); the orphan
+    row counts are pruned single-column scans read once for the audit
+    before deletion, and live verification reads only committed
+    groups."""
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = artifact_path(sf_dir, "tt_vacuum/manifest.json")
-    vac_dir = os.path.dirname(root)
-    # live, manifest-adopted versions
-    versions: dict[str, dict] = {}
-    for v, df in {
-        0: base,
-        1: base.filter(F.col("o_orderstatus") != "F"),
-    }.items():
-        path = os.path.join(vac_dir, f"v{v}")
-        df.write.mode("overwrite").parquet(path)
-        versions[str(v)] = {"path": path, "n_rows": df.count()}
-    # aborted writers: data landed, the OCC commit never did — exactly
-    # the state an etl_occ_write_conflict loser leaves if it dies
-    # before rebasing
+    vac_dir = artifact_path(sf_dir, "tt_vacuum")
+    shutil.rmtree(vac_dir, ignore_errors=True)  # idempotent re-run
+    for v, df in enumerate([base, base.filter(F.col("o_orderstatus") != "F")]):
+        tablelog.msink_commit_batch(
+            vac_dir,
+            df,
+            v,
+            extra_doc={"n_rows": df.count(), "replaces": [v - 1] if v else []},
+        )
+    # aborted writers: data landed, the commit link never did — exactly
+    # the state a losing or crashed attempt leaves behind
     orphans = {
         "orphan_mod7": base.filter(F.col("o_orderkey") % 7 == 0),
         "orphan_mod11": base.filter(F.col("o_orderkey") % 11 == 0),
     }
+    rows, orphan_paths = [], []
     for name, df in orphans.items():
-        df.write.mode("overwrite").parquet(os.path.join(vac_dir, name))
-    tablelog.publish_json(root, {"current": 1, "versions": versions})
-
-    # --- the vacuum: classify every directory under the table root ---
-    # Classification completes (and is validated) BEFORE any rmtree
-    # runs, so a misclassified live directory aborts the vacuum with
-    # zero deletions instead of being detected post-destruction
-    # (ADVICE r11 #3). Real exceptions, not asserts: they guard a
-    # destructive path and must fire even under `python -O`.
-    manifest = tablelog.read_json(root)
-    live_paths = {v["path"] for v in manifest["versions"].values()}
-    orphan_entries = [
-        entry
-        for entry in sorted(os.listdir(vac_dir))
-        if os.path.isdir(os.path.join(vac_dir, entry))  # skip manifest file
-        and os.path.join(vac_dir, entry) not in live_paths
-    ]
-    if orphan_entries != ["orphan_mod11", "orphan_mod7"]:
-        raise RuntimeError(
-            f"vacuum classified unexpected orphan set: {orphan_entries}"
-        )
-    rows = []
-    for entry in orphan_entries:
-        full = os.path.join(vac_dir, entry)
+        path = tablelog._attempt_path(vac_dir, "group", name)
+        df.write.mode("overwrite").parquet(path)
         # audit before delete: a real vacuum logs what it reclaims
-        n = spark.read.parquet(full).count()
-        _shutil.rmtree(full)
-        rows.append((entry, "vacuumed", n))
-    leftover = [
-        r[0] for r in rows if os.path.exists(os.path.join(vac_dir, r[0]))
-    ]
-    if leftover:
-        raise RuntimeError(f"vacuumed directories still present: {leftover}")
+        rows.append((name, "vacuumed", spark.read.parquet(path).count()))
+        orphan_paths.append(path)
 
-    vacuumed = spark.createDataFrame(
+    n_deleted, n_kept = tablelog.mlog_vacuum(vac_dir)
+    if (n_deleted, n_kept) != (len(orphans), 2) or any(
+        os.path.exists(p) for p in orphan_paths
+    ):
+        raise RuntimeError(
+            f"vacuum must delete exactly the {len(orphans)} orphans and "
+            f"keep both live groups: deleted {n_deleted}, kept {n_kept}"
+        )
+
+    out = spark.createDataFrame(
         rows, "item string, status string, n_rows bigint"
     )
-    live = [
-        spark.read.parquet(manifest["versions"][v]["path"])
-        .agg(F.count("*").cast("bigint").alias("n_rows"))
-        .select(
-            F.lit(f"v{v}").alias("item"),
-            F.lit("live").alias("status"),
-            "n_rows",
+    for v in (0, 1):
+        out = out.unionByName(
+            tablelog.mlog_read_asof(spark, vac_dir, v)[0]
+            .agg(F.count("*").cast("bigint").alias("n_rows"))
+            .select(
+                F.lit(f"v{v}").alias("item"),
+                F.lit("live").alias("status"),
+                "n_rows",
+            )
         )
-        for v in sorted(manifest["versions"], key=int)
-    ]
-    out = vacuumed
-    for fr in live:
-        out = out.unionByName(fr)
     return out
 
 
@@ -1874,7 +1785,7 @@ def etl_manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     """SCHEMA EVOLUTION ACROSS MANIFEST VERSIONS — the last lakehouse
     behavior this environment can express (VERDICT r10 "what's missing"
     #2), composing ``scan_parquet_schema_merge``'s null-fill semantics
-    with ``etl_time_travel_read``'s versioned manifest: each manifest
+    with ``etl_time_travel_read``'s versioned snapshots: each manifest
     version carries its own LOGICAL schema as (field_id -> name, type)
     — Iceberg's public name-mapping idea — and each file group records
     the PHYSICAL column names it was written with, so a column RENAME
@@ -1899,12 +1810,10 @@ def etl_manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     (column pruning still reaches the parquet footer under the PHYSICAL
     name); the cross-version read is an ordinary unionByName of pruned
     scans — no rewrite of history at any size."""
-    import shutil as _shutil
-
     o = t(spark, sf_dir, "orders")
     root = artifact_path(sf_dir, "tt_schema_evo/manifest.json")
     evo_dir = os.path.dirname(root)
-    _shutil.rmtree(evo_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(evo_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(evo_dir, exist_ok=True)
 
     v1_path = os.path.join(evo_dir, "v1")
@@ -2080,14 +1989,12 @@ def etl_manifest_deletion_vectors(
     DV union against the pruned group scans — on a real cluster the DV
     is applied per-file at scan time (Delta/Iceberg's documented
     merge-on-read path); compaction cost ∝ groups-with-DVs only."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     root = artifact_path(sf_dir, "tt_dv/manifest.json")
     dv_dir = os.path.dirname(root)
-    _shutil.rmtree(dv_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(dv_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(dv_dir, exist_ok=True)
 
     max_key = base.agg(F.max("o_orderkey")).first()[0]
@@ -2268,12 +2175,10 @@ def etl_manifest_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     STAGED GROUP only for violations plus the branch-read aggregate;
     publish is one atomic os.replace — exactly why WAP is the standard
     pattern for validating 100 TB ingests without blocking readers."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     root = artifact_path(sf_dir, "tt_wap/manifest.json")
     wap_dir = os.path.dirname(root)
-    _shutil.rmtree(wap_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(wap_dir, ignore_errors=True)  # idempotent re-run
     os.makedirs(wap_dir, exist_ok=True)
 
     # version 1: base snapshot, main ref
@@ -2398,11 +2303,9 @@ def etl_manifest_incremental_read(
     scans of ONLY the new groups; the offset is O(1) consumer state —
     exactly how streaming-into-batch handoffs avoid reprocessing at
     100 TB."""
-    import shutil as _shutil
-
     e = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
     table_dir = artifact_path(sf_dir, "incr_table")
-    _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     def poll(n: int, offset: int) -> tuple[DataFrame, int]:
         """Consume commits with version >= offset — returns (report
@@ -2492,11 +2395,9 @@ def etl_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     writers (Delta VACUUM's threshold, public). Storage stays
     proportional to LIVE data + unexpired history, not to write
     amplification."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "mlog_vacuum_table")
-    _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     for i in range(6):
         tablelog.msink_commit_batch(
@@ -2612,11 +2513,9 @@ def etl_manifest_compact_cluster(
     summary) and one ≤4-row stats aggregate to the one distributed
     rewrite pass. Laws (reader equivalence, pruning == filtering,
     conservative stats omission) in tests/test_round13_semantics.py."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "compact_cluster_table")
-    _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     for i in range(6):
         sl = base.filter(F.col("o_orderkey") % 6 == i)
@@ -2715,11 +2614,9 @@ def etl_manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuum keeps re-pinned dirs, racing restore/compaction voids
     deterministically, feed re-delivery) in
     tests/test_round13_semantics.py."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "restore_table")
-    _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     for i in range(4):
         tablelog.msink_commit_batch(
@@ -2781,11 +2678,9 @@ def _build_mod10_log(spark: SparkSession, sf_dir: str, name: str) -> str:
     exactly-once append protocol, checkpointing every
     ``CHECKPOINT_INTERVAL`` commits (versions 3 and 7). Returns the
     table dir (recreated — idempotent re-run)."""
-    import shutil as _shutil
-
     e = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
     table_dir = artifact_path(sf_dir, name)
-    _shutil.rmtree(table_dir, ignore_errors=True)
+    shutil.rmtree(table_dir, ignore_errors=True)
     for i in range(_CKPT_COMMITS):
         tablelog.msink_commit_batch(
             table_dir, e.filter(F.col("event_id") % _CKPT_COMMITS == i), i
@@ -2978,7 +2873,7 @@ def etl_manifest_ckpt_stats_skip(
     one level up — prune from metadata BEFORE any task or footer read).
 
     Eight key-range commits of orders (width = max_key//8+1) land with
-    their actual per-group (min_key, max_key); a checkpoint folds them;
+    their actual per-group ``o_orderkey`` (min, max); a checkpoint folds them;
     the log prefix is EXPIRED — so the stats available to the reader
     are provably the checkpoint's copy, not the commit records'. Three
     reads: 'full' (all 8 groups), 'mid' (a 2-width span straddling
@@ -2997,11 +2892,9 @@ def etl_manifest_ckpt_stats_skip(
     filter parquet scans (plan-pinned: 'narrow' plans exactly one group
     scan). Stats cost one aggregate per commit at write time —
     manifest-grade metadata, amortized into the batch write."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "ckpt_stats_table")
-    _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     max_key = base.agg(F.max("o_orderkey")).first()[0]
     width = max_key // CKPT_STATS_GROUPS + 1
@@ -3013,7 +2906,7 @@ def etl_manifest_ckpt_stats_skip(
             F.min("o_orderkey"), F.max("o_orderkey")
         ).first()
         tablelog.msink_commit_batch(
-            table_dir, sl, i, stats={"min_key": mn, "max_key": mx}
+            table_dir, sl, i, stats={"o_orderkey": {"min": mn, "max": mx}}
         )
     tablelog.mlog_checkpoint(table_dir)
     # expire the log: the reader's stats now come from the checkpoint
@@ -3021,7 +2914,9 @@ def etl_manifest_ckpt_stats_skip(
         raise RuntimeError("expected the full log prefix to expire")
 
     def report(label: str, lo: int, hi: int) -> DataFrame:
-        df, n_groups = tablelog.mlog_read_pruned(spark, table_dir, lo, hi)
+        df, n_groups = tablelog.mlog_read_pruned_cols(
+            spark, table_dir, {"o_orderkey": (lo, hi)}
+        )
         return df.agg(
             F.count("*").cast("bigint").alias("n_rows"),
             dsum(F.col("o_totalprice")).alias("sum_total"),
@@ -3101,13 +2996,11 @@ def etl_manifest_ckpt_stats_multi(
     driver-side metadata, zero I/O for pruned groups; survivors fold in
     ONE multi-path scan with both predicates pushed down. Per-column
     maps cost one small aggregate per commit at write time."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
     table_dir = artifact_path(sf_dir, "ckpt_stats_multi_table")
-    _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     max_key = base.agg(F.max("o_orderkey")).first()[0]
     width = max_key // 4 + 1
@@ -3245,11 +3138,9 @@ def etl_manifest_compact_optimize(
     the append path. Laws (equivalence across every reader, racing
     compactions resolving deterministically, feed-skip, post-expiry
     behavior) in tests/test_round13_semantics.py."""
-    import shutil as _shutil
-
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table_dir = artifact_path(sf_dir, "compact_optimize_table")
-    _shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
+    shutil.rmtree(table_dir, ignore_errors=True)  # idempotent re-run
 
     for i in range(6):
         tablelog.msink_commit_batch(

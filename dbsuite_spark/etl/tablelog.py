@@ -679,8 +679,7 @@ def _merged_stats(stats_list: list[dict | None]) -> dict | None:
     """Fold per-group stats into the compacted group's stats: the
     interval union per column, kept only for columns EVERY target
     carries (a column any target lacks stats for has unknown extent —
-    claiming one would let pruning skip real data). Understands both
-    the per-column-map shape and the legacy scalar min_key/max_key."""
+    claiming one would let pruning skip real data)."""
     if any(not s for s in stats_list):
         return None
     out: dict = {}
@@ -693,10 +692,6 @@ def _merged_stats(stats_list: list[dict | None]) -> dict | None:
                 "min": min(v["min"] for v in vals),
                 "max": max(v["max"] for v in vals),
             }
-        elif col in ("min_key", "max_key") and all(
-            not isinstance(v, dict) and v is not None for v in vals
-        ):
-            out[col] = (min if col == "min_key" else max)(vals)
     return out or None
 
 
@@ -1111,19 +1106,11 @@ def _stats_interval(stats: dict, col: str) -> tuple | None:
     """The (min, max) interval a commit doc's stats carry for ``col``,
     or None when the doc has no usable stats for it — None means
     UNPRUNABLE on this column, never prunable (absent metadata can't
-    justify skipping data). Canonical shape is the per-column map
-    ``{col: {"min": x, "max": y}}``; the original single-column
-    ``{"min_key", "max_key"}`` shape is honored as ``o_orderkey``
-    stats so pre-generalization logs stay readable."""
+    justify skipping data). The one stats shape is the per-column map
+    ``{col: {"min": x, "max": y}}``."""
     iv = stats.get(col)
     if isinstance(iv, dict) and iv.get("min") is not None:
         return iv["min"], iv["max"]
-    if (
-        col == "o_orderkey"
-        and stats.get("min_key") is not None
-        and stats.get("max_key") is not None
-    ):
-        return stats["min_key"], stats["max_key"]
     return None
 
 
@@ -1196,15 +1183,3 @@ def mlog_read_pruned_cols(
             F.col(col).between(F.lit(lo).cast(dt), F.lit(hi).cast(dt))
         )
     return df, len(live_paths)
-
-
-def mlog_read_pruned(
-    spark: SparkSession, table_dir: str, lo: int, hi: int
-) -> tuple[DataFrame, int]:
-    """Single-column stats-pruned read over the commit log — the
-    ``o_orderkey``-keyed special case of :func:`mlog_read_pruned_cols`
-    (kept as the original API; see there for resolution + pruning
-    semantics)."""
-    return mlog_read_pruned_cols(
-        spark, table_dir, {"o_orderkey": (lo, hi)}
-    )

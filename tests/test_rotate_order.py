@@ -16,12 +16,16 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_tool():
     spec = importlib.util.spec_from_file_location(
-        "rotate_order", "/root/repo/tools/rotate_order.py"
+        "rotate_order",
+        os.path.join(REPO, "tools", "rotate_order.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -5,8 +5,11 @@ classifier must resolve multi-round histories the way the driver does."""
 from __future__ import annotations
 
 import json
+import os
 
 import tools.rotate_order as rot
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _write(tmp_path, name, rows):
@@ -91,12 +94,12 @@ def test_repo_rotation_is_fresh_at_head():
 
     out = subprocess.run(
         ["git", "ls-files", "CORRECTNESS_r*.json"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         check=True,
     ).stdout.split()
-    files = [f"/root/repo/{p}" for p in out]
+    files = [os.path.join(REPO, p) for p in out]
     assert files, "no committed CORRECTNESS files found"
     assert rot.check_front(files) == 0
 

@@ -507,26 +507,27 @@ def test_whitening_stats_match_reference(spark, sf_dir):
 
 def test_vacuum_leaves_exactly_the_live_tree(spark, sf_dir):
     """After the vacuum the table root must contain exactly the two
-    live version directories plus the manifest — nothing else — the
-    live versions must still read to their manifest row counts, and a
-    second run must be idempotent (the substrate re-stages its orphans
-    and reclaims them again, same report)."""
+    commit records plus the two live groups they name — nothing else —
+    each live version must still read (as-of its pin) to its commit
+    doc's row count, and a second run must be idempotent (the key
+    re-stages its orphans and reclaims them again, same report)."""
     import json
     import os
 
     from dbsuite_spark.etl.io import artifact_path
+    from dbsuite_spark.etl.tablelog import mlog_read_asof
 
     first = sorted(
         tuple(r) for r in
         SPECS["etl_vacuum_orphan_files"].fn(spark, sf_dir).collect()
     )
-    root = artifact_path(sf_dir, "tt_vacuum/manifest.json")
-    vac_dir = os.path.dirname(root)
-    entries = sorted(os.listdir(vac_dir))
-    assert entries == ["manifest.json", "v0", "v1"]
-    m = json.load(open(root))
-    for v, meta in m["versions"].items():
-        assert spark.read.parquet(meta["path"]).count() == meta["n_rows"]
+    vac_dir = artifact_path(sf_dir, "tt_vacuum")
+    commits = ["commit-00000.json", "commit-00001.json"]
+    docs = [json.load(open(os.path.join(vac_dir, c))) for c in commits]
+    live = [os.path.basename(d["group"]) for d in docs]
+    assert sorted(os.listdir(vac_dir)) == sorted(commits + live)
+    for v, doc in enumerate(docs):
+        assert mlog_read_asof(spark, vac_dir, v)[0].count() == doc["n_rows"]
     second = sorted(
         tuple(r) for r in
         SPECS["etl_vacuum_orphan_files"].fn(spark, sf_dir).collect()

@@ -259,64 +259,59 @@ def test_mlog_expire_composes_and_refuses_unfolded(spark, tmp_path):
 
 def test_snapshot_read_pinned_version_is_stable_under_writes(spark, sf_dir):
     """SNAPSHOT ISOLATION law: a reader pinned to version V of the
-    time-travel manifest sees V BYTE-STABLY (identical part-file md5s
-    and identical aggregates) while a writer advances the manifest past
-    it with the same atomic-swap protocol; a reader that re-resolves
-    `current` sees the new version. This is the serializable-history
+    time-travel commit log sees V BYTE-STABLY (identical part-file md5s
+    and identical aggregates) while a writer advances the log head past
+    it with the same atomic commit protocol; a reader that re-resolves
+    the head sees the new version. This is the serializable-history
     half the commit-protocol suite didn't pin: pinned reads never
     observe a concurrent writer."""
-    import json as _json
-
     from pyspark.sql import functions as F
 
+    from dbsuite_spark.etl import tablelog
+
     SPECS["etl_time_travel_read"].fn(spark, sf_dir).collect()
-    root = artifact_path(sf_dir, "tt_orders/manifest.json")
-    tt_dir = os.path.dirname(root)
+    tt_dir = artifact_path(sf_dir, "tt_orders")
 
-    # READER: pin version 1 (resolve the manifest ONCE — the pin)
-    with open(root) as fh:
-        pinned = _json.load(fh)
-    v_pin = str(pinned["current"])
-    pin_path = pinned["versions"][v_pin]
+    def head() -> int:
+        return tablelog._commit_version(tablelog._log_commits(tt_dir)[-1])
+
+    def pinned_agg():
+        return (
+            tablelog.mlog_read_asof(spark, tt_dir, v_pin)[0]
+            .agg(F.count("*").alias("n"), F.sum("o_totalprice").alias("s"))
+            .first()
+        )
+
+    # READER: pin version 1 (resolve the log head ONCE — the pin)
+    v_pin = head()
+    assert v_pin == 1
+    pin_doc = tablelog.read_json(tablelog._commit_path(tt_dir, v_pin))
+    pin_path = pin_doc["group"]
     md5_before = _md5s(pin_path)
-    agg_before = (
-        spark.read.parquet(pin_path)
-        .agg(F.count("*").alias("n"), F.sum("o_totalprice").alias("s"))
-        .first()
-    )
+    agg_before = pinned_agg()
 
-    # WRITER: two more commits advance the manifest past the pin
+    # WRITER: two more commits advance the log head past the pin
     for step in (2, 3):
-        new_dir = os.path.join(tt_dir, f"v{step}")
-        spark.read.parquet(pin_path).filter(
-            F.col("o_orderkey") % step == 0
-        ).write.mode("overwrite").parquet(new_dir)
-        with open(root) as fh:
-            doc = _json.load(fh)
-        doc["versions"][str(step)] = new_dir
-        doc["current"] = step
-        tmp = root + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(doc, fh)
-        os.replace(tmp, root)  # the same atomic pointer swap
+        assert tablelog.msink_commit_batch(
+            tt_dir,
+            spark.read.parquet(pin_path).filter(
+                F.col("o_orderkey") % step == 0
+            ),
+            step,
+            extra_doc={"replaces": [step - 1]},
+        ) == "committed"
 
     # the pinned read is byte-stable and value-stable
     assert _md5s(pin_path) == md5_before
-    agg_after = (
-        spark.read.parquet(pin_path)
-        .agg(F.count("*").alias("n"), F.sum("o_totalprice").alias("s"))
-        .first()
-    )
+    agg_after = pinned_agg()
     assert (agg_after["n"], agg_after["s"]) == (
         agg_before["n"],
         agg_before["s"],
     )
 
-    # a current-reader re-resolves and sees version 3, not the pin
-    with open(root) as fh:
-        now = _json.load(fh)
-    assert now["current"] == 3
-    n_now = spark.read.parquet(now["versions"]["3"]).count()
+    # a head reader re-resolves and sees version 3, not the pin
+    assert head() == 3
+    n_now = tablelog.msink_read(spark, tt_dir).count()
     assert n_now < agg_before["n"]
 
 
@@ -646,7 +641,7 @@ def test_mlog_read_pruned_equals_unpruned_filter(spark, sf_dir):
 
     from dbsuite_spark.etl.tablelog import (
         mlog_read_checkpointed,
-        mlog_read_pruned,
+        mlog_read_pruned_cols,
     )
     from dbsuite_spark.etl.loaders import etl_manifest_ckpt_stats_skip
 
@@ -661,7 +656,9 @@ def test_mlog_read_pruned_equals_unpruned_filter(spark, sf_dir):
         (max_key, max_key),
         (max_key * 2, max_key * 3),  # above all stats: all-pruned
     ):
-        pruned, n_groups = mlog_read_pruned(spark, table, lo, hi)
+        pruned, n_groups = mlog_read_pruned_cols(
+            spark, table, {"o_orderkey": (lo, hi)}
+        )
         want = sorted(
             r["o_orderkey"]
             for r in full.filter(

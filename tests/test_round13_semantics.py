@@ -10,7 +10,7 @@ the same expiry-TOCTOU class round 12 hardened elsewhere:
 3. an incremental consumer whose UNREAD range was checkpointed and
    expired must get the offset-out-of-range error even when the
    surviving log tail is EMPTY — never a silent "caught up";
-4. ``mlog_read_pruned`` treats a commit doc without stats as
+4. ``mlog_read_pruned_cols`` treats a commit doc without stats as
    unprunable (always scanned) and shares the siblings' gap-checked
    resolution, instead of KeyError / silently partial tables.
 """
@@ -227,7 +227,7 @@ def test_pruned_read_treats_missing_stats_as_unprunable(spark, tmp_path):
     from dbsuite_spark.etl.tablelog import (
         mlog_checkpoint,
         mlog_expire_checkpointed,
-        mlog_read_pruned,
+        mlog_read_pruned_cols,
     )
 
     table = str(tmp_path / "tbl")
@@ -237,20 +237,24 @@ def test_pruned_read_treats_missing_stats_as_unprunable(spark, tmp_path):
             _mk_orders(spark, i * 10, i * 10 + 10),
             i,
             stats=(
-                {"min_key": i * 10, "max_key": i * 10 + 9} if stats else None
+                {"o_orderkey": {"min": i * 10, "max": i * 10 + 9}}
+                if stats
+                else None
             ),
         )
 
     def probe():
         # [0,5] overlaps group 0's stats; group 1 prunes; group 2 has
         # no stats → scanned unconditionally
-        df, n = mlog_read_pruned(spark, table, 0, 5)
+        df, n = mlog_read_pruned_cols(spark, table, {"o_orderkey": (0, 5)})
         assert n == 2
         assert sorted(r["o_orderkey"] for r in df.collect()) == list(
             range(6)
         )
         # a probe above every stats range still scans the blind group
-        df_hi, n_hi = mlog_read_pruned(spark, table, 100, 200)
+        df_hi, n_hi = mlog_read_pruned_cols(
+            spark, table, {"o_orderkey": (100, 200)}
+        )
         assert n_hi == 1
         assert df_hi.count() == 0
 
@@ -471,7 +475,7 @@ def test_pruned_read_refuses_uncovered_gap(spark, tmp_path):
     """The pruned read shares its siblings' gap-checked resolution: an
     expired commit with no covering checkpoint is an honest error,
     never a silently partial (and silently mis-pruned) table."""
-    from dbsuite_spark.etl.tablelog import mlog_read_pruned
+    from dbsuite_spark.etl.tablelog import mlog_read_pruned_cols
 
     table = str(tmp_path / "tbl")
     for i in range(3):
@@ -479,11 +483,11 @@ def test_pruned_read_refuses_uncovered_gap(spark, tmp_path):
             table,
             _mk_orders(spark, i * 10, i * 10 + 10),
             i,
-            stats={"min_key": i * 10, "max_key": i * 10 + 9},
+            stats={"o_orderkey": {"min": i * 10, "max": i * 10 + 9}},
         )
     os.remove(os.path.join(table, "commit-00001.json"))  # uncovered gap
     with pytest.raises(RuntimeError, match="gaps"):
-        mlog_read_pruned(spark, table, 0, 100)
+        mlog_read_pruned_cols(spark, table, {"o_orderkey": (0, 100)})
 
 
 # --- round-13 OPTIMIZE: transactional compaction laws -----------------------

@@ -4,6 +4,8 @@ Only that module may hold the on-disk format (commit/checkpoint record
 names), the claim (``os.link``; no second ``O_EXCL`` claim) and the
 atomic publish (``os.replace``). Its two heaviest users reach it through
 one module-level import, never a function-local import of each other.
+The snapshot keys that moved onto the log write commit records, not a
+single-file ``manifest.json``.
 """
 
 from __future__ import annotations
@@ -15,7 +17,11 @@ import re
 import sys
 import threading
 
+import pytest
+
+import dbsuite_spark
 from dbsuite_spark.etl import tablelog
+from dbsuite_spark.etl.io import artifact_path
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "dbsuite_spark")
 HOME = os.path.join("etl", "tablelog.py")
@@ -24,6 +30,14 @@ PROTOCOL = re.compile(
     r"os\.link\(|os\.O_EXCL|os\.replace\("
     r"|[\"'][^\"'\n]*(?:commit|checkpoint)-\*\.json[\"']"
 )
+# snapshot key -> its table directory under the artifact root
+LOG_KEYS = {
+    "etl_time_travel_read": "tt_orders",
+    "etl_time_travel_expire": "tt_expire",
+    "etl_manifest_file_skipping": "tt_skip",
+    "etl_partition_evolution": "tt_pe",
+    "etl_vacuum_orphan_files": "tt_vacuum",
+}
 LOCAL_SIBLING_IMPORT = re.compile(
     r"^[ \t]+from dbsuite_spark\.(?:streaming\.streams|etl\.loaders) import",
     re.M,
@@ -89,3 +103,14 @@ def test_publish_json_concurrent_writers(tmp_path):
     with open(path) as fh:
         assert json.load(fh) in docs
     assert not glob.glob(str(tmp_path / "*.tmp"))
+
+
+@pytest.mark.parametrize("key", sorted(LOG_KEYS))
+def test_snapshot_keys_write_a_commit_log(spark, sf_dir, key):
+    """Each of these keys is a scenario over the commit log: after a
+    run its table directory holds ``commit-*.json`` records and no
+    single-file ``manifest.json``."""
+    dbsuite_spark.all_specs()[key].fn(spark, sf_dir).collect()
+    table_dir = artifact_path(sf_dir, LOG_KEYS[key])
+    assert tablelog._log_commits(table_dir), sorted(os.listdir(table_dir))
+    assert not os.path.exists(os.path.join(table_dir, "manifest.json"))

@@ -13,11 +13,13 @@ expensive ones.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 LINE = re.compile(
     r"^(PASS|FAIL) \[(\w+)\] (\S+) \(([0-9.]+)s\)"

@@ -24,7 +24,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _round_sorted(files: list[str]) -> list[str]:
@@ -45,7 +46,7 @@ def _default_files() -> list[str]:
     """All CORRECTNESS_r*.json in the repo root — the safe default, so a
     bare ``--check`` can never report a false "fresh" (ADVICE/VERDICT
     r04: the empty-argv footgun)."""
-    return _glob.glob("/root/repo/CORRECTNESS_r*.json")
+    return _glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
 
 HEADER = '''"""Driver-facing registration order — GENERATED by tools/rotate_order.py.
 
@@ -322,7 +323,8 @@ def main() -> int:
     out = "\n".join(lines) + "\n"
 
     if write:
-        with open("/root/repo/dbsuite_spark/_order.py", "w") as f:
+        order_py = os.path.join(REPO, "dbsuite_spark", "_order.py")
+        with open(order_py, "w") as f:
             f.write(out)
         print(
             f"wrote _order.py: {len(first)} first "
