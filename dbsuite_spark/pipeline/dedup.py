@@ -29,7 +29,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -336,10 +336,10 @@ def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production near-dup pair pipeline (MinHash → banded LSH →
     exact-Jaccard verify), shared by ``dedup_near_minhash`` (which emits
     it) and ``dedup_connected_components`` (which clusters it). The
-    whole chain — shingle index, candidate set, verified pairs — is
+    whole chain — doc signatures, candidate set, verified pairs — is
     memoized per session, so a session that runs several dedup stages
     (the bench, the corpus pipeline) pays for the signature/banding
-    chain once and never re-caches it (VERDICT r07 hygiene). Every
+    chain once and never rebuilds it (VERDICT r07 hygiene). Every
     plan-shaping tunable is folded into the memo key so a changed (or
     test-monkeypatched) constant rebuilds rather than returning the
     stale frame."""
@@ -354,15 +354,30 @@ def _minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_verified_pairs_build(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    sh = _shingle_rows(spark, sf_dir, key="doc_id").cache()
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64("s", F.lit(j))).alias(f"h{j}")
-            for j in range(N_HASHES)
-        ]
+    # Each shared intermediate is an EAGER localCheckpoint, computed by
+    # one job: under AQE a lazy .cache() is materialised once per
+    # REFERENCE (candidates ran three times, cand_arrs and the pairs
+    # twice each: 255 tasks for a cold CC build at sf0.01 on a 4-core
+    # host, 37 checkpointed). The first checkpoint is one row per doc —
+    # signature AND distinct-shingle array from one aggregation riding
+    # the keyed fan_out's hashpartitioning(doc_id) — not the (doc,
+    # shingle) index: a checkpoint taken under AQE reports
+    # UnknownPartitioning, so both doc_id groupBys over a checkpointed
+    # index re-shuffled it (+32% shuffle bytes).
+    docs = (
+        _shingle_rows(spark, sf_dir, key="doc_id")
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.min(F.xxhash64("s", F.lit(j))).alias(f"h{j}")
+                for j in range(N_HASHES)
+            ],
+            F.collect_list("s").alias("arr"),
+        )
+        .localCheckpoint()
     )
     n_bands = N_HASHES // BAND_SIZE
-    bands = sig.select(
+    bands = docs.select(
         "doc_id",
         F.explode(
             F.array(
@@ -405,21 +420,12 @@ def _minhash_verified_pairs_build(
         .filter(F.col("bn") <= BAND_BUCKET_CAP)
         .drop("bn")
     )
-    # Round-13 candidate rewrite (guide §2.4): generate collision pairs
-    # INSIDE each band bucket instead of self-joining the band index.
-    # The self-join planned its build side as a SECOND copy of the whole
-    # signature→explode→window subtree (bands is deliberately uncached;
-    # an Exchange and a BroadcastExchange over identical children cannot
-    # be merged by ReuseExchange), so the 24-hash aggregation ran twice
-    # per build. collect_list over (band, key) rides the exact exchange
-    # the cap window just established — zero new shuffles — and the
-    # sorted bucket array emits each d1 < d2 pair row-locally. Bucket
-    # arrays are ≤ BAND_BUCKET_CAP by the window filter above, so both
-    # the array and the cap² pair fan-out stay bounded (the same
-    # quadratic guard as before, same candidate set: measured
-    # row-identical vs the self-join at sf0.01 AND sf0.1 before
-    # adoption; interleaved timings won 8/8 post-warmup rounds both
-    # orderings, full chain ~3.6-4.0 → ~2.9-3.3 s at sf0.1).
+    # Candidate pairs are emitted INSIDE each band bucket (round 13)
+    # rather than by self-joining the band index, which planned a second
+    # copy of the whole signature subtree. collect_list over (band, key)
+    # rides the cap window's exchange, and the sorted bucket array emits
+    # each d1 < d2 pair row-locally; buckets hold ≤ BAND_BUCKET_CAP docs,
+    # so the cap² pair fan-out stays bounded.
     buckets = (
         capped.groupBy("band", "key")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
@@ -435,51 +441,29 @@ def _minhash_verified_pairs_build(
             ),
         )
     )
-    # The candidate set is tiny (collision pairs only) but consumed
-    # several times below (the doc-set union + two pair joins) — cache
-    # it so the banding chain runs once, not three times.
+    # The candidate set is tiny (collision pairs only) but referenced
+    # three times below (the doc-set union + two pair joins).
     candidates = (
         buckets.select(F.explode(pairs_arr).alias("p"))
         .select("p.d1", "p.d2")
         .distinct()
-        .cache()
+        .localCheckpoint()
     )
-    # Round-13 verify rewrite (guide §2.3/§2.4): score candidates with
-    # array_intersect over per-doc shingle ARRAYS collected for the
-    # candidate docs only, instead of _jaccard_on's index-join verify —
-    # which aggregated sizes over the FULL shingle index (a whole-index
-    # shuffle for a handful of candidate docs), re-shuffled the
-    # semi-filtered index by shingle for the intersection counts, and
-    # re-aggregated by pair. The arrays are exact distinct-shingle sets
-    # (sh rows are (doc, shingle)-distinct by construction), so
-    # |a1 ∩ a2| ≡ the s-join count and size(arr) ≡ the sizes aggregate:
-    # jaccard is the same division of the same exact integers,
-    # row-identical (verified vs the old path and the DuckDB oracle at
-    # sf0.01/sf0.1). Cost: one broadcast semi-join + one tiny groupBy
-    # over candidate docs' rows — candidate-bounded, never corpus-bounded
-    # (measured interleaved same-session at sf0.1: pairs min 4.26 → 3.60 s,
-    # winning all 4 rounds; plans/r13/dedup_near_minhash_after.txt).
-    # No .distinct() on the doc set: a left-semi probe is inherently
-    # set-semanticed on its right side, so the extra dedup exchange was
-    # one whole stage wave spent removing duplicates the join ignores
-    # (measured interleaved at sf0.1: won 4 of 5 rounds, ~0.3-0.9 s).
+    # Verify (round 13): array_intersect over the candidate docs' shingle
+    # ARRAYS instead of _jaccard_on's index join (a whole-index shuffle
+    # for a handful of candidate docs). The arrays are exact distinct
+    # shingle sets, so |a1 ∩ a2| ≡ the s-join count and size(arr) ≡ the
+    # sizes aggregate: jaccard is the same division of the same exact
+    # integers (row-identical vs the DuckDB oracle at sf0.01/sf0.1). No
+    # .distinct() on the doc set: a left-semi probe ignores duplicates.
     cand_docs = candidates.select(F.col("d1").alias("doc_id")).union(
         candidates.select(F.col("d2"))
     )
-    # Round-14: cache the candidate-doc shingle arrays. The frame feeds
-    # TWO broadcast builds (keyed d1 and d2); uncached, the semi-join +
-    # collect_list groupBy over the corpus-sized shingle index executed
-    # twice per cold build — the executed plan showed zero runtime
-    # exchange/stage reuse between the two broadcast build sides. The
-    # frame itself is candidate-bounded (a handful of rows), so the cache
-    # barrier costs nothing; interleaved same-session at sf0.1 the cache
-    # won 12/12 clean-window rounds (~11-12% off both headline dedup
-    # keys), and at corpus scale it removes a duplicated full-index pass.
+    # Feeds TWO joins (keyed d1 and d2); candidate-bounded.
     cand_arrs = (
-        sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_list("s").alias("arr"))
-        .cache()
+        docs.join(F.broadcast(cand_docs), "doc_id", "left_semi")
+        .select("doc_id", "arr")
+        .localCheckpoint()
     )
     scored = (
         candidates.join(
@@ -504,21 +488,23 @@ def _minhash_verified_pairs_build(
             ).alias("jaccard"),
         )
     )
-    # The verified pair set is tiny (near-dup pairs only) and consumed
-    # by several keys in one session (near_minhash's own emission, CC's
-    # cluster formation, the stats/representative layers above them) —
-    # cache it so the verify chain runs once.
-    return scored.filter(F.col("jaccard") >= JACCARD_THRESHOLD).cache()
+    # The verified pair set is tiny (near-dup pairs only) and referenced
+    # twice by CC alone (the edge union of both directions), and by
+    # several keys in one session through the memo.
+    return scored.filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
+    ).localCheckpoint()
 
 
 @query("dedup_near_minhash", oracle=_JACCARD_ORACLE, category="L")
 def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup detection at scale: 24 xxhash64 MinHashes per doc (one
-    groupBy), 12 bands of 2 exploded to a band index, self-join on band
-    collisions for candidates, exact-Jaccard verification of candidates
-    only. Deterministic (fixed hash seeds) with <1e-8 analytic miss risk on
-    the fixture's J≥0.889 pairs → verified output equals the exact result,
-    so it shares the exact key's SQL oracle (tested at every sf)."""
+    groupBy), 12 bands of 2 exploded to a band index, candidate pairs
+    emitted inside each sorted band-bucket array, exact-Jaccard
+    verification of candidates only. Deterministic (fixed hash seeds)
+    with <1e-8 analytic miss risk on the fixture's J≥0.889 pairs →
+    verified output equals the exact result, so it shares the exact
+    key's SQL oracle (tested at every sf)."""
     return _minhash_verified_pairs(spark, sf_dir)
 
 
@@ -554,6 +540,26 @@ FROM comp
 """
 
 
+def _checkpoint_label_sum(labels: DataFrame) -> tuple[DataFrame, int]:
+    """Eagerly checkpoint ``labels`` and return it with its ``lbl`` sum,
+    observed by the checkpoint's own job instead of a second aggregate
+    job over the materialised frame.
+
+    The checkpoint is re-wrapped over its row RDD so it carries no size
+    estimate: a checkpoint keeps its plan's, and a join estimates the
+    PRODUCT of its children's, so each round's estimate had about four
+    times the digits of the last (a 106-edge graph needing 21 rounds
+    spent about 270 s in planner BigInt products; 6.4 s re-wrapped)."""
+    obs = Observation()
+    cp = labels.observe(obs, F.sum("lbl").alias("s")).localCheckpoint()
+    spark = cp.sparkSession
+    cp = DataFrame(
+        spark._jsparkSession.createDataFrame(cp._jdf.rdd(), cp._jdf.schema()),
+        spark,
+    )
+    return cp, obs.get["s"]
+
+
 def connected_components(pairs: DataFrame) -> DataFrame:
     """(id, lbl) connected-component labels for an undirected pair list,
     via min-label propagation WITH per-round pointer jumping (path
@@ -567,48 +573,41 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     so convergence is O(log diameter) (measured: a 1000-node path
     converges in 10 rounds vs ~1000 without). Label values are always
     node ids, so the jump join always finds its target. Lineage is cut
-    per round with ``localCheckpoint``; convergence is detected from the
-    label-sum (strictly decreasing while anything changes, equal ⇔
-    propagation fixpoint — jumping never increases a label) — one scalar
-    action per round. ``CC_MAX_ROUNDS`` bounds the worst case."""
+    per round with an eager ``localCheckpoint``; convergence is detected
+    from the label-sum (strictly decreasing while anything changes, equal
+    ⇔ propagation fixpoint — jumping never increases a label), observed
+    by that checkpoint's own job — one job per round, no separate sum
+    action. ``CC_MAX_ROUNDS`` bounds the worst case."""
     edges = pairs.union(
         pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
     ).toDF("src", "dst").localCheckpoint()
     # Seed labels with min(id, min direct neighbor) — equivalent to one
     # propagation round, computed inside the same aggregation that
     # collects the node set, so convergence needs one fewer iteration.
-    labels = (
-        edges.groupBy(F.col("src").alias("id"))
-        .agg(F.min("dst").alias("mn"))
-        .select("id", F.least("id", "mn").alias("lbl"))
-        .localCheckpoint(eager=False)  # the prev_sum action materializes
-    )
     # Baseline the convergence metric on the SEED labels: near-dup
     # clusters are usually cliques (every pair detected), where the
     # min(id, min-neighbor) seed is already the fixpoint — priming
     # prev_sum lets round 1's equality check exit after ONE propagation
-    # round instead of needing a second confirming round. One scalar
-    # action on the already-checkpointed seed.
-    prev_sum = labels.agg(F.sum("lbl").alias("s")).first()["s"]
+    # round instead of needing a second confirming round.
+    labels, prev_sum = _checkpoint_label_sum(
+        edges.groupBy(F.col("src").alias("id"))
+        .agg(F.min("dst").alias("mn"))
+        .select("id", F.least("id", "mn").alias("lbl"))
+    )
     for _ in range(CC_MAX_ROUNDS):
         nbr = (
             edges.join(labels, edges.src == labels.id)
             .groupBy(edges.dst.alias("id"))
             .agg(F.min("lbl").alias("nlbl"))
         )
-        propagated = (
-            labels.join(nbr, "id", "left")
-            .select(
+        propagated, cur_sum = _checkpoint_label_sum(
+            labels.join(nbr, "id", "left").select(
                 "id",
                 F.least(
                     F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
                 ).alias("lbl"),
             )
-            # lazy: the convergence-sum action below materializes the
-            # checkpoint, so each round is ONE job
-            .localCheckpoint(eager=False)
         )
-        cur_sum = propagated.agg(F.sum("lbl").alias("s")).first()["s"]
         if cur_sum == prev_sum:
             return propagated
         prev_sum = cur_sum
@@ -646,8 +645,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components via ``connected_components`` min-label
     propagation; component id = min doc_id in the cluster. Consuming the
     LSH path here is the 100 TB design — cluster formation never touches
-    the quadratic exact self-join — and same-session it rides the cached
-    signature/candidate chain instead of recomputing a second pair
+    the quadratic exact self-join — and same-session it rides the
+    memoized signature/candidate chain instead of recomputing a second pair
     substrate. The verified pairs equal the exact-Jaccard pairs ON THE
     CURRENT FIXTURES (a fixture-scoped guarantee, not a general one: the
     <1e-8 analytic miss bound in ``dedup_near_minhash`` holds for the

@@ -186,17 +186,17 @@ def clear_session_cache(spark: SparkSession | None = None) -> None:
     after ``dedup_connected_components``) is timed on its own cold plan
     cost, not on a warm cache hit (VERDICT r08 ask #3).  Cached
     DataFrames are unpersisted so executor storage is actually released,
-    not just unreferenced.
+    not just unreferenced; checkpointed ones (the MinHash substrate) hold
+    no cache entry, and their blocks go when the frame is collected.
 
     Round-13 measurement-bug fix (guide §1): unpersisting the MEMOIZED
     frame is not enough — substrates also ``.cache()`` INTERIOR frames
-    (the MinHash shingle/candidate chain, the bulk-load parse split),
-    which stay in Spark's CacheManager after the memo entry dies; a
-    rebuilt equal plan then silently rehydrates the old cached data (the
-    "Asked to cache already cached data" warnings in earlier bench
-    tails), so a bench "cold" run after the first was warm on those
-    stages.  ``catalog.clearCache()`` on every targeted live session
-    makes cold actually cold.
+    (the bulk-load parse split), which stay in Spark's CacheManager after
+    the memo entry dies; a rebuilt equal plan then silently rehydrates
+    the old cached data (the "Asked to cache already cached data"
+    warnings in earlier bench tails), so a bench "cold" run after the
+    first was warm on those stages.  ``catalog.clearCache()`` on every
+    targeted live session makes cold actually cold.
     """
     sids = None if spark is None else {id(spark)}
     targets = [
@@ -247,10 +247,10 @@ def memo_cache(df: DataFrame, key: str) -> DataFrame:
 
 def memo_frame(spark: SparkSession, key: str, build) -> DataFrame:
     """Function-level variant of :func:`memo_cache`: memoize the WHOLE
-    built frame (including any internal ``cache()`` chain) per session,
-    so shared substrates consumed by several keys — the MinHash verified
-    pair set above all — construct and cache their interior stages once
-    per session instead of once per consumer."""
+    built frame (including any internal cache or checkpoint chain) per
+    session, so shared substrates consumed by several keys — the MinHash
+    verified pair set above all — construct and materialise their
+    interior stages once per session instead of once per consumer."""
     k, hit = _memo(spark, key)
     if hit is None:
         hit = _SESSION_CACHE[k] = build()

@@ -945,3 +945,133 @@ def test_two_stage_recall_vs_exact(spark, sf_dir):
         for r in specs["sim_search_two_stage"].fn(spark, sf_dir).collect()
     }
     assert len(two & exact) / len(exact) >= 0.9
+
+
+def test_minhash_substrate_materialises_once(spark, sf_dir):
+    """Each intermediate of the MinHash → LSH → verify substrate is
+    computed by one job. A lazy ``.cache()`` is materialised by AQE once
+    per REFERENCE (candidates three times, the doc arrays and the
+    verified pairs twice each), so a cold connected-components build at
+    sf0.01 ran 111 tasks at this suite's 8 shuffle partitions (about 255
+    at 32) to move a few hundred rows; with eager checkpoints it runs
+    37, and no plan reads an InMemoryRelation."""
+    import os
+
+    from dbsuite_spark.pipeline.dedup import (
+        _minhash_verified_pairs,
+        dedup_connected_components,
+    )
+    from dbsuite_spark.tables import clear_session_cache
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    sc = spark.sparkContext
+    group = "test_minhash_substrate_materialises_once"
+    clear_session_cache(spark)
+    sc.setJobGroup(group, group)
+    try:
+        dedup_connected_components(spark, sf01).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = 0
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(stage)
+            tasks += info.numCompletedTasks if info else 0
+    assert 0 < tasks <= 64, f"cold CC build ran {tasks} tasks"
+    plan = (
+        _minhash_verified_pairs(spark, sf01)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert "InMemoryRelation" not in plan, plan
+    clear_session_cache(spark)
+
+
+def _union_find_labels(edges):
+    """{node: min node id of its component} by plain union-find."""
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _jump_lowers_past_propagation(edges):
+    """Mirror ``connected_components`` in Python and report whether some
+    round's pointer jump lowers a label that one more propagation step
+    from the same round's labels would leave unchanged."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+
+    def propagate(lbl):
+        return {v: min([lbl[v]] + [lbl[u] for u in adj[v]]) for v in adj}
+
+    lbl = {v: min([v, *adj[v]]) for v in adj}
+    prev = sum(lbl.values())
+    for _ in range(50):
+        prop = propagate(lbl)
+        if sum(prop.values()) == prev:
+            return False
+        prev = sum(prop.values())
+        again = propagate(prop)
+        lbl = {v: min(prop[v], prop[prop[v]]) for v in prop}
+        if any(lbl[v] < prop[v] == again[v] for v in prop):
+            return True
+    return False
+
+
+def _random_graph(seed):
+    """Cliques, chains, stars and isolated pairs over disjoint node sets
+    drawn from shuffled ids, so no component's minimum sits at a
+    predictable position."""
+    import random
+
+    rng = random.Random(seed)
+    ids = list(range(1000))
+    rng.shuffle(ids)
+    it = iter(ids)
+    edges = []
+    for _ in range(rng.randint(2, 4)):
+        nodes = [next(it) for _ in range(rng.randint(3, 6))]
+        edges += [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]]
+    for _ in range(rng.randint(2, 4)):
+        nodes = [next(it) for _ in range(rng.randint(5, 40))]
+        edges += list(zip(nodes, nodes[1:]))
+    for _ in range(rng.randint(1, 3)):
+        hub = next(it)
+        edges += [(hub, next(it)) for _ in range(rng.randint(2, 8))]
+    for _ in range(rng.randint(1, 4)):
+        edges.append((next(it), next(it)))
+    return edges
+
+
+def test_connected_components_matches_union_find(spark):
+    """Property test of the sum-equality stop rule: on seeded random
+    graphs mixing cliques, long chains, stars and isolated pairs, the
+    (id, lbl) set equals a pure-Python union-find with min-id labels.
+    The path 0-2-1-3-4 is included because its round-1 pointer jump
+    lowers node 4's label where propagation alone would not, so an
+    exit that missed the jump's effect on the observed sum would show
+    here."""
+    from dbsuite_spark.pipeline.dedup import connected_components
+
+    jump_only = [(0, 2), (2, 1), (1, 3), (3, 4)]
+    assert _jump_lowers_past_propagation(jump_only)
+    graphs = [jump_only] + [_random_graph(seed) for seed in (1, 2, 3)]
+    for edges in graphs:
+        pairs = spark.createDataFrame(edges, "d1 bigint, d2 bigint")
+        got = {(r.id, r.lbl) for r in connected_components(pairs).collect()}
+        assert got == set(_union_find_labels(edges).items())
