@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbsuite_spark.etl.io import artifact_path
-from dbsuite_spark.exact import BIGCOUNT, DEC, DSUM
+from dbsuite_spark.exact import BIGCOUNT, DEC, DSUM, MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -228,8 +228,7 @@ FORGET_MOD = 50  # ~2% of users are deterministic "forget-me" requests
 _FORGET_ORACLE = f"""
 WITH forget AS (
   SELECT DISTINCT user_id FROM events
-  WHERE CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-             AS BIGINT) % {FORGET_MOD} = 0),
+  WHERE {MD5_BIGINT("CAST(user_id AS VARCHAR)")} % {FORGET_MOD} = 0),
 before AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS rows_before
   FROM events GROUP BY event_type),
@@ -265,13 +264,7 @@ def etl_row_level_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("user_id")
         .distinct()
         .filter(
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % FORGET_MOD
-            == 0
+            md5_bigint(F.col("user_id").cast("string")) % FORGET_MOD == 0
         )
     )
     before = e.groupBy("event_type").agg(

@@ -17,6 +17,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -97,16 +98,16 @@ def etl_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "etl_table_fingerprint",
-    oracle="""
+    oracle=f"""
 WITH h AS (
   SELECT o_orderstatus,
-         CAST('0x' || substr(md5(
-             CAST(o_orderkey AS VARCHAR) || '|' ||
-             CAST(o_custkey AS VARCHAR) || '|' ||
-             o_orderstatus || '|' ||
-             o_orderpriority || '|' ||
-             strftime(o_orderdate, '%Y-%m-%d %H:%M:%S')), 1, 15)
-           AS BIGINT) AS hv
+         {MD5_BIGINT(
+             "CAST(o_orderkey AS VARCHAR) || '|' || "
+             "CAST(o_custkey AS VARCHAR) || '|' || "
+             "o_orderstatus || '|' || "
+             "o_orderpriority || '|' || "
+             "strftime(o_orderdate, '%Y-%m-%d %H:%M:%S')"
+         )} AS hv
   FROM orders)
 SELECT o_orderstatus,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -137,7 +138,7 @@ def etl_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss"),
     )
-    hv = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
+    hv = md5_bigint(canon)
     return (
         o.select("o_orderstatus", hv.alias("hv"))
         .groupBy("o_orderstatus")
@@ -495,9 +496,9 @@ WITH g AS (
   FROM customer GROUP BY 1, 2),
 u AS (
   SELECT *,
-         (CAST(CAST('0x' || substr(md5(CAST(c_nationkey AS VARCHAR)
-              || ':' || c_mktsegment), 1, 15) AS BIGINT) % 1000000
-           AS DOUBLE) + 0.5) / 1000000.0 - 0.5 AS c
+         (CAST({MD5_BIGINT(
+                  "CAST(c_nationkey AS VARCHAR) || ':' || c_mktsegment"
+              )} % 1000000 AS DOUBLE) + 0.5) / 1000000.0 - 0.5 AS c
   FROM g)
 SELECT c_nationkey, c_mktsegment, true_count,
        -{DP_SCALE} * sign(c) * round(ln(1.0 - 2.0 * abs(c)), 6) AS noise,
@@ -538,21 +539,13 @@ def etl_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     u = (
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("c_nationkey").cast("string"),
-                            F.lit(":"),
-                            F.col("c_mktsegment"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_bigint(
+                F.concat(
+                    F.col("c_nationkey").cast("string"),
+                    F.lit(":"),
+                    F.col("c_mktsegment"),
+                )
+            )
             % 1000000
         ).cast("double")
         + 0.5

@@ -26,6 +26,17 @@ events sum-of-squares), while Spark's BigDecimal.doubleValue is — so
 wide variant only where the projection tolerates that (or where the
 compared value keeps more slack); prefer (18,6) and widen the INTEGRAL
 digits via scaling when magnitudes demand it.
+
+Hashing: ``md5_bigint(col)`` / ``MD5_BIGINT(expr)`` are the one
+deterministic row hash (samplers, splits, fingerprints, simhash/MinHash,
+A/B arms): the first 15 hex digits of md5, read as a BIGINT. md5 is
+implemented identically by both engines, so equal input strings give equal
+integers. 15 hex digits are 60 bits, so the value always lies in
+[0, 2^60) and stays positive in a signed BIGINT; 16 digits would overflow
+it. Draws such as ``% 100 < pct`` stay at the call site, and so does the
+rendering of the input: hash integer, string and timestamp renderings
+only, never the text of a double — its form differs across engines (see
+``etl_table_fingerprint``).
 """
 
 from __future__ import annotations
@@ -67,6 +78,16 @@ def DAVG(expr: str) -> str:
         f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE)"
         f" / COUNT({expr})"
     )
+
+
+def md5_bigint(col: Column) -> Column:
+    """First 15 hex digits of md5(col) as a BIGINT in [0, 2^60)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def MD5_BIGINT(expr: str) -> str:
+    """DuckDB-side twin of md5_bigint()."""
+    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
 def BIGCOUNT(expr: str = "*") -> str:

@@ -17,7 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbsuite_spark.exact import BIGCOUNT, DAVG, DEC, DSUM, davg, dsum
+from dbsuite_spark.exact import (
+    BIGCOUNT,
+    DAVG,
+    DEC,
+    DSUM,
+    davg,
+    dsum,
+    md5_bigint,
+)
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import fan_out, register_views, t
 
@@ -777,21 +785,13 @@ def agg_salted_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted = li.withColumn(
         "salt",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            F.col("l_orderkey").cast("string"),
-                            F.col("l_linenumber").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_bigint(
+                F.concat_ws(
+                    ":",
+                    F.col("l_orderkey").cast("string"),
+                    F.col("l_linenumber").cast("string"),
+                )
+            )
             % SALT_BUCKETS
         ).cast("int"),
     )

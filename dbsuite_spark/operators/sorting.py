@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -95,10 +96,9 @@ def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_fraction",
-    oracle="""
+    oracle=f"""
 SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-WHERE CAST('0x' || substr(md5(concat_ws('_', l_orderkey, l_linenumber)),
-           1, 15) AS BIGINT) % 100 < 10
+WHERE {MD5_BIGINT("concat_ws('_', l_orderkey, l_linenumber)")} % 100 < 10
 """,
     category="F",
 )
@@ -110,13 +110,7 @@ def sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-verified against the oracle exactly. Fraction bounds are also
     asserted in tests."""
     li = t(spark, sf_dir, "lineitem")
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("_", "l_orderkey", "l_linenumber")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_bigint(F.concat_ws("_", "l_orderkey", "l_linenumber"))
     return li.filter(hv % 100 < 10).select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -124,11 +118,10 @@ def sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_stratified_hash",
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, o_orderpriority, o_totalprice
 FROM orders
-WHERE CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)
-           AS BIGINT) % 100 <
+WHERE {MD5_BIGINT("CAST(o_orderkey AS VARCHAR)")} % 100 <
       CASE o_orderpriority WHEN '1-URGENT' THEN 50
                            WHEN '2-HIGH' THEN 20
                            ELSE 5 END
@@ -144,11 +137,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local predicate — no shuffle, no state, embarrassingly parallel
     at any scale."""
     o = t(spark, sf_dir, "orders")
-    hv = F.conv(
-        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_bigint(F.col("o_orderkey").cast("string"))
     rate = (
         F.when(F.col("o_orderpriority") == "1-URGENT", 50)
         .when(F.col("o_orderpriority") == "2-HIGH", 20)
@@ -269,8 +258,7 @@ RESERVOIR_K = 1000  # exact sample size
     oracle=f"""
 SELECT l_orderkey, l_linenumber, l_quantity
 FROM lineitem
-ORDER BY CAST('0x' || substr(md5(concat_ws('_', l_orderkey, l_linenumber)),
-              1, 15) AS BIGINT),
+ORDER BY {MD5_BIGINT("concat_ws('_', l_orderkey, l_linenumber)")},
          l_orderkey, l_linenumber, l_quantity
 LIMIT {RESERVOIR_K}
 """,
@@ -294,13 +282,7 @@ def sample_reservoir_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the cutoff on both engines (the tie-break stays NUMERIC; hashing
     the double would ride on engine float-rendering)."""
     li = t(spark, sf_dir, "lineitem")
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("_", "l_orderkey", "l_linenumber")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_bigint(F.concat_ws("_", "l_orderkey", "l_linenumber"))
     return (
         li.select("l_orderkey", "l_linenumber", "l_quantity", hv.alias("hv"))
         .orderBy("hv", "l_orderkey", "l_linenumber", "l_quantity")
@@ -383,9 +365,8 @@ WRS_K = 100  # fixed sample size
 _WRS_ORACLE = f"""
 WITH d AS (
   SELECT doc_id, n_chars,
-         (CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) % 1000000 AS DOUBLE) + 0.5) / 1000000.0
-           AS u
+         (CAST({MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % 1000000 AS DOUBLE)
+          + 0.5) / 1000000.0 AS u
   FROM documents),
 keyed AS (
   SELECT doc_id, n_chars,
@@ -424,14 +405,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the corpus."""
     d = t(spark, sf_dir, "documents")
     u = (
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % 1000000
-        ).cast("double")
+        (md5_bigint(F.col("doc_id").cast("string")) % 1000000).cast("double")
         + 0.5
     ) / 1000000.0
     # greatest(n_chars, 1) on BOTH sides: a zero-weight document would

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbsuite_spark.exact import DEC
+from dbsuite_spark.exact import DEC, MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -918,8 +918,7 @@ SRM_Z_CRIT = 3.89  # two-sided p < 1e-4, the industry SRM alarm threshold
 _SRM_ORACLE = f"""
 WITH u AS (SELECT DISTINCT user_id FROM events),
 arms AS (
-  SELECT CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % 2 AS INT) AS arm
+  SELECT CAST({MD5_BIGINT("CAST(user_id AS VARCHAR)")} % 2 AS INT) AS arm
   FROM u),
 s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
@@ -953,14 +952,7 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one bounded shuffle at any corpus size. The z arithmetic is
     mirrored IEEE scalar math on exact integer counts."""
     u = t(spark, sf_dir, "events").select("user_id").distinct()
-    arm = (
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    ).cast("int")
+    arm = (md5_bigint(F.col("user_id").cast("string")) % 2).cast("int")
     s = u.select(arm.alias("arm")).agg(
         F.count("*").alias("n_users"),
         F.count_if(F.col("arm") == 0).alias("n_control"),
@@ -981,7 +973,7 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- CUPED variance reduction (round 6) ----------------------------------
 
-_CUPED_ORACLE = """
+_CUPED_ORACLE = f"""
 WITH per_user AS (
   SELECT user_id,
          CAST(CAST(SUM(CASE WHEN event_id % 2 = 0
@@ -992,8 +984,7 @@ WITH per_user AS (
                             THEN CAST(value AS DECIMAL(18,6))
                             ELSE CAST(0 AS DECIMAL(18,6)) END)
               AS DECIMAL(18,6)) AS DOUBLE) AS y,
-         CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % 2 AS INT) AS arm
+         CAST({MD5_BIGINT("CAST(user_id AS VARCHAR)")} % 2 AS INT) AS arm
   FROM events GROUP BY user_id),
 s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1070,14 +1061,7 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
     ).withColumn(
         "arm",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).cast("int"),
+        (md5_bigint(F.col("user_id").cast("string")) % 2).cast("int"),
     )
     per_user = per_user.cache()  # feeds the overall AND per-arm reduces
 
@@ -1125,10 +1109,9 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- difference-in-differences (round 6) ----------------------------------
 
-_DID_ORACLE = """
+_DID_ORACLE = f"""
 WITH cells AS (
-  SELECT CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % 2 AS INT) AS treated,
+  SELECT CAST({MD5_BIGINT("CAST(user_id AS VARCHAR)")} % 2 AS INT) AS treated,
          CAST(((epoch_us(ts) // 86400000000) % 2 + 2) % 2 AS INT) AS post,
          CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv
@@ -1166,14 +1149,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant output, no wide shuffle. Epoch days use the same exact
     BIGINT floor arithmetic as ``events_heatmap_dow_hour``."""
     e = t(spark, sf_dir, "events")
-    treated = (
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    ).cast("int")
+    treated = (md5_bigint(F.col("user_id").cast("string")) % 2).cast("int")
     post = F.expr(
         "cast(pmod(pmod(unix_micros(ts), 172800000000) div 86400000000, 2)"
         " as int)"

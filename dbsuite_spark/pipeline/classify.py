@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.pipeline.clustering import DIM
 from dbsuite_spark.pipeline.vectors import COSINE, cosine
 from dbsuite_spark.registry import query
@@ -443,8 +444,7 @@ LC_EVAL_MOD = 5  # vec_id % 5 == 3 -> held-out eval set
 def _lc_point_sql(p: int) -> str:
     train = (
         f"vec_id % {LC_EVAL_MOD} <> 3 AND "
-        f"CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) "
-        f"AS BIGINT) % 100 < {p}"
+        f"{MD5_BIGINT('CAST(vec_id AS VARCHAR)')} % 100 < {p}"
     )
     return f"""
 {_cent_ctes(f"WHERE {train}", str(p))},
@@ -501,14 +501,7 @@ def ml_learning_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — the whole curve is {len(LC_FRACTIONS)} static branches of
     the classify plan, unioned; no loop depends on data."""
     e = t(spark, sf_dir, "embeddings")
-    hash_draw = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    hash_draw = md5_bigint(F.col("vec_id").cast("string")) % 100
     eval_set = e.filter(F.col("vec_id") % LC_EVAL_MOD == 3).select(
         "vec_id", F.col("label").alias("true_label"), "embedding"
     )

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import fan_out, memo_frame, t
 
@@ -813,8 +814,7 @@ splits AS (
               WHEN h < 95 THEN 'valid'
               ELSE 'test' END AS split
   FROM (SELECT doc_id,
-               CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) % 100 AS h
+               {MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % 100 AS h
         FROM documents))
 SELECT p.d1, p.d2, s1.split AS split1, s2.split AS split2, p.jaccard
 FROM pairs p
@@ -839,12 +839,7 @@ def docs_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_connected_components``)."""
 
     def split_of(doc: F.Column) -> F.Column:
-        h = (
-            F.conv(
-                F.substring(F.md5(doc.cast("string")), 1, 15), 16, 10
-            ).cast("long")
-            % 100
-        )
+        h = md5_bigint(doc.cast("string")) % 100
         return (
             F.when(h < 90, "train").when(h < 95, "valid").otherwise("test")
         )

@@ -3,8 +3,8 @@
 
 ``dedup_simhash`` gets a FULL SQL oracle, which is unusual for an LSH-family
 operator and worth spelling out:
-- the 60-bit per-shingle hash is the first 15 hex digits of md5, cast to
-  BIGINT identically on both engines (probed: equal values);
+- the 60-bit per-shingle hash is ``exact.md5_bigint`` (the first 15 hex
+  digits of md5, cast to BIGINT identically on both engines);
 - the signature is a deterministic bit-vote over distinct shingles;
 - the banded self-join uses 12 bands of 5 bits, and the pair filter is
   hamming ≤ 11 — by pigeonhole, ≤11 differing bits cannot corrupt all 12
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.pipeline.dedup import DF_CAP, _shingle_rows
 from dbsuite_spark.pipeline.vectors import COSINE, dot
 from dbsuite_spark.registry import query
@@ -49,7 +50,7 @@ sh AS (SELECT DISTINCT doc_id,
                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
        FROM toks),
 h AS (SELECT doc_id,
-             CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS hv
+             {MD5_BIGINT("s")} AS hv
       FROM sh),
 bits AS (SELECT doc_id, i,
                 SUM(CASE WHEN (hv >> i) & 1 = 1 THEN 1 ELSE -1 END) AS vote
@@ -70,7 +71,7 @@ def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash): 60 bit-votes over distinct shingles in ONE
     groupBy (60 conditional sums — map-side combined, one shuffle)."""
     sh = _shingle_rows(spark, sf_dir)
-    hv = F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long")
+    hv = md5_bigint(F.col("s"))
     h = sh.select("doc_id", hv.alias("hv"))
     votes = h.groupBy("doc_id").agg(
         *[
@@ -621,8 +622,8 @@ _INCR_ORACLE = f"""
 WITH tagged AS (
   SELECT doc_id, text, lang, source,
          md5(substr(text, 1, 60)) AS k,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % {NEW_BATCH_MOD} < 2 AS is_new
+         {MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % {NEW_BATCH_MOD} < 2
+           AS is_new
   FROM documents),
 hist AS (SELECT DISTINCT k FROM tagged WHERE NOT is_new),
 batch1 AS (
@@ -656,13 +657,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.md5(F.substring("text", 1, 60)).alias("k"),
         (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % NEW_BATCH_MOD
-            < 2
+            md5_bigint(F.col("doc_id").cast("string")) % NEW_BATCH_MOD < 2
         ).alias("is_new"),
     )
     hist = d.filter(~F.col("is_new")).select("k").distinct()

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.pipeline import dedup as D
 from dbsuite_spark.pipeline import quantization as Q
 from dbsuite_spark.pipeline import similarity as S
@@ -508,10 +509,9 @@ def _minhash_recall_gate(
     path, detected from the production MinHash pipeline, hits by
     pair-key semi-join. When ``sample_pct`` is given, BOTH sides are
     restricted to pairs whose two endpoints fall in the deterministic
-    md5 hash-sample (the ``docs_train_test_split`` draw: ``h(doc_id) %
-    100 < sample_pct``) — the documented 100 TB mitigation for the
-    uncapped truth self-join, now an actual parameter (VERDICT r06
-    ask #6)."""
+    md5 hash-sample (``exact.md5_bigint(doc_id) % 100 < sample_pct``)
+    — the documented 100 TB mitigation for the uncapped truth self-join,
+    now an actual parameter (VERDICT r06 ask #6)."""
     from dbsuite_spark.pipeline.dedup import (
         _jaccard_on,
         _shingle_rows,
@@ -524,13 +524,7 @@ def _minhash_recall_gate(
     if sample_pct is not None:
         d = t(spark, sf_dir, "documents")
         sampled = d.filter(
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % 100
-            < sample_pct
+            md5_bigint(F.col("doc_id").cast("string")) % 100 < sample_pct
         ).select("doc_id")
         # The sample is a tiny broadcast dimension; a pair is in the
         # sampled gate iff BOTH endpoints drew in — applied identically
@@ -583,8 +577,8 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncapped oracle SQL; an evaluation gate must not inherit the
     production guard it is measuring against. That uncapped self-join is
     the unbounded shape at 100 TB, so the mitigation there is SAMPLING —
-    run the gate on a deterministic hash-sample of documents (the
-    ``docs_train_test_split`` draw), not the full corpus; the MinHash
+    run the gate on a deterministic hash-sample of documents (an
+    ``exact.md5_bigint`` draw), not the full corpus; the MinHash
     side stays the production capped+banded pipeline either way
     (ADVICE r04); the sampled gate is the registered
     ``dedup_minhash_recall_sampled`` twin."""
@@ -600,8 +594,8 @@ def _minhash_recall_sampled_oracle() -> str:
 WITH truth AS ({truth_sql}),
 samp AS (
   SELECT doc_id FROM documents
-  WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-        AS BIGINT) % 100 < {MINHASH_GATE_SAMPLE_PCT}),
+  WHERE {MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % 100
+        < {MINHASH_GATE_SAMPLE_PCT}),
 st AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth
   WHERE d1 IN (SELECT doc_id FROM samp)
@@ -625,8 +619,8 @@ def dedup_minhash_recall_sampled(
     """The production-scale form of the MinHash recall gate (VERDICT r06
     ask #6): the uncapped exact-Jaccard TRUTH side — the one unbounded
     shape in the gate — runs only over a deterministic
-    {MINHASH_GATE_SAMPLE_PCT}% md5 hash-sample of documents (the same
-    draw as ``docs_train_test_split``; a pair is in the gate iff both
+    {MINHASH_GATE_SAMPLE_PCT}% md5 hash-sample of documents (an
+    ``exact.md5_bigint`` draw; a pair is in the gate iff both
     endpoints drew in, applied identically to truth and detected). The
     MinHash side stays the full production capped+banded pipeline. The
     oracle pins the same provable expectation as the full gate
@@ -925,8 +919,7 @@ WITH {JACCARD_CAPPED_CTE},
 pairs AS (SELECT d1, d2, jaccard FROM capped_pairs),
 hj AS (
   SELECT doc_id, j,
-         MIN(CAST('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || s), 1, 15)
-             AS BIGINT)) AS h
+         MIN({MD5_BIGINT("CAST(j AS VARCHAR) || ':' || s")}) AS h
   FROM sh CROSS JOIN (SELECT unnest(generate_series(0, {MH_EST_HASHES - 1}))
                       AS j)
   GROUP BY doc_id, j),
@@ -975,15 +968,7 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = _jaccard_on(None, sh).select("d1", "d2", "jaccard")
     hcols = [
-        F.min(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{j}:"), F.col("s"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-        ).alias(f"h{j}")
+        F.min(md5_bigint(F.concat(F.lit(f"{j}:"), F.col("s")))).alias(f"h{j}")
         for j in range(MH_EST_HASHES)
     ]
     sig = sh.groupBy("doc_id").agg(*hcols)
@@ -1137,8 +1122,7 @@ truth AS (SELECT d1, d2 FROM capped_pairs),
 nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth),
 hj AS (
   SELECT doc_id, j,
-         MIN(CAST('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || s), 1, 15)
-             AS BIGINT)) AS h
+         MIN({MD5_BIGINT("CAST(j AS VARCHAR) || ':' || s")}) AS h
   FROM sh CROSS JOIN (SELECT unnest(generate_series(0, {MH_EST_HASHES - 1}))
                       AS j)
   GROUP BY doc_id, j)"""
@@ -1207,15 +1191,7 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nt = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
     hcols = [
-        F.min(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{j}:"), F.col("s"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-        ).alias(f"h{j}")
+        F.min(md5_bigint(F.concat(F.lit(f"{j}:"), F.col("s")))).alias(f"h{j}")
         for j in range(MH_EST_HASHES)
     ]
     sig = memo_cache(

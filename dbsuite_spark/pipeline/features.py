@@ -218,8 +218,9 @@ def ml_linreg_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 HASH_DIM = 16  # feature-vector width (buckets)
 
 # Engine-portable token hash: md5 hex prefix parsed as an integer (the
-# package's cross-engine hash idiom, see pipeline/graph_extra.py) —
-# xxhash64 exists only in Spark, so the hashing trick uses md5 on both.
+# package's cross-engine hash idiom, ``exact.md5_bigint``, but 8 digits
+# wide: a separate hash) — xxhash64 exists only in Spark, so the hashing
+# trick uses md5 on both.
 _HB_SPARK = "CAST(conv(substr(md5(w), 1, 8), 16, 10) AS BIGINT) % 16"
 _HB_DUCK = "CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) % 16"
 

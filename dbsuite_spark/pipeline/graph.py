@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -179,8 +180,7 @@ allpairs AS (
   FROM os x JOIN os y ON x.o = y.o AND x.s < y.s),
 sampled AS (
   SELECT a, b FROM allpairs
-  WHERE CAST('0x' || substr(md5(CAST(a AS VARCHAR) || '-'
-             || CAST(b AS VARCHAR)), 1, 15) AS BIGINT)
+  WHERE {MD5_BIGINT("CAST(a AS VARCHAR) || '-' || CAST(b AS VARCHAR)")}
         % {DOULION_MOD} = 0),
 tri AS (
   SELECT e1.a, e1.b, e2.b AS c
@@ -222,20 +222,11 @@ def graph_triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     coin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "-", F.col("a").cast("string"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_bigint(
+            F.concat_ws(
+                "-", F.col("a").cast("string"), F.col("b").cast("string")
+            )
+        )
         % DOULION_MOD
     )
     sampled = allpairs.filter(coin == 0)

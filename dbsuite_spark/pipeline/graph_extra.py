@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -44,21 +45,13 @@ def _retained_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     coin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "-",
-                        F.least("src", "dst").cast("string"),
-                        F.greatest("src", "dst").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_bigint(
+            F.concat_ws(
+                "-",
+                F.least("src", "dst").cast("string"),
+                F.greatest("src", "dst").cast("string"),
+            )
+        )
         % HOLDOUT_MOD
     )
     return edges.filter(coin == 0)
@@ -72,10 +65,10 @@ alledges AS (
   FROM os x JOIN os y ON x.o = y.o AND x.s <> y.s),
 edges AS (
   SELECT src, dst FROM alledges
-  WHERE CAST('0x' || substr(md5(
-            CAST(LEAST(src, dst) AS VARCHAR) || '-'
-            || CAST(GREATEST(src, dst) AS VARCHAR)), 1, 15) AS BIGINT)
-        % {HOLDOUT_MOD} = 0)
+  WHERE {MD5_BIGINT(
+            "CAST(LEAST(src, dst) AS VARCHAR) || '-'"
+            " || CAST(GREATEST(src, dst) AS VARCHAR)"
+        )} % {HOLDOUT_MOD} = 0)
 """
 
 
@@ -530,16 +523,12 @@ RW_STEPS = 4  # steps per walk
 RW_START_MOD = 10  # user_id % MOD == 0 -> start node (bounded fan-out)
 
 
-def _rw_md5_idx(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
 def _rw_oracle() -> str:
     from dbsuite_spark.pipeline.graph import _BFS_EDGES_SQL
 
     steps = []
     for s in range(1, RW_STEPS + 1):
-        hsh = _rw_md5_idx(
+        hsh = MD5_BIGINT(
             f"w{s - 1}.start || ':' || CAST(w{s - 1}.w AS VARCHAR)"
             f" || ':' || {s}"
         )
@@ -627,23 +616,15 @@ def graph_random_walk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "start", "w", F.col("start").alias("path"), F.col("start").alias("cur")
     )
     for s in range(1, RW_STEPS + 1):
-        hsh = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("start"),
-                        F.lit(":"),
-                        F.col("w").cast("string"),
-                        F.lit(":"),
-                        F.lit(str(s)),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hsh = md5_bigint(
+            F.concat(
+                F.col("start"),
+                F.lit(":"),
+                F.col("w").cast("string"),
+                F.lit(":"),
+                F.lit(str(s)),
+            )
+        )
         nxt = F.element_at(
             F.col("nbrs"), (hsh % F.col("deg")).cast("int") + 1
         )

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbsuite_spark.exact import BIGCOUNT, DSUM, dsum
+from dbsuite_spark.exact import BIGCOUNT, DSUM, MD5_BIGINT, dsum, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -632,8 +632,8 @@ K_FOLDS = 5
 
 _KFOLD_ORACLE = f"""
 WITH f AS (
-  SELECT CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % {K_FOLDS} AS INT) AS fold,
+  SELECT CAST({MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % {K_FOLDS} AS INT)
+           AS fold,
          lang, n_chars
   FROM documents)
 SELECT fold, {BIGCOUNT()} AS n_docs,
@@ -648,11 +648,10 @@ FROM f GROUP BY fold
 def ml_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic {K_FOLDS}-fold cross-validation assignment with the
     per-fold balance summary a team inspects before launching K training
-    runs: fold = md5(doc_id) % {K_FOLDS} (the ``docs_train_test_split``
-    draw — content-id-keyed, so the folds are stable across reshards,
-    snapshots, and engines; no rand(), no leakage when documents are
-    re-ingested), summarized as doc count, distinct-language coverage,
-    and exact character mass per fold.
+    runs: fold = ``exact.md5_bigint(doc_id)`` % {K_FOLDS} (content-id-keyed,
+    so the folds are stable across reshards, snapshots, and engines; no
+    rand(), no leakage when documents are re-ingested), summarized as doc
+    count, distinct-language coverage, and exact character mass per fold.
 
     Scale: the assignment is a row-local hash; the summary is one
     partial+final aggregation over {K_FOLDS} groups — no other shuffle
@@ -660,14 +659,7 @@ def ml_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division mirrored in the oracle."""
     d = t(spark, sf_dir, "documents")
     f = d.select(
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % K_FOLDS
-        )
+        (md5_bigint(F.col("doc_id").cast("string")) % K_FOLDS)
         .cast("int")
         .alias("fold"),
         "lang",

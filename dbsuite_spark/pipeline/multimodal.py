@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.pipeline.vectors import COSINE, L2NORM, l2_norm
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
@@ -131,8 +132,7 @@ neg AS (
     CROSS JOIN (SELECT unnest(generate_series(1, {NEG_K})) AS neg_slot) k
     JOIN cand c
       ON c.bucket = CAST(
-           CAST('0x' || substr(md5(CAST(a.doc_id AS VARCHAR) || ':'
-                               || k.neg_slot), 1, 15) AS BIGINT)
+           {MD5_BIGINT("CAST(a.doc_id AS VARCHAR) || ':' || k.neg_slot")}
              % {NEG_BUCKETS} AS INT)
      AND c.vec_id <> a.doc_id)
   WHERE rn = 1),
@@ -212,21 +212,13 @@ def multimodal_contrastive_pairs(
     slot_bucket = slots.withColumn(
         "bucket",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("doc_id").cast("string"),
-                            F.lit(":"),
-                            F.col("neg_slot").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_bigint(
+                F.concat(
+                    F.col("doc_id").cast("string"),
+                    F.lit(":"),
+                    F.col("neg_slot").cast("string"),
+                )
+            )
             % NEG_BUCKETS
         ).cast("int"),
     )

@@ -12,12 +12,12 @@ ONE shuffle per shard.
 Determinism/scale design:
 
 - Documents are assigned to ``PACK_SHARDS`` independent shards by a
-  deterministic hash of ``doc_id`` (same md5-prefix expression as
-  ``docs_train_test_split``). Each shard packs independently — on a
-  1000-executor cluster every shard is one window partition, so packing
-  100 TB is embarrassingly parallel and adds exactly one shuffle (the
-  window's partition-by). The cost is only that sequences never span
-  shards (negligible waste: ≤ one partial sequence per shard).
+  deterministic hash of ``doc_id`` (``exact.md5_bigint``). Each shard
+  packs independently — on a 1000-executor cluster every shard is one
+  window partition, so packing 100 TB is embarrassingly parallel and
+  adds exactly one shuffle (the window's partition-by). The cost is only
+  that sequences never span shards (negligible waste: ≤ one partial
+  sequence per shard).
 - Within a shard, documents are ordered by ``doc_id`` (a stable total
   order), token offsets are the running sum of token counts (window
   cumsum), and a document starts in sequence ``floor(off / BUDGET)``.
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -46,8 +47,7 @@ PACK_SHARDS = 16  # independent packing shards
 _PACK_ORACLE = f"""
 WITH d AS (
   SELECT doc_id,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % {PACK_SHARDS} AS shard,
+         {MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % {PACK_SHARDS} AS shard,
          CAST(len(string_split(text, ' ')) + 1 AS BIGINT) AS n_tokens
   FROM documents),
 o AS (
@@ -75,12 +75,7 @@ def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         "doc_id",
         (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % PACK_SHARDS
+            md5_bigint(F.col("doc_id").cast("string")) % PACK_SHARDS
         ).alias("shard"),
         (F.size(F.split(F.col("text"), " ")) + 1)
         .cast("bigint")
@@ -112,8 +107,7 @@ def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_STATS_ORACLE = f"""
 WITH d AS (
   SELECT doc_id,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % {PACK_SHARDS} AS shard,
+         {MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % {PACK_SHARDS} AS shard,
          CAST(len(string_split(text, ' ')) + 1 AS BIGINT) AS n_tokens
   FROM documents),
 o AS (
@@ -146,12 +140,7 @@ def docs_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         "doc_id",
         (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % PACK_SHARDS
+            md5_bigint(F.col("doc_id").cast("string")) % PACK_SHARDS
         ).alias("shard"),
         (F.size(F.split(F.col("text"), " ")) + 1)
         .cast("bigint")
@@ -303,8 +292,8 @@ MASK_PCT = 15  # per-token mask probability (percent), hash-decided
 _SPAN_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, i,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || i),
-                             1, 15) AS BIGINT) % 100 < {MASK_PCT} AS m
+         {MD5_BIGINT("CAST(doc_id AS VARCHAR) || ':' || i")} % 100
+           < {MASK_PCT} AS m
   FROM (SELECT doc_id,
                unnest(generate_series(1, len(string_split(text, ' '))))
                  AS i
@@ -362,21 +351,13 @@ def docs_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "i",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("doc_id").cast("string"),
-                            F.lit(":"),
-                            F.col("i").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_bigint(
+                F.concat(
+                    F.col("doc_id").cast("string"),
+                    F.lit(":"),
+                    F.col("i").cast("string"),
+                )
+            )
             % 100
             < MASK_PCT
         ).alias("m"),

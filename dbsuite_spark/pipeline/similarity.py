@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.pipeline.vectors import (
     COSINE,
     DOT,
@@ -957,8 +958,7 @@ def _knn_density_sampled_oracle() -> str:
 WITH {_knn_density_ctes()},
 samp AS (
   SELECT knn_density, vec_id FROM dens
-  WHERE CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
-        AS BIGINT) % 100 < {DENSITY_SAMPLE_PCT}),
+  WHERE {MD5_BIGINT("CAST(vec_id AS VARCHAR)")} % 100 < {DENSITY_SAMPLE_PCT}),
 ns AS (SELECT COUNT(*) AS n_s FROM samp),
 ranked AS (
   SELECT knn_density, vec_id, row_number() OVER (
@@ -969,8 +969,8 @@ thr AS (
   FROM ranked r, ns
   WHERE r.rn = CAST(CEIL({DENSITY_PRUNE_TOP_FRAC} * n_s) AS BIGINT))
 SELECT d.vec_id, d.cell, d.k_used, d.knn_density,
-       CAST('0x' || substr(md5(CAST(d.vec_id AS VARCHAR)), 1, 15)
-           AS BIGINT) % 100 < {DENSITY_SAMPLE_PCT} AS in_sample,
+       {MD5_BIGINT("CAST(d.vec_id AS VARCHAR)")} % 100 < {DENSITY_SAMPLE_PCT}
+         AS in_sample,
        thr.thr_density,
        d.knn_density > thr.thr_density
            OR (d.knn_density = thr.thr_density
@@ -993,7 +993,7 @@ def docs_knn_density_prune_sampled(
     single-partition window ever sees the full vector population.
 
     Mechanics: a deterministic {DENSITY_SAMPLE_PCT}% md5 hash-sample of
-    the density frame (the ``docs_train_test_split`` draw) is ranked by
+    the density frame (an ``exact.md5_bigint`` draw) is ranked by
     (knn_density DESC, vec_id DESC); the sample row at rank
     ceil({DENSITY_PRUNE_TOP_FRAC}·n_sample) becomes the threshold
     (density, vec_id) pair, broadcast as one row; every density row —
@@ -1010,11 +1010,7 @@ def docs_knn_density_prune_sampled(
     the equality in the tie-break compares bit-identical doubles."""
     dens = _knn_density_frame(spark, sf_dir)
     in_sample = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        % 100
-        < DENSITY_SAMPLE_PCT
+        md5_bigint(F.col("vec_id").cast("string")) % 100 < DENSITY_SAMPLE_PCT
     )
     samp = dens.filter(in_sample).select("knn_density", "vec_id")
     ns = samp.agg(F.count("*").alias("n_s"))
@@ -1181,8 +1177,7 @@ def _knn_graph_recall_oracle() -> str:
 WITH {_SEM_ASSIGN_CTE},
 srcs AS (
   SELECT vec_id FROM embeddings
-  WHERE CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
-        AS BIGINT) % 100 < {KNN_RECALL_SRC_PCT}),
+  WHERE {MD5_BIGINT("CAST(vec_id AS VARCHAR)")} % 100 < {KNN_RECALL_SRC_PCT}),
 gp AS (
   SELECT a.vec_id AS src, b.vec_id AS dst,
          {COSINE('a.embedding', 'b.embedding')} AS cos_sim
@@ -1238,11 +1233,7 @@ def sim_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = t(spark, sf_dir, "embeddings")
     draw = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        % 100
-        < KNN_RECALL_SRC_PCT
+        md5_bigint(F.col("vec_id").cast("string")) % 100 < KNN_RECALL_SRC_PCT
     )
     srcs = F.broadcast(e.filter(draw).select(F.col("vec_id").alias("src")))
     ga = e.select(
@@ -1363,9 +1354,6 @@ BEAM_OUT = 5  # final top-k emitted, scored against the exact truth
 def _graph_beam_oracle() -> str:
     from dbsuite_spark.pipeline.dedup_extra import _SEM_ASSIGN_CTE
 
-    def md5i(x: str) -> str:
-        return f"CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
-
     rounds = []
     for r in range(1, BEAM_ROUNDS + 1):
         rounds.append(f"""
@@ -1402,7 +1390,7 @@ ktop AS (
     FROM p) WHERE rn <= {KNN_GRAPH_K}),
 nodes AS (
   SELECT vec_id,
-         {md5i("CAST(vec_id AS VARCHAR)")} % {BEAM_BUCKETS} AS bucket
+         {MD5_BIGINT("CAST(vec_id AS VARCHAR)")} % {BEAM_BUCKETS} AS bucket
   FROM embeddings),
 reps AS MATERIALIZED (
   SELECT bucket, MIN(vec_id) AS rep FROM nodes GROUP BY bucket),
@@ -1411,7 +1399,7 @@ longe AS (
   FROM nodes n,
        (SELECT unnest(generate_series(1, {BEAM_LONG})) AS m) ms
   JOIN reps r
-    ON r.bucket = {md5i(
+    ON r.bucket = {MD5_BIGINT(
         "CAST(n.vec_id AS VARCHAR) || ':' || CAST(ms.m AS VARCHAR)"
     )} % {BEAM_BUCKETS}),
 edges AS MATERIALIZED (
@@ -1491,14 +1479,7 @@ def _beam_final(
     beam's best cosine is monotone in the round budget."""
     e = t(spark, sf_dir, "embeddings")
     ktop = _knn_topk_frame(spark, sf_dir).select("src", "dst")
-    bucket_of = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % BEAM_BUCKETS
-    )
+    bucket_of = md5_bigint(F.col("vec_id").cast("string")) % BEAM_BUCKETS
     nodes = e.select("vec_id", bucket_of.alias("bucket"))
     reps = nodes.groupBy("bucket").agg(F.min("vec_id").alias("rep"))
     longe = (
@@ -1508,21 +1489,13 @@ def _beam_final(
         .select(
             F.col("vec_id").alias("src"),
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("vec_id").cast("string"),
-                                F.lit(":"),
-                                F.col("m").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                md5_bigint(
+                    F.concat(
+                        F.col("vec_id").cast("string"),
+                        F.lit(":"),
+                        F.col("m").cast("string"),
+                    )
+                )
                 % BEAM_BUCKETS
             ).alias("tbucket"),
         )

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -44,9 +45,9 @@ WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
 grams AS (
   SELECT doc_id,
-         CAST('0x' || substr(md5(array_to_string(
-             list_slice(tk, i, i + {GRAM_WORDS - 1}), ' ')), 1, 15)
-           AS BIGINT) AS hv
+         {MD5_BIGINT(
+             f"array_to_string(list_slice(tk, i, i + {GRAM_WORDS - 1}), ' ')"
+         )} AS hv
   FROM toks, unnest(generate_series(1, len(tk) - {GRAM_WORDS - 1})) u(i)),
 freq AS (
   SELECT hv, COUNT(*) AS cnt FROM grams GROUP BY hv),
@@ -85,9 +86,7 @@ def _gram_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(grams).alias("g")
     ).select(
         "doc_id",
-        F.conv(F.substring(F.md5("g"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("hv"),
+        md5_bigint(F.col("g")).alias("hv"),
     )
 
 
@@ -133,9 +132,9 @@ WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
 grams AS (
   SELECT doc_id,
-         CAST('0x' || substr(md5(array_to_string(
-             list_slice(tk, i, i + {GRAM_WORDS - 1}), ' ')), 1, 15)
-           AS BIGINT) AS hv
+         {MD5_BIGINT(
+             f"array_to_string(list_slice(tk, i, i + {GRAM_WORDS - 1}), ' ')"
+         )} AS hv
   FROM toks, unnest(generate_series(1, len(tk) - {GRAM_WORDS - 1})) u(i)),
 first_seen AS (
   SELECT hv, MIN(doc_id) AS first_doc FROM grams GROUP BY hv),
@@ -209,10 +208,10 @@ b AS (
   SELECT doc_id, toks, n,
          list_filter(
            generate_series({CDC_WINDOW}, n - 1),
-           i -> CAST('0x' || substr(
-                  md5(array_to_string(
-                        list_slice(toks, i - {CDC_WINDOW - 1}, i), ' ')),
-                  1, 15) AS BIGINT) % {CDC_DIVISOR} = 0) AS bpos
+           i -> {MD5_BIGINT(
+                  "array_to_string("
+                  f"list_slice(toks, i - {CDC_WINDOW - 1}, i), ' ')"
+                )} % {CDC_DIVISOR} = 0) AS bpos
   FROM tk),
 kx AS (
   SELECT doc_id, toks, n, bpos,
@@ -302,24 +301,16 @@ def _cdc_chunk_rows(d: DataFrame) -> DataFrame:
 
     def _cond(i):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            " ",
-                            F.slice(
-                                F.col("toks"),
-                                i - (CDC_WINDOW - 1),
-                                F.lit(CDC_WINDOW),
-                            ),
-                        )
+            md5_bigint(
+                F.concat_ws(
+                    " ",
+                    F.slice(
+                        F.col("toks"),
+                        i - (CDC_WINDOW - 1),
+                        F.lit(CDC_WINDOW),
                     ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+                )
+            )
             % CDC_DIVISOR
             == 0
         )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -259,15 +260,14 @@ def pipeline_quality_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "docs_train_test_split",
-    oracle="""
+    oracle=f"""
 SELECT doc_id, lang,
        CASE WHEN h < 90 THEN 'train'
             WHEN h < 95 THEN 'valid'
             ELSE 'test' END AS split
 FROM (
   SELECT doc_id, lang,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % 100 AS h
+         {MD5_BIGINT("CAST(doc_id AS VARCHAR)")} % 100 AS h
   FROM documents)
 """,
     category="L",
@@ -279,14 +279,7 @@ def docs_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly what leakage-free training-data curation requires. Pure
     row-local predicate: no shuffle, no RNG, no state."""
     d = t(spark, sf_dir, "documents")
-    h = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = md5_bigint(F.col("doc_id").cast("string")) % 100
     return d.select(
         "doc_id",
         "lang",

@@ -34,11 +34,11 @@ sampler is a pure row-local expression — a filter pushed at the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dbsuite_spark.exact import DAVG, DSUM, davg, dsum
+from dbsuite_spark.exact import DAVG, DSUM, MD5_BIGINT, davg, dsum, md5_bigint
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import memo_cache, t
 
@@ -237,24 +237,13 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _keep_hash(doc: Column) -> Column:
-    """Deterministic uniform draw in [0, 1e6): md5 of the id, first 15 hex
-    digits as an integer, mod 1e6 — engine-neutral (same construction as
-    ``docs_train_test_split``)."""
-    return (
-        F.conv(F.substring(F.md5(doc.cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % 1_000_000
-    )
-
-
 @query(
     "docs_sample_weighted",
     oracle=f"""
 SELECT doc_id, source, n_chars,
        least(1.0, CAST(n_chars AS DOUBLE) / {SAMPLE_TARGET_CHARS}) AS keep_p
 FROM documents
-WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+WHERE {MD5_BIGINT("CAST(doc_id AS VARCHAR)")}
       % 1000000
       < CAST(floor(least(1.0, CAST(n_chars AS DOUBLE)
                               / {SAMPLE_TARGET_CHARS}) * 1000000.0)
@@ -283,7 +272,7 @@ def docs_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1.0), F.col("n_chars").cast("double") / SAMPLE_TARGET_CHARS
     )
     return d.filter(
-        _keep_hash(F.col("doc_id"))
+        md5_bigint(F.col("doc_id").cast("string")) % 1_000_000
         < F.floor(keep_p * 1_000_000.0).cast("long")
     ).select("doc_id", "source", "n_chars", keep_p.alias("keep_p"))
 
@@ -409,7 +398,7 @@ rates AS (
   FROM shares)
 SELECT d.doc_id, d.source, r.rate
 FROM documents d JOIN rates r ON d.source = r.source
-WHERE CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+WHERE {MD5_BIGINT("CAST(d.doc_id AS VARCHAR)")}
       % 1000000
       < CAST(floor(r.rate * 1000000.0) AS BIGINT)
 """,
@@ -454,7 +443,7 @@ def pipeline_mix_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.join(F.broadcast(rates), "source")
         .filter(
-            _keep_hash(F.col("doc_id"))
+            md5_bigint(F.col("doc_id").cast("string")) % 1_000_000
             < F.floor(F.col("rate") * 1_000_000.0).cast("long")
         )
         .select("doc_id", "source", "rate")
