@@ -186,7 +186,11 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .parquet(fact_path)
         )
-    fact = spark.read.parquet(fact_path)
+    # the schema just written, declared so the read infers nothing (no
+    # footer-reading job); l_year comes back from the directory names
+    fact = spark.read.schema("l_extendedprice DOUBLE, l_year INT").parquet(
+        fact_path
+    )
     dim = (
         t(spark, sf_dir, "orders")
         .filter(

@@ -1126,9 +1126,11 @@ def stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_phase()
 
     # crash-replay: re-deliver batch 0's exact rows against the live log
-    replay = spark.read.parquet(
-        os.path.join(live, "part-00000.parquet")
-    ).select(*proj)
+    replay = (
+        spark.read.schema(src.schema)  # the landed files' own schema
+        .parquet(os.path.join(live, "part-00000.parquet"))
+        .select(*proj)
+    )
     outcome = tablelog.msink_commit_batch(table_dir, replay, 0)
     if outcome != "skipped":
         raise RuntimeError(f"replayed batch must be skipped, got {outcome}")

@@ -4,6 +4,14 @@ All queries funnel through ``t()`` so schema/timezone discipline is applied
 in exactly one place. Reads are plain columnar Parquet scans — Catalyst
 pushes filters and prunes columns into the scan (verify with
 ``.explain('formatted')`` → PushedFilters / ReadSchema).
+
+Every fixture is read with its schema DECLARED (``FIXTURE_SCHEMA``), not
+inferred: a schema-less ``spark.read.parquet`` starts one Spark job per
+read just to open a footer, and in the per-job-cost-bound benchmark keys
+those jobs were every build job ``olap`` ran. A declared schema would
+turn a renamed column into silent NULLs, so ``t()`` first checks the
+file's footer with ``pyarrow`` (no Spark job) and raises
+:class:`FixtureDriftError` when the layout moved.
 """
 
 from __future__ import annotations
@@ -12,7 +20,10 @@ import os
 import re
 import urllib.parse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -29,12 +40,20 @@ TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Canonical post-normalization fixture schema (Spark simpleString types),
-# exactly what ``t()`` hands every operator. Single source of truth: the
+# Fixture schema (Spark simpleString types): the schema ``t()`` DECLARES on
+# every read, so exactly what it hands every operator. Column names and
+# order must match each file's footer (``t()`` checks, see
+# ``_check_footer``). The one declared type that differs from what Spark
+# would infer is ``events.ts``: the fixtures store it as parquet
+# TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark infers as
+# timestamp_ntz but reads directly as ``timestamp`` when declared — the
+# same wall clock under the UTC session, and the type DuckDB's
+# ``CAST(ts AS TIMESTAMP)`` matches. Single source of truth: the
 # schema-drift canary (tests/test_fixture_schemas.py) asserts it against
-# the live fixtures, and etl/sources.py derives the neutral-typed
-# ``_DOC_SCHEMA`` for the catalog_document oracle from it — update HERE
-# (only) when the driver regenerates fixtures with a new layout.
+# Spark's inferred schema of the live fixtures, and etl/sources.py
+# derives the neutral-typed ``_DOC_SCHEMA`` for the catalog_document
+# oracle from it — update HERE (only) when the driver regenerates
+# fixtures with a new layout.
 FIXTURE_SCHEMA: dict[str, list[tuple[str, str]]] = {
     "region": [("r_regionkey", "int"), ("r_name", "string")],
     "nation": [
@@ -86,7 +105,7 @@ FIXTURE_SCHEMA: dict[str, list[tuple[str, str]]] = {
     ],
     "events": [
         ("event_id", "bigint"),
-        ("ts", "timestamp"),  # t() normalizes nanos/micros/NTZ here
+        ("ts", "timestamp"),  # stored TIMESTAMP(MICROS) NTZ, read as timestamp
         ("user_id", "bigint"),
         ("event_type", "string"),
         ("value", "double"),
@@ -107,31 +126,71 @@ FIXTURE_SCHEMA: dict[str, list[tuple[str, str]]] = {
 }
 
 
+_TYPES = {
+    dt.simpleString(): dt
+    for dt in (
+        T.IntegerType(),
+        T.LongType(),
+        T.DoubleType(),
+        T.StringType(),
+        T.TimestampType(),
+        T.TimestampNTZType(),
+        T.ArrayType(T.FloatType()),
+    )
+}
+
+# FIXTURE_SCHEMA as the StructType each read declares, built once.
+_STRUCTS: dict[str, T.StructType] = {
+    name: T.StructType([T.StructField(c, _TYPES[ty]) for c, ty in cols])
+    for name, cols in FIXTURE_SCHEMA.items()
+}
+
+
+class FixtureDriftError(RuntimeError):
+    """A fixture file's layout no longer matches ``FIXTURE_SCHEMA``."""
+
+
+def _check_footer(path: str, name: str) -> None:
+    """Raise :class:`FixtureDriftError` unless the parquet footer at
+    ``path`` has exactly ``FIXTURE_SCHEMA[name]``'s column names in order
+    and stores no timestamp in nanoseconds. ``pyarrow`` reads the footer
+    in well under a millisecond and starts no Spark job. Names matter
+    because a declared schema reads a renamed column as NULLs; the unit
+    matters because Spark reads a TIMESTAMP(NANOS) column (the round-1
+    ``events.ts`` layout) declared as ``timestamp`` only to fail inside
+    the first job (micro- and millisecond columns read correctly)."""
+    footer = pq.read_schema(path)
+    want = [c for c, _ in FIXTURE_SCHEMA[name]]
+    nanos = [
+        f.name
+        for f in footer
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    if footer.names != want or nanos:
+        raise FixtureDriftError(
+            f"fixture drift in '{name}' — the driver regenerated testdata "
+            f"with a different schema; update dbsuite_spark/tables."
+            f"FIXTURE_SCHEMA (footer columns {footer.names}, nanosecond "
+            f"timestamps {nanos}; expected {want})"
+        )
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; pins session TZ to UTC first (SURVEY §7.4.3).
 
-    ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS) (round-1
-    fixtures; Spark 4 rejects it unless read as long via the legacy flag) or
-    TIMESTAMP(MICROS, isAdjustedToUTC=false) (round-2 fixtures; Spark reads
-    TIMESTAMP_NTZ). Normalize both to microsecond TimestampType so every
-    downstream operator (windows, watermarks, oracles) sees one type, and
-    the wall-clock matches DuckDB's ``CAST(ts AS TIMESTAMP)`` (SURVEY §7.4.3).
+    The read declares the table's ``FIXTURE_SCHEMA`` instead of inferring
+    one: inference is one Spark job per read, this is none. The footer
+    check (:func:`_check_footer`) stands in for what inference would have
+    caught, so a drifted fixture raises here, not as NULL columns
+    downstream. ``events.ts`` comes back as microsecond TimestampType, so
+    every downstream operator (windows, watermarks, oracles) sees one
+    type, and the wall-clock matches DuckDB's ``CAST(ts AS TIMESTAMP)``
+    (SURVEY §7.4.3).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # nanos read as long under the legacy flag: truncate to micros.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif not isinstance(ts_type, T.TimestampType):
-            # TIMESTAMP_NTZ micros: identity on wall-clock under UTC session.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    _check_footer(path, name)
+    return spark.read.schema(_STRUCTS[name]).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

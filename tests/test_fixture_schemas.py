@@ -4,39 +4,89 @@ The round driver REGENERATES /root/testdata between rounds and the
 physical parquet schemas can change — at round-2 start, ``events.ts``
 switched from TIMESTAMP(NANOS) to TIMESTAMP(MICROS, NTZ) and every
 events-based key failed at analysis time until ``tables.t()`` learned
-both layouts. This test pins the *normalized* schema every operator
-actually sees (as of the 2026-08-13 round-2 fixtures), so the first
-pytest run of a round points straight at the drifted table instead of
-failing obscurely deep inside some operator.
+both layouts. ``t()`` now DECLARES ``tables.FIXTURE_SCHEMA`` on every
+read instead of inferring, so reading through it can no longer show
+drift: the canary compares Spark's INFERRED schema of each raw fixture
+file against the declaration, so the first pytest run of a round points
+straight at the drifted table instead of failing obscurely deep inside
+some operator. The drift tests below pin ``t()``'s own footer check on
+tmp copies of the fixtures.
 
-If this test fails: the fixtures changed. Prefer normalizing in
-``dbsuite_spark/tables.py`` (NOT in operators) so downstream code keeps
-seeing stable types, then update this expectation if the change is
-intentional and benign.
+If this test fails: the fixtures changed. Update
+``dbsuite_spark/tables.FIXTURE_SCHEMA`` (NOT the operators) so downstream
+code keeps seeing stable types, if the change is intentional and benign.
 """
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from dbsuite_spark.tables import FIXTURE_SCHEMA, TABLES, t
+from dbsuite_spark.tables import FIXTURE_SCHEMA, TABLES, FixtureDriftError, t
 
 # The canonical descriptor lives in tables.FIXTURE_SCHEMA (also feeds the
 # catalog_document oracle via etl/sources._DOC_SCHEMA) — one copy, so the
 # canary and the oracle cannot be updated inconsistently (ADVICE r02).
-EXPECTED = {tbl: dict(cols) for tbl, cols in FIXTURE_SCHEMA.items()}
-
+# The one column whose declared type differs from Spark's inference:
+# TIMESTAMP(MICROS, NTZ) infers as timestamp_ntz; t() declares timestamp.
+INFERRED_AS = {("events", "ts"): "timestamp_ntz"}
 
 
 @pytest.mark.parametrize("table", TABLES)
 def test_normalized_fixture_schema(spark, sf_dir, table):
-    got = {f.name: f.dataType.simpleString()
-           for f in t(spark, sf_dir, table).schema.fields}
-    assert got == EXPECTED[table], (
+    raw = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    got = [(f.name, f.dataType.simpleString()) for f in raw.schema.fields]
+    want = [
+        (c, INFERRED_AS.get((table, c), ty)) for c, ty in FIXTURE_SCHEMA[table]
+    ]
+    assert got == want, (
         f"fixture drift in '{table}' — the driver regenerated testdata "
-        f"with a different schema; normalize it in dbsuite_spark/tables.t() "
-        f"(got {got})"
+        f"with a different schema; update dbsuite_spark/tables."
+        f"FIXTURE_SCHEMA (got {got})"
     )
+
+
+def _copy(sf_dir, tmp_path, table, edit):
+    """Write ``edit(<fixture as an arrow table>)`` as ``table``'s file in
+    a tmp fixture dir, and return that dir."""
+    src = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
+    pq.write_table(edit(src), str(tmp_path / f"{table}.parquet"))
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize(
+    "edit",
+    [
+        lambda tb: tb.rename_columns(["r_regionkey", "r_title"]),
+        lambda tb: tb.select(["r_name", "r_regionkey"]),
+    ],
+    ids=["renamed", "reordered"],
+)
+def test_t_raises_on_column_drift(spark, sf_dir, tmp_path, edit):
+    """A declared schema would read a renamed column as NULLs, so the
+    footer check refuses any rename or reorder of a fixture's columns."""
+    drifted = _copy(sf_dir, tmp_path, "region", edit)
+    with pytest.raises(FixtureDriftError, match="fixture drift in 'region'"):
+        t(spark, drifted, "region")
+
+
+def test_t_raises_on_nanosecond_timestamps(spark, sf_dir, tmp_path):
+    """The round-1 ``events.ts`` layout (parquet TIMESTAMP(NANOS)) must
+    raise in ``t()``, not inside the first job or as wrong timestamps."""
+
+    def to_nanos(tb):
+        i = tb.schema.get_field_index("ts")
+        return tb.set_column(i, "ts", tb["ts"].cast(pa.timestamp("ns")))
+
+    drifted = _copy(sf_dir, tmp_path, "events", to_nanos)
+    assert pq.read_schema(os.path.join(drifted, "events.parquet")).field(
+        "ts"
+    ).type == pa.timestamp("ns")
+    with pytest.raises(FixtureDriftError, match=r"timestamps \['ts'\]"):
+        t(spark, drifted, "events")
 
 
 def test_embedding_dim_matches_constant(spark, sf_dir):

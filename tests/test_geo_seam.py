@@ -18,6 +18,8 @@ import math
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from dbsuite_spark.tables import FIXTURE_SCHEMA
+
 
 def _haversine_km(lat1, lon1, lat2, lon2):
     dphi = math.radians(lat2 - lat1) / 2
@@ -47,6 +49,21 @@ def _syn_lon(k):
     return (k % 36000) / 100.0 - 180.0
 
 
+def _write_keys_only(tmp_path, table, keys):
+    """A fixture file with ``table``'s full column layout (``t()`` checks
+    the footer's column names) and only its first, key column filled."""
+    cols = [c for c, _ in FIXTURE_SCHEMA[table]]
+    pq.write_table(
+        pa.table(
+            {
+                c: pa.array(keys, pa.int64()) if i == 0 else pa.nulls(len(keys))
+                for i, c in enumerate(cols)
+            }
+        ),
+        str(tmp_path / f"{table}.parquet"),
+    )
+
+
 def test_radius_grid_finds_antimeridian_pair(spark, tmp_path, monkeypatch):
     import dbsuite_spark.functions.geo as geo
 
@@ -65,14 +82,8 @@ def test_radius_grid_finds_antimeridian_pair(spark, tmp_path, monkeypatch):
         _syn_lat(far), _syn_lon(far), _syn_lat(sk), _syn_lon(sk)
     ) > 50.0
 
-    pq.write_table(
-        pa.table({"c_custkey": pa.array([ck, far], pa.int64())}),
-        str(tmp_path / "customer.parquet"),
-    )
-    pq.write_table(
-        pa.table({"s_suppkey": pa.array([sk], pa.int64())}),
-        str(tmp_path / "supplier.parquet"),
-    )
+    _write_keys_only(tmp_path, "customer", [ck, far])
+    _write_keys_only(tmp_path, "supplier", [sk])
     monkeypatch.setattr(geo, "_lat", _syn_lat_col)
     monkeypatch.setattr(geo, "_lon", _syn_lon_col)
     rows = geo.join_geo_radius_grid(spark, str(tmp_path)).collect()

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -26,6 +27,13 @@ from pyspark.sql import SparkSession
 import __spark_entry__ as entry_mod
 from dbsuite_spark.tables import TABLES
 from tests.compare import duckdb_rows, spark_rows
+
+# The oracle connection shares the host with the Spark JVM. Uncapped,
+# DuckDB allows itself about 80% of RAM, and at sf0.1 the quadratic
+# graph_two_hop_neighbors oracle took a 15 GB, 4-core host to about
+# 12 GB used until the sim was SIGKILLed. Capped, DuckDB spills to a
+# temp dir instead, or fails that one key cleanly.
+DUCKDB_MEMORY_LIMIT = "3GB"
 
 
 def main() -> int:
@@ -113,7 +121,13 @@ def main() -> int:
     print(f"t1 smoke: entry() -> {len(rows)} rows "
           f"({'PASS' if len(rows) > 0 else 'FAIL'})")
 
-    con = duckdb.connect()
+    spill = tempfile.TemporaryDirectory(prefix="driver-sim-")
+    con = duckdb.connect(
+        config={
+            "memory_limit": DUCKDB_MEMORY_LIMIT,
+            "temp_directory": os.path.join(spill.name, "duckdb"),
+        }
+    )
     for name in TABLES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM "
@@ -171,6 +185,8 @@ def main() -> int:
     print(f"summary: {n_pass} pass, {n_fail} fail, "
           f"{len(qs)} keys ({len(oracles)} with SQL oracle)")
     spark.stop()
+    con.close()
+    spill.cleanup()
     return 1 if n_fail else 0
 
 
