@@ -1,12 +1,19 @@
-"""Category L extension — classifier evaluation over pipeline outputs.
+"""Category L extension — evaluation dashboards over pipeline outputs.
 
-``text_langid_eval`` closes the loop on the language-ID heuristic: its
-predictions are scored against the labeled ``lang`` column as a
-confusion matrix with per-pair corpus shares — the evaluation artifact a
-data-quality dashboard tracks release-over-release. The oracle COMPOSES
-the already-verified ``text_langid_ngram`` oracle as a CTE (registry
-spec reuse), so the eval's truth derives from the same verified
-prediction semantics on both engines.
+Two builders carry the families here:
+
+- ``confusion_matrix`` (DuckDB twin: ``CONFUSION_TAIL``) turns per
+  (true, predicted) ``cells`` counts into shares of the total and a
+  diagonal flag: ``text_langid_eval`` scores the language-ID heuristic
+  against the labeled ``lang`` column, ``ml_knn_eval`` the k-NN
+  classifier against the embeddings' ``label``. Each oracle COMPOSES the
+  already-verified classifier oracle as a CTE (registry spec reuse), so
+  the eval's truth derives from the same prediction semantics on both
+  engines.
+- ``recall_at_k`` (DuckDB twin: ``RECALL_AT_K``) scores an approximate
+  top-k search per query against the exact truth: the LSH, IVF and PQ
+  indexes and the Matryoshka prefix search. The truth is one memoized
+  frame, ``similarity.exact_truth``, shared with ``sim_ivf_probe_sweep``.
 """
 
 from __future__ import annotations
@@ -20,8 +27,43 @@ from dbsuite_spark.pipeline import dedup as D
 from dbsuite_spark.pipeline import quantization as Q
 from dbsuite_spark.pipeline import similarity as S
 from dbsuite_spark.pipeline.text_extra import text_langid_ngram
+from dbsuite_spark.pipeline.vectors import (
+    COSINE,
+    QUERY_MOD,
+    TOP_K,
+    dot,
+    l2_norm,
+)
 from dbsuite_spark.registry import query, spec
 from dbsuite_spark.tables import memo_cache, t
+
+
+def CONFUSION_TAIL(true_col: str, pred_col: str) -> str:
+    """DuckDB twin of :func:`confusion_matrix`: the ``tot`` CTE and the
+    final SELECT over a preceding ``cells`` CTE."""
+    return f"""tot AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM cells)
+SELECT {true_col}, {pred_col}, n,
+       CAST(n AS DOUBLE) / total AS share,
+       {true_col} = {pred_col} AS correct
+FROM cells, tot
+"""
+
+
+def confusion_matrix(
+    cells: DataFrame, true_col: str, pred_col: str
+) -> DataFrame:
+    """Per (true, predicted) cell of ``cells`` (count ``n``): its share of
+    all classified rows (one exact-integer division by a 1-row broadcast
+    total) and the diagonal flag ``correct``."""
+    tot = cells.agg(F.sum("n").cast("long").alias("total"))
+    return cells.crossJoin(F.broadcast(tot)).select(
+        true_col,
+        pred_col,
+        "n",
+        (F.col("n").cast("double") / F.col("total")).alias("share"),
+        (F.col(true_col) == F.col(pred_col)).alias("correct"),
+    )
+
 
 _PRED_ORACLE = spec("text_langid_ngram").oracle
 
@@ -31,20 +73,13 @@ cells AS (
   SELECT lang AS true_lang, predicted AS pred_lang,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM pred GROUP BY 1, 2),
-tot AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM cells)
-SELECT true_lang, pred_lang, n,
-       CAST(n AS DOUBLE) / total AS share,
-       true_lang = pred_lang AS correct
-FROM cells, tot
-"""
+{CONFUSION_TAIL("true_lang", "pred_lang")}"""
 
 
 @query("text_langid_eval", oracle=_EVAL_ORACLE, category="L")
 def text_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the language-ID heuristic against the labeled
-    ``lang`` column: per (true, predicted) pair, the document count, its
-    share of all classified documents (one exact-integer division), and
-    the diagonal flag. Summing ``share`` over ``correct`` rows is the
+    ``lang`` column. Summing ``share`` over ``correct`` rows is the
     corpus accuracy.
 
     Scale: composes the verified classifier (two aggregations + a
@@ -58,25 +93,16 @@ def text_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("n"))
     )
-    tot = cells.agg(F.sum("n").cast("long").alias("total"))
-    return cells.crossJoin(F.broadcast(tot)).select(
-        "true_lang",
-        "pred_lang",
-        "n",
-        (F.col("n").cast("double") / F.col("total")).alias("share"),
-        (F.col("true_lang") == F.col("pred_lang")).alias("correct"),
-    )
+    return confusion_matrix(cells, "true_lang", "pred_lang")
 
 
-RECALL_K = 5
-
-
-def _ann_recall_oracle() -> str:
+def RECALL_AT_K(approx_sql: str, count_col: str) -> str:
+    """DuckDB twin of :func:`recall_at_k`: ``approx_sql`` is the
+    approximate search, truth the ``sim_search_cosine_topk`` oracle."""
     exact_sql = spec("sim_search_cosine_topk").oracle
-    ann_sql = spec("sim_search_ann_lsh").oracle
     return f"""
 WITH exact_k AS (SELECT * FROM ({exact_sql})),
-ann_k AS (SELECT * FROM ({ann_sql})),
+ann_k AS (SELECT * FROM ({approx_sql})),
 hits AS (
   SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_overlap
   FROM exact_k e JOIN ann_k a
@@ -86,12 +112,12 @@ base AS (
   SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_exact FROM exact_k
   GROUP BY qid),
 annc AS (
-  SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_ann FROM ann_k
+  SELECT qid, CAST(COUNT(*) AS BIGINT) AS {count_col} FROM ann_k
   GROUP BY qid)
 SELECT b.qid, b.n_exact,
-       CAST(COALESCE(a.n_ann, 0) AS BIGINT) AS n_ann,
+       CAST(COALESCE(a.{count_col}, 0) AS BIGINT) AS {count_col},
        CAST(COALESCE(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / {RECALL_K}
+       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / {TOP_K}
          AS recall_at_k
 FROM base b
 LEFT JOIN annc a ON b.qid = a.qid
@@ -99,61 +125,65 @@ LEFT JOIN hits h ON b.qid = h.qid
 """
 
 
-@query("sim_search_ann_recall", oracle=_ann_recall_oracle(), category="L")
-def sim_search_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query recall@5 of the sign-LSH ANN index against the exact
-    brute-force top-k — the quality dashboard every production ANN
-    deployment tracks (index drift shows up here before users notice).
-    Composes the two already-verified keys; overlap/recall are one
-    integer count and one division by the constant k, so the scores are
-    bit-deterministic. The macro average of ``recall_at_k`` is the
-    corpus recall (asserted ≥0.6 in tests/test_pipeline.py for the
-    underlying index).
-
-    Scale: both inputs bound their own cost (broadcast queries; banded
-    LSH candidates); the eval adds only per-query-key joins and counts
-    over k·|queries| rows — negligible against the searches themselves."""
-    from dbsuite_spark.pipeline.similarity import (
-        sim_search_ann_lsh,
-        sim_search_cosine_topk,
-    )
-
-    # both k-row frames feed THREE aggregations each below — cache, or
-    # the giant fold/banding subtrees re-plan and re-execute per consumer
-    exact_k = memo_cache(
-        sim_search_cosine_topk(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_exact_k:{sf_dir}:{S.TOP_K}:{S.QUERY_MOD}",
-    )
-    ann_k = memo_cache(
-        sim_search_ann_lsh(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_lsh_k:{sf_dir}:{S.N_TABLES}:{S.N_BITS}:{S.TOP_K}",
-    )
+def recall_at_k(
+    exact_k: DataFrame, approx_k: DataFrame, count_col: str
+) -> DataFrame:
+    """Per-query recall@k of ``approx_k`` against ``exact_k`` (both
+    ``qid, neighbor_id``): ``qid, n_exact, <count_col>, n_overlap,
+    recall_at_k``, one row per truth query. Overlap is one integer count
+    and recall one division by the constant k, so the scores are
+    bit-deterministic."""
     hits = (
-        exact_k.join(ann_k, ["qid", "neighbor_id"])
+        exact_k.join(approx_k, ["qid", "neighbor_id"])
         .groupBy("qid")
         .agg(F.count("*").cast("bigint").alias("n_overlap"))
     )
     base = exact_k.groupBy("qid").agg(
         F.count("*").cast("bigint").alias("n_exact")
     )
-    annc = ann_k.groupBy("qid").agg(
-        F.count("*").cast("bigint").alias("n_ann")
+    approx = approx_k.groupBy("qid").agg(
+        F.count("*").cast("bigint").alias(count_col)
     )
     return (
-        base.join(annc, "qid", "left")
+        base.join(approx, "qid", "left")
         .join(hits, "qid", "left")
         .select(
             "qid",
             "n_exact",
-            F.coalesce("n_ann", F.lit(0)).cast("bigint").alias("n_ann"),
+            F.coalesce(count_col, F.lit(0)).cast("bigint").alias(count_col),
             F.coalesce("n_overlap", F.lit(0))
             .cast("bigint")
             .alias("n_overlap"),
             (
-                F.coalesce("n_overlap", F.lit(0)).cast("double") / RECALL_K
+                F.coalesce("n_overlap", F.lit(0)).cast("double") / TOP_K
             ).alias("recall_at_k"),
         )
     )
+
+
+@query(
+    "sim_search_ann_recall",
+    oracle=RECALL_AT_K(spec("sim_search_ann_lsh").oracle, "n_ann"),
+    category="L",
+)
+def sim_search_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query recall@5 of the sign-LSH ANN index against the exact
+    brute-force top-k — the quality dashboard every production ANN
+    deployment tracks (index drift shows up here before users notice).
+    Composes the two already-verified keys. The macro average of
+    ``recall_at_k`` is the corpus recall (asserted ≥0.6 in
+    tests/test_pipeline.py for the underlying index).
+
+    Scale: both inputs bound their own cost (broadcast queries; banded
+    LSH candidates); the eval adds only per-query-key joins and counts
+    over k·|queries| rows — negligible against the searches themselves."""
+    # both k-row frames feed THREE aggregations each — cache, or the
+    # giant fold/banding subtrees re-plan and re-execute per consumer
+    ann_k = memo_cache(
+        S.sim_search_ann_lsh(spark, sf_dir).select("qid", "neighbor_id"),
+        f"eval_lsh_k:{sf_dir}:{S.N_TABLES}:{S.N_BITS}:{TOP_K}",
+    )
+    return recall_at_k(S.exact_truth(spark, sf_dir), ann_k, "n_ann")
 
 
 def _knn_eval_oracle() -> str:
@@ -165,27 +195,19 @@ cells AS (
          CAST(COUNT(*) AS BIGINT) AS n
   FROM pred p JOIN embeddings e ON p.qid = e.vec_id
   GROUP BY 1, 2),
-tot AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM cells)
-SELECT true_label, predicted_label, n,
-       CAST(n AS DOUBLE) / total AS share,
-       true_label = predicted_label AS correct
-FROM cells, tot
-"""
+{CONFUSION_TAIL("true_label", "predicted_label")}"""
 
 
 @query("ml_knn_eval", oracle=_knn_eval_oracle(), category="L")
 def ml_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the k-NN majority classifier against the
     embeddings' labeled ``label`` column — the embedding-space sibling
-    of ``text_langid_eval``, composing the verified classifier oracle as
-    a CTE so the eval's truth derives from the same prediction
-    semantics. Summing ``share`` over ``correct`` rows is the accuracy.
+    of ``text_langid_eval``. Summing ``share`` over ``correct`` rows is
+    the accuracy.
 
     Scale: the classifier bounds its own cost; the eval adds one
     broadcast-size join and a tiny confusion aggregation."""
-    from dbsuite_spark.pipeline.similarity import knn_classify_majority
-
-    pred = knn_classify_majority(spark, sf_dir)
+    pred = S.knn_classify_majority(spark, sf_dir)
     labels = t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("qid"), F.col("label").alias("true_label")
     )
@@ -194,45 +216,14 @@ def ml_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("true_label", "predicted_label")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    tot = cells.agg(F.sum("n").cast("long").alias("total"))
-    return cells.crossJoin(F.broadcast(tot)).select(
-        "true_label",
-        "predicted_label",
-        "n",
-        (F.col("n").cast("double") / F.col("total")).alias("share"),
-        (F.col("true_label") == F.col("predicted_label")).alias("correct"),
-    )
+    return confusion_matrix(cells, "true_label", "predicted_label")
 
 
-def _ivf_recall_oracle() -> str:
-    exact_sql = spec("sim_search_cosine_topk").oracle
-    ann_sql = spec("sim_search_ann_ivf").oracle
-    return f"""
-WITH exact_k AS (SELECT * FROM ({exact_sql})),
-ann_k AS (SELECT * FROM ({ann_sql})),
-hits AS (
-  SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_overlap
-  FROM exact_k e JOIN ann_k a
-    ON e.qid = a.qid AND e.neighbor_id = a.neighbor_id
-  GROUP BY e.qid),
-base AS (
-  SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_exact FROM exact_k
-  GROUP BY qid),
-annc AS (
-  SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_ann FROM ann_k
-  GROUP BY qid)
-SELECT b.qid, b.n_exact,
-       CAST(COALESCE(a.n_ann, 0) AS BIGINT) AS n_ann,
-       CAST(COALESCE(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / {RECALL_K}
-         AS recall_at_k
-FROM base b
-LEFT JOIN annc a ON b.qid = a.qid
-LEFT JOIN hits h ON b.qid = h.qid
-"""
-
-
-@query("sim_search_ivf_recall", oracle=_ivf_recall_oracle(), category="L")
+@query(
+    "sim_search_ivf_recall",
+    oracle=RECALL_AT_K(spec("sim_search_ann_ivf").oracle, "n_ann"),
+    category="L",
+)
 def sim_search_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@5 of the IVF (inverted-file) ANN index against
     the exact brute-force top-k — the sibling dashboard of
@@ -242,79 +233,21 @@ def sim_search_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical envelope — both searches bound their own cost; the
     eval joins k·|queries|-row frames."""
-    from dbsuite_spark.pipeline.similarity import (
-        sim_search_ann_ivf,
-        sim_search_cosine_topk,
-    )
-
     # same caching rationale as sim_search_ann_recall
-    exact_k = memo_cache(
-        sim_search_cosine_topk(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_exact_k:{sf_dir}:{S.TOP_K}:{S.QUERY_MOD}",
-    )
     ann_k = memo_cache(
-        sim_search_ann_ivf(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_ivf_k:{sf_dir}:{S.N_CELLS}:{S.N_PROBE}:{S.TOP_K}",
+        S.sim_search_ann_ivf(spark, sf_dir).select("qid", "neighbor_id"),
+        f"eval_ivf_k:{sf_dir}:{S.N_CELLS}:{S.N_PROBE}:{TOP_K}",
     )
-    hits = (
-        exact_k.join(ann_k, ["qid", "neighbor_id"])
-        .groupBy("qid")
-        .agg(F.count("*").cast("bigint").alias("n_overlap"))
-    )
-    base = exact_k.groupBy("qid").agg(
-        F.count("*").cast("bigint").alias("n_exact")
-    )
-    annc = ann_k.groupBy("qid").agg(
-        F.count("*").cast("bigint").alias("n_ann")
-    )
-    return (
-        base.join(annc, "qid", "left")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            "n_exact",
-            F.coalesce("n_ann", F.lit(0)).cast("bigint").alias("n_ann"),
-            F.coalesce("n_overlap", F.lit(0))
-            .cast("bigint")
-            .alias("n_overlap"),
-            (
-                F.coalesce("n_overlap", F.lit(0)).cast("double") / RECALL_K
-            ).alias("recall_at_k"),
-        )
-    )
+    return recall_at_k(S.exact_truth(spark, sf_dir), ann_k, "n_ann")
 
 
-def _pq_recall_oracle() -> str:
-    exact_sql = spec("sim_search_cosine_topk").oracle
-    pq_sql = spec("sim_search_pq_adc").oracle
-    return f"""
-WITH exact_k AS (SELECT * FROM ({exact_sql})),
-ann_k AS (SELECT * FROM ({pq_sql})),
-hits AS (
-  SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_overlap
-  FROM exact_k e JOIN ann_k a
-    ON e.qid = a.qid AND e.neighbor_id = a.neighbor_id
-  GROUP BY e.qid),
-base AS (
-  SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_exact FROM exact_k
-  GROUP BY qid),
-annc AS (
-  SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_ann FROM ann_k
-  GROUP BY qid)
-SELECT b.qid, b.n_exact,
-       CAST(COALESCE(a.n_ann, 0) AS BIGINT) AS n_ann,
-       CAST(COALESCE(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / {RECALL_K}
-         AS recall_at_k
-FROM base b
-LEFT JOIN annc a ON b.qid = a.qid
-LEFT JOIN hits h ON b.qid = h.qid
-"""
-
-
-@query("sim_pq_recall", oracle=_pq_recall_oracle(), category="L")
+@query(
+    "sim_pq_recall",
+    oracle=RECALL_AT_K(spec("sim_search_pq_adc").oracle, "n_ann"),
+    category="L",
+)
 def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query recall@{RECALL_K} of the PQ-ADC (product-quantization,
+    """Per-query recall@{TOP_K} of the PQ-ADC (product-quantization,
     asymmetric-distance) index against the exact brute-force top-k —
     completes the recall-dashboard family (sign-LSH, IVF, k-NN graph,
     and now PQ), so all four index families are tunable from verified
@@ -325,55 +258,18 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: both searches bound their own cost (PQ codes are 8 bytes per
     vector vs 256 for float32); the eval joins k·|queries|-row frames."""
-    from dbsuite_spark.pipeline.quantization import sim_search_pq_adc
-    from dbsuite_spark.pipeline.similarity import sim_search_cosine_topk
-
     # same caching rationale as sim_search_ann_recall
-    exact_k = memo_cache(
-        sim_search_cosine_topk(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_exact_k:{sf_dir}:{S.TOP_K}:{S.QUERY_MOD}",
-    )
     ann_k = memo_cache(
-        sim_search_pq_adc(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_pq_k:{sf_dir}:{Q.N_SUB}:{Q.N_CODES}:{Q.PQ_TOP_K}",
+        Q.sim_search_pq_adc(spark, sf_dir).select("qid", "neighbor_id"),
+        f"eval_pq_k:{sf_dir}:{Q.N_SUB}:{Q.N_CODES}:{TOP_K}",
     )
-    hits = (
-        exact_k.join(ann_k, ["qid", "neighbor_id"])
-        .groupBy("qid")
-        .agg(F.count("*").cast("bigint").alias("n_overlap"))
-    )
-    base = exact_k.groupBy("qid").agg(
-        F.count("*").cast("bigint").alias("n_exact")
-    )
-    annc = ann_k.groupBy("qid").agg(
-        F.count("*").cast("bigint").alias("n_ann")
-    )
-    return (
-        base.join(annc, "qid", "left")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            "n_exact",
-            F.coalesce("n_ann", F.lit(0)).cast("bigint").alias("n_ann"),
-            F.coalesce("n_overlap", F.lit(0))
-            .cast("bigint")
-            .alias("n_overlap"),
-            (
-                F.coalesce("n_overlap", F.lit(0)).cast("double") / RECALL_K
-            ).alias("recall_at_k"),
-        )
-    )
+    return recall_at_k(S.exact_truth(spark, sf_dir), ann_k, "n_ann")
 
 
 PREFIX_DIMS = 16  # Matryoshka prefix: first 16 of 64 dims (4x fewer bytes)
 
-
-def _dim_truncation_oracle() -> str:
-    from dbsuite_spark.pipeline.similarity import QUERY_MOD
-    from dbsuite_spark.pipeline.vectors import COSINE
-
-    exact_sql = spec("sim_search_cosine_topk").oracle
-    return f"""
+# Exact cosine top-k over the first PREFIX_DIMS dimensions only.
+_TRUNC_TOPK_ORACLE = f"""
 WITH e16 AS (
   SELECT vec_id, embedding[1:{PREFIX_DIMS}] AS emb FROM embeddings),
 q AS (SELECT vec_id AS qid, emb AS qe FROM e16
@@ -381,38 +277,21 @@ q AS (SELECT vec_id AS qid, emb AS qe FROM e16
 tp AS (
   SELECT q.qid, e.vec_id AS neighbor_id,
          {COSINE('q.qe', 'e.emb')} AS cos_sim
-  FROM q, e16 e WHERE e.vec_id <> q.qid),
-trunc_k AS (
-  SELECT qid, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY qid ORDER BY cos_sim DESC, neighbor_id) AS rn
-    FROM tp) WHERE rn <= {RECALL_K}),
-exact_k AS (SELECT qid, neighbor_id FROM ({exact_sql})),
-hits AS (
-  SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_overlap
-  FROM exact_k e JOIN trunc_k a
-    ON e.qid = a.qid AND e.neighbor_id = a.neighbor_id
-  GROUP BY e.qid),
-base AS (
-  SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_exact FROM exact_k
-  GROUP BY qid),
-trc AS (
-  SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_trunc FROM trunc_k
-  GROUP BY qid)
-SELECT b.qid, b.n_exact,
-       CAST(COALESCE(t.n_trunc, 0) AS BIGINT) AS n_trunc,
-       CAST(COALESCE(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-       CAST(COALESCE(h.n_overlap, 0) AS DOUBLE) / {RECALL_K}
-         AS recall_at_k
-FROM base b
-LEFT JOIN trc t ON b.qid = t.qid
-LEFT JOIN hits h ON b.qid = h.qid
+  FROM q, e16 e WHERE e.vec_id <> q.qid)
+SELECT qid, neighbor_id FROM (
+  SELECT *, row_number() OVER (
+      PARTITION BY qid ORDER BY cos_sim DESC, neighbor_id) AS rn
+  FROM tp) WHERE rn <= {TOP_K}
 """
 
 
-@query("sim_dim_truncation_recall", oracle=_dim_truncation_oracle(), category="L")
+@query(
+    "sim_dim_truncation_recall",
+    oracle=RECALL_AT_K(_TRUNC_TOPK_ORACLE, "n_trunc"),
+    category="L",
+)
 def sim_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-style dimension-truncation eval: recall@{RECALL_K} of
+    """Matryoshka-style dimension-truncation eval: recall@{TOP_K} of
     exact cosine search over only the FIRST {PREFIX_DIMS} of 64
     dimensions against the full-dimension exact top-k (Kusupati et al.
     2022, "Matryoshka Representation Learning": prefix sub-vectors of a
@@ -427,13 +306,6 @@ def sim_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness: prefix slices are elementwise-identical on both engines
     (Spark ``slice`` = DuckDB ``[1:n]``), so the fold cosines stay
     bit-identical and the rankings need no tolerance."""
-    from dbsuite_spark.pipeline.similarity import (
-        _topk,
-        QUERY_MOD,
-        sim_search_cosine_topk,
-    )
-    from dbsuite_spark.pipeline.vectors import dot, l2_norm
-
     e16 = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.slice(F.col("embedding"), 1, PREFIX_DIMS).alias("emb")
     )
@@ -456,37 +328,8 @@ def sim_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cos_sim"
         ),
     )
-    trunc_k = _topk(pairs, RECALL_K).select("qid", "neighbor_id")
-    exact_k = memo_cache(
-        sim_search_cosine_topk(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_exact_k:{sf_dir}:{S.TOP_K}:{S.QUERY_MOD}",
-    )
-    hits = (
-        exact_k.join(trunc_k, ["qid", "neighbor_id"])
-        .groupBy("qid")
-        .agg(F.count("*").cast("bigint").alias("n_overlap"))
-    )
-    base = exact_k.groupBy("qid").agg(
-        F.count("*").cast("bigint").alias("n_exact")
-    )
-    trc = trunc_k.groupBy("qid").agg(
-        F.count("*").cast("bigint").alias("n_trunc")
-    )
-    return (
-        base.join(trc, "qid", "left")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            "n_exact",
-            F.coalesce("n_trunc", F.lit(0)).cast("bigint").alias("n_trunc"),
-            F.coalesce("n_overlap", F.lit(0))
-            .cast("bigint")
-            .alias("n_overlap"),
-            (
-                F.coalesce("n_overlap", F.lit(0)).cast("double") / RECALL_K
-            ).alias("recall_at_k"),
-        )
-    )
+    trunc_k = S._topk(pairs).select("qid", "neighbor_id")
+    return recall_at_k(S.exact_truth(spark, sf_dir), trunc_k, "n_trunc")
 
 
 def _minhash_recall_oracle() -> str:
@@ -1003,9 +846,8 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- NDCG ranking quality (round 6) --------------------------------------
 
 # NDCG depth is BY CONSTRUCTION the retrieval depth: the gain formula
-# (NDCG_K + 1 - rank) consumes ranks produced under similarity.TOP_K, so
-# the two must move together or gains go negative/mis-scaled (ADVICE r06).
-from dbsuite_spark.pipeline.similarity import TOP_K as NDCG_K
+# (TOP_K + 1 - rank) consumes ranks produced under the same TOP_K, so
+# gains can never go negative or mis-scaled.
 
 
 def _ndcg_oracle() -> str:
@@ -1016,7 +858,7 @@ WITH exact_k AS ({exact_sql}),
 ivf_k AS ({ivf_sql}),
 rel AS (
   SELECT qid, neighbor_id,
-         CAST({NDCG_K} + 1 - rank AS BIGINT) AS gain
+         CAST({TOP_K} + 1 - rank AS BIGINT) AS gain
   FROM exact_k),
 sys_dcg AS (
   SELECT i.qid,
@@ -1072,7 +914,7 @@ def ml_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = exact_k.select(
         "qid",
         "neighbor_id",
-        (F.lit(NDCG_K + 1) - F.col("rank")).cast("bigint").alias("gain"),
+        (F.lit(TOP_K + 1) - F.col("rank")).cast("bigint").alias("gain"),
     )
 
     def dcg_term(gain, rank):

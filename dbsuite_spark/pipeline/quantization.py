@@ -33,14 +33,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dbsuite_spark.pipeline.clustering import DIM as _DIM
+from dbsuite_spark.pipeline.vectors import QUERY_MOD, TOP_K
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
 N_SUB = 8  # subspaces
 SUB_DIM = 8  # dims per subspace (N_SUB * SUB_DIM = DIM = 64)
 N_CODES = 16  # centroids per subspace (codebook = vec_id < 16)
-PQ_TOP_K = 5
-QUERY_MOD = 100  # vec_id % 100 == 0 → the query subset (similarity.py)
 
 # (x - y)^2 written as an explicit product so both engines run the same
 # IEEE ops (DuckDB's ^ routes through pow()).
@@ -88,7 +87,7 @@ adc AS (
 SELECT qid, neighbor_id, adc_dist, CAST(rn AS INT) AS rank FROM (
   SELECT *, row_number() OVER (
       PARTITION BY qid ORDER BY adc_dist, neighbor_id) AS rn
-  FROM adc) WHERE rn <= {PQ_TOP_K}
+  FROM adc) WHERE rn <= {TOP_K}
 """
 
 
@@ -155,7 +154,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("sim_search_pq_adc", oracle=_PQ_ORACLE, category="L")
 def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ/ADC top-{PQ_TOP_K}: encode the corpus to 8 four-bit codes per
+    """PQ/ADC top-{TOP_K}: encode the corpus to 8 four-bit codes per
     vector (row-local argmin over a broadcast 16-entry-per-subspace
     codebook), then score query × corpus by the asymmetric distance sum
     and keep the k closest per query (ties on neighbor id). The final
@@ -188,7 +187,7 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("qid").orderBy("adc_dist", "neighbor_id")
     return (
         pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= PQ_TOP_K)
+        .filter(F.col("rank") <= TOP_K)
         .select("qid", "neighbor_id", "adc_dist", "rank")
     )
 

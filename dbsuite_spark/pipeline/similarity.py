@@ -31,15 +31,14 @@ from dbsuite_spark.pipeline.vectors import (
     COSINE,
     DOT,
     L2NORM,
+    QUERY_MOD,
+    TOP_K,
     cosine,
     dot,
     l2_norm,
 )
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import fan_out, memo_cache, t
-
-TOP_K = 5
-QUERY_MOD = 100  # vec_id % 100 == 0 → the query subset
 
 _TOPK_ORACLE = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
@@ -109,6 +108,18 @@ def sim_search_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast queries × one corpus scan, window top-k per query)."""
     return _topk(_cosine_pairs(spark, sf_dir)).select(
         "qid", "neighbor_id", "cos_sim", "rank"
+    )
+
+
+def exact_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact top-k ``(qid, neighbor_id)`` every ANN evaluation scores
+    against — the recall dashboards and ``sim_ivf_probe_sweep``. Each
+    consumer aggregates it several times, so it is cached once per
+    session and scale factor instead of re-running the corpus scan per
+    consumer."""
+    return memo_cache(
+        sim_search_cosine_topk(spark, sf_dir).select("qid", "neighbor_id"),
+        f"eval_exact_k:{sf_dir}:{TOP_K}:{QUERY_MOD}",
     )
 
 
@@ -489,10 +500,7 @@ def sim_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus — the dial itself); the eval joins are k-row-per-query
     frames. The corpus cell assignment is nprobe-independent and the
     exact truth is memoized across dashboards."""
-    exact_k = memo_cache(
-        sim_search_cosine_topk(spark, sf_dir).select("qid", "neighbor_id"),
-        f"eval_exact_k:{sf_dir}:{TOP_K}:{QUERY_MOD}",
-    )
+    exact_k = exact_truth(spark, sf_dir)
     nq = exact_k.agg(
         F.countDistinct("qid").cast("bigint").alias("n_queries")
     )

@@ -16,6 +16,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# The search dials every ANN index and its recall dashboard share: each
+# search returns its top TOP_K neighbors for the vectors with
+# vec_id % QUERY_MOD == 0, and recall@k divides by the same TOP_K.
+TOP_K = 5
+QUERY_MOD = 100
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in double."""

@@ -18,6 +18,10 @@ one or more Parquet files in the scratch area, reads them back with
 cadence), runs with ``trigger(availableNow=True)``, and returns the sink
 contents as a batch DataFrame.
 
+The five stream-stream keys (inner, left/right/full outer, left semi) are
+one purchase-to-click attribution join, ``_attribution_join``; each key
+passes only its join type, watermark delay, name and projection.
+
 Scale notes: these plans run unchanged against a real unbounded source
 (Kafka/file landing zone) on a cluster — state lives in the state store
 keyed by (window/user), watermarks bound state size, and
@@ -538,11 +542,27 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     State-store width: each shuffle partition commits two state stores per
     micro-batch — pinned narrow by ``_stream_width`` inside the runner; on
     a cluster you'd size it to executor count."""
-    return _stream_stream_join_run(spark, sf_dir)
+    return _attribution_join(
+        spark, sf_dir, "ssjoin", "inner", "35 days",
+        "purchase_id", "click_id", F.col("p_user").alias("user_id"),
+        "purchase_ts",
+    )
 
 
-def _stream_stream_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, src = _land_events(spark, sf_dir, "ssjoin", n_files=2)
+def _attribution_join(
+    spark: SparkSession, sf_dir: str, name: str, how: str, delay: str,
+    *projection,
+) -> DataFrame:
+    """The attribution join every stream-stream key runs: purchases
+    (``purchase_id, p_user, purchase_ts``) joined ``how`` to same-user
+    clicks (``click_id, c_user, click_ts``) in the 30 minutes before the
+    purchase, both sides watermarked by ``delay``, ``projection`` streamed
+    in append mode to ``mem_<name>``. ``events`` lands as two time-ranged
+    files under ``name``. A projection that drops ``click_id`` (the semi
+    join) keeps it out of the click side's state too: Catalyst prunes it
+    below the watermark, so the streaming plan equals a click side built
+    without it."""
+    path, src = _land_events(spark, sf_dir, name, n_files=2)
     purchases = (
         _read_stream(spark, path, src.schema)
         .filter(F.col("event_type") == "purchase")
@@ -551,7 +571,7 @@ def _stream_stream_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", "35 days")
+        .withWatermark("purchase_ts", delay)
     )
     clicks = (
         _read_stream(spark, path, src.schema)
@@ -561,7 +581,7 @@ def _stream_stream_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", "35 days")
+        .withWatermark("click_ts", delay)
     )
     joined = purchases.join(
         clicks,
@@ -569,14 +589,9 @@ def _stream_stream_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_user = c_user AND click_ts BETWEEN "
             "purchase_ts - INTERVAL 30 MINUTES AND purchase_ts"
         ),
-        "inner",
-    ).select(
-        "purchase_id",
-        "click_id",
-        F.col("p_user").alias("user_id"),
-        "purchase_ts",
-    )
-    return _run_to_memory(spark, joined, "mem_ssjoin", "append")
+        how,
+    ).select(*projection)
+    return _run_to_memory(spark, joined, f"mem_{name}", "append")
 
 
 @query(
@@ -628,9 +643,10 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
-@query(
-    "stream_stream_outer_join",
-    oracle="""
+# The three outer-join oracles' shared prefix: the two sides, their batch
+# inner join ``m`` (``c.user_id = p.user_id`` under the equi-join, so one
+# ``user_id`` serves every direction) and the final watermark ``wm``.
+_OUTER_CTES = """
 WITH p AS (
   SELECT event_id AS purchase_id, user_id,
          CAST(ts AS TIMESTAMP) AS purchase_ts
@@ -639,7 +655,7 @@ c AS (
   SELECT event_id AS click_id, user_id, CAST(ts AS TIMESTAMP) AS click_ts
   FROM events WHERE event_type = 'click'),
 m AS (
-  SELECT p.purchase_id, c.click_id, p.user_id, p.purchase_ts
+  SELECT p.purchase_id, c.click_id, p.user_id, p.purchase_ts, c.click_ts
   FROM p JOIN c ON p.user_id = c.user_id
    AND c.click_ts BETWEEN p.purchase_ts - INTERVAL 30 MINUTE
                       AND p.purchase_ts),
@@ -649,7 +665,12 @@ wm AS (
   SELECT LEAST((SELECT MAX(CAST(ts AS TIMESTAMP)) FROM events
                 WHERE event_type = 'purchase'),
                (SELECT MAX(CAST(ts AS TIMESTAMP)) FROM events
-                WHERE event_type = 'click')) - INTERVAL 20 DAY AS w)
+                WHERE event_type = 'click')) - INTERVAL 20 DAY AS w)"""
+
+
+@query(
+    "stream_stream_outer_join",
+    oracle=_OUTER_CTES + """
 SELECT purchase_id, click_id, user_id, purchase_ts FROM m
 UNION ALL
 SELECT p.purchase_id, CAST(NULL AS BIGINT) AS click_id,
@@ -686,63 +707,16 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB/day outer attribution join runnable at all. The delay must
     exceed arrival skew (here: one time-ranged file) so no valid match is
     dropped — same discipline as sizing allowed-lateness in production."""
-    path, src = _land_events(spark, sf_dir, "ssoj", n_files=2)
-    purchases = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "20 days")
-    )
-    clicks = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "20 days")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND click_ts BETWEEN "
-            "purchase_ts - INTERVAL 30 MINUTES AND purchase_ts"
-        ),
-        "leftOuter",
-    ).select(
-        "purchase_id",
-        "click_id",
-        F.col("p_user").alias("user_id"),
+    return _attribution_join(
+        spark, sf_dir, "ssoj", "leftOuter", "20 days",
+        "purchase_id", "click_id", F.col("p_user").alias("user_id"),
         "purchase_ts",
     )
-    return _run_to_memory(spark, joined, "mem_ssoj", "append")
 
 
 @query(
     "stream_stream_right_outer_join",
-    oracle="""
-WITH p AS (
-  SELECT event_id AS purchase_id, user_id,
-         CAST(ts AS TIMESTAMP) AS purchase_ts
-  FROM events WHERE event_type = 'purchase'),
-c AS (
-  SELECT event_id AS click_id, user_id, CAST(ts AS TIMESTAMP) AS click_ts
-  FROM events WHERE event_type = 'click'),
-m AS (
-  SELECT p.purchase_id, c.click_id, c.user_id, c.click_ts
-  FROM p JOIN c ON p.user_id = c.user_id
-   AND c.click_ts BETWEEN p.purchase_ts - INTERVAL 30 MINUTE
-                      AND p.purchase_ts),
-wm AS (
-  SELECT LEAST((SELECT MAX(CAST(ts AS TIMESTAMP)) FROM events
-                WHERE event_type = 'purchase'),
-               (SELECT MAX(CAST(ts AS TIMESTAMP)) FROM events
-                WHERE event_type = 'click')) - INTERVAL 20 DAY AS w)
+    oracle=_OUTER_CTES + """
 SELECT purchase_id, click_id, user_id, click_ts FROM m
 UNION ALL
 SELECT CAST(NULL AS BIGINT) AS purchase_id, c.click_id,
@@ -773,41 +747,11 @@ def stream_stream_right_outer_join(
     Scale: identical state-bounding story as the left-outer key — the
     time-range predicate gives each side a finite state TTL; the right
     side's TTL is its event time plus the window length."""
-    path, src = _land_events(spark, sf_dir, "ssroj", n_files=2)
-    purchases = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "20 days")
-    )
-    clicks = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "20 days")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND click_ts BETWEEN "
-            "purchase_ts - INTERVAL 30 MINUTES AND purchase_ts"
-        ),
-        "rightOuter",
-    ).select(
-        "purchase_id",
-        "click_id",
-        F.col("c_user").alias("user_id"),
+    return _attribution_join(
+        spark, sf_dir, "ssroj", "rightOuter", "20 days",
+        "purchase_id", "click_id", F.col("c_user").alias("user_id"),
         "click_ts",
     )
-    return _run_to_memory(spark, joined, "mem_ssroj", "append")
 
 
 @query(
@@ -862,24 +806,7 @@ def stream_windowed_distinct_users(
 
 @query(
     "stream_stream_full_outer_join",
-    oracle="""
-WITH p AS (
-  SELECT event_id AS purchase_id, user_id,
-         CAST(ts AS TIMESTAMP) AS purchase_ts
-  FROM events WHERE event_type = 'purchase'),
-c AS (
-  SELECT event_id AS click_id, user_id, CAST(ts AS TIMESTAMP) AS click_ts
-  FROM events WHERE event_type = 'click'),
-m AS (
-  SELECT p.purchase_id, c.click_id, p.user_id, p.purchase_ts, c.click_ts
-  FROM p JOIN c ON p.user_id = c.user_id
-   AND c.click_ts BETWEEN p.purchase_ts - INTERVAL 30 MINUTE
-                      AND p.purchase_ts),
-wm AS (
-  SELECT LEAST((SELECT MAX(CAST(ts AS TIMESTAMP)) FROM events
-                WHERE event_type = 'purchase'),
-               (SELECT MAX(CAST(ts AS TIMESTAMP)) FROM events
-                WHERE event_type = 'click')) - INTERVAL 20 DAY AS w)
+    oracle=_OUTER_CTES + """
 SELECT purchase_id, click_id, user_id, purchase_ts, click_ts FROM m
 UNION ALL
 SELECT p.purchase_id, CAST(NULL AS BIGINT), p.user_id, p.purchase_ts,
@@ -912,42 +839,12 @@ def stream_stream_full_outer_join(
     Scale: same bounded state as the left-outer key on both sides —
     eviction at the per-side state watermark is what keeps a bilateral
     100 TB/day attribution join's stores finite."""
-    path, src = _land_events(spark, sf_dir, "ssfoj", n_files=2)
-    purchases = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "20 days")
-    )
-    clicks = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "20 days")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND click_ts BETWEEN "
-            "purchase_ts - INTERVAL 30 MINUTES AND purchase_ts"
-        ),
-        "fullOuter",
-    ).select(
-        "purchase_id",
-        "click_id",
+    return _attribution_join(
+        spark, sf_dir, "ssfoj", "fullOuter", "20 days",
+        "purchase_id", "click_id",
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
-        "purchase_ts",
-        "click_ts",
+        "purchase_ts", "click_ts",
     )
-    return _run_to_memory(spark, joined, "mem_ssfoj", "append")
 
 
 @query(
@@ -1022,39 +919,10 @@ def stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     range state-eviction story as stream_stream_join; semi output means
     each purchase emits at most once, so append mode equals the batch
     EXISTS → full SQL oracle."""
-    path, src = _land_events(spark, sf_dir, "sssemi", n_files=2)
-    purchases = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "35 days")
+    return _attribution_join(
+        spark, sf_dir, "sssemi", "left_semi", "35 days",
+        "purchase_id", F.col("p_user").alias("user_id"), "purchase_ts",
     )
-    clicks = (
-        _read_stream(spark, path, src.schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "35 days")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND click_ts BETWEEN "
-            "purchase_ts - INTERVAL 30 MINUTES AND purchase_ts"
-        ),
-        "left_semi",
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        "purchase_ts",
-    )
-    return _run_to_memory(spark, joined, "mem_sssemi", "append")
 
 
 # --- exactly-once manifest sink (round 11) ---------------------------------

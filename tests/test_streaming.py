@@ -5,6 +5,7 @@ watermark crosses most window ends before end-of-stream)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsuite_spark.streaming.streams import stream_watermark_append
@@ -34,33 +35,47 @@ def test_watermark_append_subset_of_batch_twin(spark, sf_dir):
     )
 
 
-def test_outer_join_emits_both_populations(spark, sf_dir):
-    """Left-outer stream-stream join: matched pairs AND watermark-expired
-    NULL rows must both be present, and no purchase may appear both
-    matched and NULL."""
-    from pyspark.sql import functions as F
+# (key, [(preserved id, id NULLed when that side is unmatched), ...])
+_OUTER_POPULATIONS = [
+    ("stream_stream_outer_join", [("purchase_id", "click_id")]),
+    ("stream_stream_right_outer_join", [("click_id", "purchase_id")]),
+    (
+        "stream_stream_full_outer_join",
+        [("purchase_id", "click_id"), ("click_id", "purchase_id")],
+    ),
+]
 
+
+@pytest.mark.parametrize(
+    "key, populations",
+    _OUTER_POPULATIONS,
+    ids=[key for key, _ in _OUTER_POPULATIONS],
+)
+def test_outer_join_emits_both_populations(spark, sf_dir, key, populations):
+    """Outer stream-stream joins: matched pairs AND watermark-expired
+    NULL rows of every preserved side must both be present, and no
+    preserved id may appear both matched and NULL."""
     import dbsuite_spark
 
-    out = (
-        dbsuite_spark.all_specs()["stream_stream_outer_join"]
-        .fn(spark, sf_dir)
-        .cache()
+    out = dbsuite_spark.all_specs()[key].fn(spark, sf_dir).cache()
+    matched = out.filter(
+        F.col("purchase_id").isNotNull() & F.col("click_id").isNotNull()
     )
-    matched = out.filter(F.col("click_id").isNotNull())
-    nulls = out.filter(F.col("click_id").isNull())
     assert matched.count() > 0, "no matched pairs"
-    assert nulls.count() > 0, "watermark never expired any left row"
-    overlap = (
-        out.groupBy("purchase_id")
-        .agg(
-            F.sum(F.col("click_id").isNull().cast("int")).alias("n_null"),
-            F.sum(F.col("click_id").isNotNull().cast("int")).alias("n_hit"),
+    for kept, nulled in populations:
+        nulls = out.filter(F.col(nulled).isNull())
+        assert nulls.count() > 0, f"watermark never expired any {kept} row"
+        overlap = (
+            out.filter(F.col(kept).isNotNull())
+            .groupBy(kept)
+            .agg(
+                F.sum(F.col(nulled).isNull().cast("int")).alias("n_null"),
+                F.sum(F.col(nulled).isNotNull().cast("int")).alias("n_hit"),
+            )
+            .filter((F.col("n_null") > 0) & (F.col("n_hit") > 0))
+            .count()
         )
-        .filter((F.col("n_null") > 0) & (F.col("n_hit") > 0))
-        .count()
-    )
-    assert overlap == 0, "a matched purchase also emitted a NULL row"
+        assert overlap == 0, f"a matched {kept} also emitted a NULL row"
     out.unpersist()
 
 
