@@ -404,7 +404,10 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     lst = b.groupBy("event_type").agg(
         F.array_sort(F.collect_list(F.struct("hour_ts", "v"))).alias("pairs")
     )
-    vals = F.transform(F.col("pairs"), lambda x: x["v"])
+    # A named column read more than once: CollapseProject keeps it out of
+    # the prefix-fold lambda, so it is built once per row, not per prefix.
+    lst = lst.withColumn("vals", F.transform(F.col("pairs"), lambda x: x["v"]))
+    vals = F.col("vals")
     a, na = F.lit(EWMA_ALPHA), F.lit(1 - EWMA_ALPHA)
     zipped = F.arrays_zip(
         F.transform(F.col("pairs"), lambda x: x["hour_ts"]).alias("h"),
@@ -503,7 +506,10 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.size("pairs") >= 2)
     )
-    vals = F.transform(F.col("pairs"), lambda x: x["v"])
+    # Projected once, as in ts_ewma: read more than once, so it stays out
+    # of the prefix-fold lambda.
+    lst = lst.withColumn("vals", F.transform(F.col("pairs"), lambda x: x["v"]))
+    vals = F.col("vals")
     hours = F.transform(F.col("pairs"), lambda x: x["hour_ts"])
     a, na = F.lit(HOLT_ALPHA), F.lit(1 - HOLT_ALPHA)
     bt, nb = F.lit(HOLT_BETA), F.lit(1 - HOLT_BETA)

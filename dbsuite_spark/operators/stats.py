@@ -1377,10 +1377,16 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list(F.struct("t_days", "d", "c", "n_risk"))
         ).alias("rows")
     )
-    fs = F.transform(
-        F.col("rows"),
-        lambda x: (x["n_risk"] - x["d"]).cast("double") / x["n_risk"],
+    # A named column read more than once: CollapseProject keeps it out of
+    # the prefix-fold lambda, so it is built once, not once per prefix.
+    l = l.withColumn(
+        "fs",
+        F.transform(
+            F.col("rows"),
+            lambda x: (x["n_risk"] - x["d"]).cast("double") / x["n_risk"],
+        ),
     )
+    fs = F.col("fs")
     n = F.size(F.col("rows"))
     surv = F.transform(
         F.sequence(F.lit(1), n),

@@ -34,7 +34,13 @@ from pyspark.sql.window import Window
 
 from dbsuite_spark.exact import MD5_BIGINT, md5_bigint
 from dbsuite_spark.pipeline.clustering import DIM
-from dbsuite_spark.pipeline.vectors import COSINE, cosine
+from dbsuite_spark.pipeline.vectors import (
+    COSINE,
+    cosine,
+    dot,
+    l2_norm,
+    map_with,
+)
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -125,9 +131,13 @@ def ml_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.transform("pairs", lambda p: p["c"]).alias("clist"))
     )
     e = t(spark, sf_dir, "embeddings").crossJoin(F.broadcast(cents_row))
-    coss = F.transform(
+    # cosine() spelled out so the query norm is folded once per row, not
+    # once per centroid; same op order, same bits.
+    coss = map_with(
         F.sequence(F.lit(0), F.size("clist") - 1),
-        lambda l: cosine(F.col("embedding"), F.element_at("clist", l + 1)),
+        l2_norm(F.col("embedding")),
+        lambda l, na: dot(F.col("embedding"), F.element_at("clist", l + 1))
+        / (na * l2_norm(F.element_at("clist", l + 1))),
     )
     pred = (F.array_position(coss, F.array_max(coss)) - 1).cast("int")
     return (

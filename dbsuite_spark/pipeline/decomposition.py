@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbsuite_spark.pipeline.clustering import DIM
+from dbsuite_spark.pipeline.vectors import map_with
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import t
 
@@ -101,7 +102,7 @@ def _normalize(w: Column) -> Column:
             lambda acc, x: acc + x,
         )
     )
-    return F.transform(w, lambda x: x / norm)
+    return map_with(w, norm, lambda x, n: x / n)
 
 
 def gram_matrix_row(spark: SparkSession, sf_dir: str) -> DataFrame:

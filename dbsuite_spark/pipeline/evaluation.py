@@ -355,15 +355,9 @@ def _minhash_recall_gate(
     md5 hash-sample (``exact.md5_bigint(doc_id) % 100 < sample_pct``)
     — the documented 100 TB mitigation for the uncapped truth self-join,
     now an actual parameter (VERDICT r06 ask #6)."""
-    from dbsuite_spark.pipeline.dedup import (
-        _jaccard_on,
-        _shingle_rows,
-        dedup_near_minhash,
-    )
-
-    sh = _shingle_rows(spark, sf_dir)
-    truth = _jaccard_on(None, sh).select("d1", "d2")
-    detected = dedup_near_minhash(spark, sf_dir).select("d1", "d2")
+    sh = D._shingle_rows(spark, sf_dir)
+    truth = D._jaccard_on(None, sh).select("d1", "d2")
+    detected = D.dedup_near_minhash(spark, sf_dir).select("d1", "d2")
     if sample_pct is not None:
         d = t(spark, sf_dir, "documents")
         sampled = d.filter(
@@ -755,10 +749,8 @@ def _mh_est_oracle() -> str:
     # Share the capped-pair CTE with dedup.py so the estimator dashboard
     # measures EXACTLY the production pair population (round-6 review:
     # a hand-copied pair definition could silently drift).
-    from dbsuite_spark.pipeline.dedup import JACCARD_CAPPED_CTE
-
     return f"""
-WITH {JACCARD_CAPPED_CTE},
+WITH {D.JACCARD_CAPPED_CTE},
 pairs AS (SELECT d1, d2, jaccard FROM capped_pairs),
 hj AS (
   SELECT doc_id, j,
@@ -799,17 +791,11 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     ({MH_EST_HASHES} conditional mins, map-side combined); the estimate
     joins signature rows only for already-qualified pairs — O(pairs ·
     {MH_EST_HASHES}) on tiny inputs, never all-pairs."""
-    from dbsuite_spark.pipeline.dedup import (
-        _jaccard_on,
-        _shingle_rows,
-        cap_stop_shingles,
-    )
-
     sh = memo_cache(
-        cap_stop_shingles(_shingle_rows(spark, sf_dir)),
+        D.cap_stop_shingles(D._shingle_rows(spark, sf_dir)),
         f"shingles_capped:{sf_dir}:{D.DF_CAP}",
     )
-    pairs = _jaccard_on(None, sh).select("d1", "d2", "jaccard")
+    pairs = D._jaccard_on(None, sh).select("d1", "d2", "jaccard")
     hcols = [
         F.min(md5_bigint(F.concat(F.lit(f"{j}:"), F.col("s")))).alias(f"h{j}")
         for j in range(MH_EST_HASHES)
@@ -900,15 +886,10 @@ def ml_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: both searches bound their own cost; the eval joins and
     reduces k·|queries| rows — negligible against the searches."""
-    from dbsuite_spark.pipeline.similarity import (
-        sim_search_ann_ivf,
-        sim_search_cosine_topk,
-    )
-
-    exact_k = sim_search_cosine_topk(spark, sf_dir).select(
+    exact_k = S.sim_search_cosine_topk(spark, sf_dir).select(
         "qid", "neighbor_id", "rank"
     )
-    ivf_k = sim_search_ann_ivf(spark, sf_dir).select(
+    ivf_k = S.sim_search_ann_ivf(spark, sf_dir).select(
         "qid", "neighbor_id", "rank"
     )
     rel = exact_k.select(
@@ -956,10 +937,8 @@ BAND_SWEEP = ((12, 2), (8, 3), (6, 4))  # (bands, rows) with bands*rows = 24
 
 
 def _band_sweep_oracle() -> str:
-    from dbsuite_spark.pipeline.dedup import JACCARD_CAPPED_CTE
-
     stages = [
-        f"""{JACCARD_CAPPED_CTE},
+        f"""{D.JACCARD_CAPPED_CTE},
 truth AS (SELECT d1, d2 FROM capped_pairs),
 nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth),
 hj AS (
@@ -1017,18 +996,12 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs three banded joins, never all-pairs; the truth side is the
     audit-scale exact path, sampleable exactly as
     ``dedup_minhash_recall_sampled`` demonstrates."""
-    from dbsuite_spark.pipeline.dedup import (
-        _jaccard_on,
-        _shingle_rows,
-        cap_stop_shingles,
-    )
-
     sh = memo_cache(
-        cap_stop_shingles(_shingle_rows(spark, sf_dir)),
+        D.cap_stop_shingles(D._shingle_rows(spark, sf_dir)),
         f"shingles_capped:{sf_dir}:{D.DF_CAP}",
     )
     truth = memo_cache(
-        _jaccard_on(None, sh).select("d1", "d2"),
+        D._jaccard_on(None, sh).select("d1", "d2"),
         f"minhash_truth_capped:{sf_dir}:{D.DF_CAP}:{D.JACCARD_THRESHOLD}",
     )
     nt = truth.agg(F.count("*").cast("bigint").alias("n_truth"))

@@ -36,6 +36,7 @@ from dbsuite_spark.pipeline.vectors import (
     cosine,
     dot,
     l2_norm,
+    map_with,
 )
 from dbsuite_spark.registry import query
 from dbsuite_spark.tables import fan_out, memo_cache, t
@@ -595,16 +596,17 @@ SELECT qid, neighbor_id, qdot, CAST(rn AS INT) AS rank FROM (
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, qv): embeddings unit-normalized then scalar-quantized to
     small ints (floor(x/‖v‖·100 + 0.5) — int8 range). One O(dim) norm fold
-    per vector, then a row-local transform; downstream dot products are
-    pure integer arithmetic → exact, engine-identical, and 4× smaller to
-    shuffle/cache than float32 at 100 TB."""
+    per vector (handed to the element lambda by ``map_with``), then a
+    row-local transform; downstream dot products are pure integer
+    arithmetic → exact, engine-identical, and 4× smaller to shuffle/cache
+    than float32 at 100 TB."""
     e = t(spark, sf_dir, "embeddings")
-    nrm = l2_norm(F.col("embedding"))
     return e.select(
         "vec_id",
-        F.transform(
+        map_with(
             F.col("embedding"),
-            lambda x: F.floor(
+            l2_norm(F.col("embedding")),
+            lambda x, nrm: F.floor(
                 x.cast("double") / nrm * F.lit(QUANT_SCALE) + F.lit(0.5)
             ).cast("bigint"),
         ).alias("qv"),
@@ -813,7 +815,8 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-cell kNN is the same cluster-then-exact envelope as IVF
     search); the mutual join is top-k-row-count sized, shuffled on the
     (src, dst) pair key. No driver-side loop, no Python in the hot path
-    — the cosine fold runs in JVM codegen."""
+    — the cosine fold is JVM expression math (interpreted: see
+    pipeline/vectors.py)."""
     topk = _knn_topk_frame(spark, sf_dir)
     t2 = topk.select(
         F.col("src").alias("dst2"),
@@ -1104,7 +1107,7 @@ def sim_search_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist-sized data only.
 
     Scale: stage 1 is the ``sim_embed_quantize`` envelope (broadcast
-    bounded query side, one corpus scan, integer folds in JVM codegen);
+    bounded query side, one corpus scan, integer folds in the JVM);
     stage 2 joins a {SHORTLIST_K}·|queries|-row frame back to the
     corpus by id — a semi-join-sized probe, broadcastable at any corpus
     size. Recall vs the single-stage exact path is asserted in

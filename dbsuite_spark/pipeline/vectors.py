@@ -7,8 +7,16 @@ so dot products, norms, and cosine similarities are **bit-identical**
 across engines — rankings need no rounding tolerance. Probed on DuckDB
 1.0.0 this session.
 
-All of this runs inside JVM codegen per row (no Python, no shuffle); cost
-is O(dim) per pair at any scale.
+Everything here is row-local JVM expression math (no Python, no
+shuffle), but not codegen: on Spark 4.1 ``transform``, ``zip_with`` and
+``aggregate`` are ``CodegenFallback`` and run interpreted. So where an
+expression sits decides how often it runs: a lambda body runs once per
+array element, a higher-order function's array arguments once per row.
+A per-row value written inside a lambda body (a norm, an invariant array)
+is re-evaluated for every element, and projecting it as a column first
+does not help when it is referenced once: ``CollapseProject`` inlines it
+back into the lambda. :func:`map_with` passes such a value as an argument
+instead, so it is evaluated once per row.
 """
 
 from __future__ import annotations
@@ -21,6 +29,12 @@ from pyspark.sql import functions as F
 # vec_id % QUERY_MOD == 0, and recall@k divides by the same TOP_K.
 TOP_K = 5
 QUERY_MOD = 100
+
+
+def map_with(arr: Column, value: Column, fn) -> Column:
+    """``transform(arr, x -> fn(x, value))`` with ``value`` evaluated once
+    per row rather than once per element (see the module docstring)."""
+    return F.zip_with(arr, F.array_repeat(value, F.size(arr)), fn)
 
 
 def dot(a: Column, b: Column) -> Column:
